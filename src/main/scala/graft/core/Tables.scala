@@ -4,9 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** Loaders for the fixture tables (FIXTURES.md §A). Schemas come from the
-  * parquet footers — explicit and stable (driver-generated, seed=42) — so no
-  * inference happens; column pruning + predicate pushdown reach the scan.
+import graft.sources.ParquetTable
+
+/** Loaders for the fixture tables (FIXTURES.md §A). Each schema comes
+  * from one footer read on the driver ([[ParquetTable.readDir]]), so
+  * building a table's DataFrame starts no Spark job; column pruning +
+  * predicate pushdown reach the scan.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -14,7 +17,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    ParquetTable.readDir(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -72,7 +72,7 @@ object CorpusJobs {
     Seq(
 
     Task("clean_filter", Nil, run = ctx => {
-      val docs = ctx.spark.read.parquet(docsPath)
+      val docs = ParquetTable.readDir(ctx.spark, docsPath)
       val cleaned = docs.filter(
         T.langId(col("text")) === lang &&
           T.qualityScore(col("text")) >= minQuality &&
@@ -124,7 +124,7 @@ object CorpusJobs {
     Task("learned_filter", Seq("clean_filter"), run = ctx => {
       import graft.ext.HashedClassifier
       val model = HashedClassifier.fit(
-        ctx.spark.read.parquet(trainPath), "text", "y")
+        ParquetTable.readDir(ctx.spark, trainPath), "text", "y")
       val cleaned = new ParquetTable(ctx.spark, s"$outRoot/cleaned").read()
       val kept = HashedClassifier.predict(cleaned, "text", model)
         .filter(col("prob") >= classifierKeepProb)
@@ -137,7 +137,7 @@ object CorpusJobs {
     // set — the q56-oracled operator, here as a pipeline stage
     Task("decontaminate", Seq("dedup"), run = ctx => {
       val deduped = new ParquetTable(ctx.spark, s"$outRoot/deduped").read()
-      val evalDocs = ctx.spark.read.parquet(evalPath)
+      val evalDocs = ParquetTable.readDir(ctx.spark, evalPath)
         .select(col("doc_id"), col("text"))
       val (clean, release) = Contamination.decontaminateManaged(
         deduped, evalDocs, "doc_id", "text")

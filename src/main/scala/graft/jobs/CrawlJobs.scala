@@ -82,7 +82,7 @@ object CrawlJobs {
     }),
 
     Task("link_graph", Seq("parse_extract"), run = ctx => {
-      val docs = ctx.spark.read.parquet(s"$outRoot/documents")
+      val docs = ParquetTable.readDir(ctx.spark, s"$outRoot/documents")
         .filter(!col("pg_nofollow")) // meta-nofollow: no endorsements
       val edges = LinkGraph.edges(docs, "url", "raw_html")
       new ParquetTable(ctx.spark, s"$outRoot/host_graph")
@@ -91,7 +91,7 @@ object CrawlJobs {
 
     Task("frontier", Seq("parse_extract"), run = ctx => {
       import ctx.spark.implicits._
-      val docs = ctx.spark.read.parquet(s"$outRoot/documents")
+      val docs = ParquetTable.readDir(ctx.spark, s"$outRoot/documents")
       // candidate URLs: followed links from followable pages (meta
       // nofollow drops the whole page's outlinks), minus fetched
       val links = LinkGraph.edges(docs.filter(!col("pg_nofollow")),
@@ -99,7 +99,7 @@ object CrawlJobs {
         .filter(l => !l.nofollow)
         .map(_.dst_url)
         .toDF("url").dropDuplicates("url")
-      val seen = seenPath.map(p => ctx.spark.read.parquet(p))
+      val seen = seenPath.map(ParquetTable.readDir(ctx.spark, _))
         .getOrElse(docs.select("url"))
       val fresh = links.join(seen.select(col("url")), Seq("url"), "left_anti")
       // robots admission: evaluate the domain's body per candidate —
@@ -108,7 +108,7 @@ object CrawlJobs {
       val admitted = robotsPath match {
         case None => fresh
         case Some(p) =>
-          val robots = ctx.spark.read.parquet(p) // (domain, robots_txt)
+          val robots = ParquetTable.readDir(ctx.spark, p) // (domain, robots_txt)
           fresh
             .withColumn("domain",
               UrlFunctions.registrableDomain(UrlFunctions.host(col("url"))))

@@ -183,7 +183,7 @@ object ScrapeJobs {
         areas.read(), WorkQueue.nullOrZero("area_id"), "outcode", batchSize)
       // case-normalized key join, matching the reference's
       // lower(outcode)=lower(%s) semantics (rightmove_outcodes.py:63)
-      val payloads = spark.read.parquet(payloadsPath)
+      val payloads = ParquetTable.readDir(spark, payloadsPath)
         .join(batch.select(lower(trim(col("outcode"))).as("__bk")),
           lower(trim(col("outcode"))) === col("__bk"))
         .drop("__bk")

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.ParquetTable
+
 /** Connector seam for the scrape DAGs' fetch stage. The engine's
   * declarative work starts at a `(key, payload)` frame; everything
   * before it — HTTP, politeness sleeps, UA rotation, timeouts — is
@@ -165,7 +167,7 @@ object Fetcher {
         payloadCol: String,
         keys: Option[Seq[String]] = None): FixtureFetcher = {
       import org.apache.spark.sql.functions.col
-      val all = spark.read.parquet(path).select(keyCol, payloadCol)
+      val all = ParquetTable.readDir(spark, path).select(keyCol, payloadCol)
       val wanted = keys.fold(all)(ks => all.filter(col(keyCol).isin(ks: _*)))
       val rows = wanted.collect()
         .map(r => (r.getString(0), Option(r.getString(1)).getOrElse("")))

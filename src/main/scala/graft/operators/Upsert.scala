@@ -31,7 +31,9 @@ object Upsert {
       updates: DataFrame,
       key: Seq[String],
       broadcastTarget: Boolean = false): DataFrame = {
-    val targetKeys0 = target.select(key.map(col): _*).distinct()
+    // no distinct(): a left-anti join drops the same rows whether or
+    // not the key side repeats a key, and skipping it saves a shuffle
+    val targetKeys0 = target.select(key.map(col): _*)
     val targetKeys = if (broadcastTarget) broadcast(targetKeys0) else targetKeys0
     val newRows = updates
       .dropDuplicates(key)

@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * semantics (SURVEY §2.10 W1-W6): named tasks, dependency edges,
   * per-task retries with delay, failure callbacks, downstream skip on
   * failure, and a run-scoped staging dir for cross-task file handoff
-  * (the reference's `/tmp/pp_monthly.csv`, `monthly_price_paid_data.py:13`).
+  * (the reference's `/tmp/pp_monthly.csv`, `monthly_price_paid_data.py:13`),
+  * deleted when the run ends.
   *
   * Deliberately NOT a scheduler: cron/catchup (W5, T6) stay outside the
   * engine — jobs take a logical date parameter, mirroring "Airflow
@@ -63,13 +64,13 @@ object TaskGraph {
     val ctx = TaskContext(spark, runId, staging, params)
     val states = mutable.Map[String, TaskState]()
 
-    order.foreach { t =>
+    try order.foreach { t =>
       val failedDep = t.deps.find(d => states(d) != Succeeded)
       states(t.id) = failedDep match {
         case Some(d) => Skipped(d)
         case None => attempt(t, ctx, onFailure, retryDelayMs)
       }
-    }
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(staging))
     RunResult(states.toMap)
   }
 

@@ -2,7 +2,9 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.footerBridge
 import org.apache.spark.sql.types.StructType
 
 /** Path-based parquet "table" with the reference's sink semantics
@@ -20,6 +22,10 @@ import org.apache.spark.sql.types.StructType
   * carry min/max-prunable layout on the reference's indexed columns
   * (the postcode secondary index of `initial_price_paid_data.py:86`
   * becomes sortWithinPartitions + parquet row-group stats).
+  *
+  * Reads take their schema from one footer read on the driver (see
+  * [[ParquetTable.readDir]]), so building a DataFrame over the table
+  * starts no Spark job.
   */
 final class ParquetTable(spark: SparkSession, root: String) {
 
@@ -40,7 +46,7 @@ final class ParquetTable(spark: SparkSession, root: String) {
       .write.mode(SaveMode.Overwrite).parquet(root)
   }
 
-  def read(): DataFrame = spark.read.parquet(root)
+  def read(): DataFrame = ParquetTable.readDir(spark, root)
 
   /** S8: plain append (micro-batch inserts). */
   def append(df: DataFrame, sortCols: Seq[String] = Nil): Unit =
@@ -103,5 +109,36 @@ final class ParquetTable(spark: SparkSession, root: String) {
     try s.sorted(java.util.Comparator.reverseOrder())
       .forEach(f => Files.delete(f))
     finally s.close()
+  }
+}
+
+object ParquetTable {
+
+  /** `spark.read.parquet(root)` without the schema-inference job.
+    * Spark's inference with `mergeSchema=false` reads the footer of the
+    * first data file (by path) in one Spark job; this reads the same
+    * footer on the driver, converts it with Spark's own conversion under
+    * the session's conf, and hands the result to the reader as the
+    * schema. `root` is a directory of parquet files or a single file.
+    * A missing path or a directory with no data file goes to the plain
+    * reader, so the error is Spark's own.
+    */
+  def readDir(spark: SparkSession, root: String): DataFrame = {
+    val conf = footerBridge.hadoopConf(spark)
+    val path = new HPath(root)
+    val fs = path.getFileSystem(conf)
+    val first = scala.util.Try(fs.getFileStatus(path)).toOption.flatMap { st =>
+      if (st.isFile) Some(st)
+      else fs.listStatus(path)
+        // the names Spark's file listing skips (_SUCCESS, .crc, ...)
+        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith("."))
+        .sortBy(_.getPath.toString)
+        .headOption
+    }
+    first.flatMap(footerBridge.schema(spark, _, conf)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(root)
+      case None => spark.read.parquet(root)
+    }
   }
 }

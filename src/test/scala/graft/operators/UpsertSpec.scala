@@ -25,6 +25,30 @@ class UpsertSpec extends SparkSpec {
     assert(twice.orderBy("property_id").collect().toSeq == rows.toSeq)
   }
 
+  test("insertIgnore: duplicate and null target keys give the distinct-key plan's result") {
+    val target = Seq(
+      (Some("p1"), 1L), (Some("p1"), 2L), // duplicate key
+      (None, 3L), (None, 4L))             // null keys
+      .toDF("property_id", "updated_date")
+    val updates = Seq(
+      (Some("p1"), 10L), (Some("p2"), 11L), (None, 12L))
+      .toDF("property_id", "updated_date")
+    val key = Seq("property_id")
+    // the plan before the distinct() was dropped from the key side
+    val distinctKeys = target.select(key.map(col): _*).distinct()
+    val old = target.unionByName(
+      updates.dropDuplicates(key).join(distinctKeys, key, "left_anti")
+        .select(target.columns.map(col).toSeq: _*))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (Option(r.getString(0)), r.getLong(1))).sortBy(_.toString).toSeq
+    Seq(false, true).foreach { b =>
+      val got = rows(Upsert.insertIgnore(target, updates, key, broadcastTarget = b))
+      assert(got == rows(old))
+      // p2 and the null-keyed update are new; p1 is a conflict
+      assert(got.map(_._2).sorted == Seq(1L, 2L, 3L, 4L, 11L, 12L))
+    }
+  }
+
   test("mergeByKey: later updated_date wins, replay idempotent") {
     val target = sales(("p1", false, 20240101L, 20240101L))
     val updates = sales(("p1", false, 20240101L, 20240601L))

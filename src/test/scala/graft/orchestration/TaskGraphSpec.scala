@@ -51,11 +51,26 @@ class TaskGraphSpec extends SparkSpec {
   }
 
   test("params and staging dir reach tasks") {
-    var seen: (String, String) = null
+    var seen: (String, String, Boolean) = null
     TaskGraph.run(Seq(Task("t", Nil, run = ctx =>
-      seen = (ctx.params("k"), ctx.stagingDir))),
+      seen = (ctx.params("k"), ctx.stagingDir,
+        java.nio.file.Files.isDirectory(java.nio.file.Paths.get(ctx.stagingDir))))),
       spark, params = Map("k" -> "v"))
     assert(seen._1 == "v")
-    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(seen._2)))
+    assert(seen._3) // the staging dir exists while the run's tasks do
+    // ...and is gone once the run ends
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(seen._2)))
+  }
+
+  test("staging dir is deleted after a failed run too") {
+    var dir: String = null
+    val r = TaskGraph.run(Seq(Task("t", Nil, retries = 0, run = ctx => {
+      dir = ctx.stagingDir
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(dir, "handoff.csv"), "x")
+      sys.error("boom")
+    })), spark)
+    assert(!r.succeeded)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
   }
 }
