@@ -26,8 +26,10 @@ object ConnectedComponents {
     * @return (vertex, component) — component = min vertex id reachable
     */
   def run(pairs: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 10): DataFrame =
-    hashMin(canonEdges(pairs, srcCol, dstCol), maxIter)._1
+      maxIter: Int = 10): DataFrame = {
+    val edges = canonEdges(pairs, srcCol, dstCol)
+    hashMin(edges, edges.count(), maxIter)._1
+  }
 
   /** Auto-dispatch between [[run]] (hash-min, O(diameter) rounds — the
     * dedup-graph fast path) and [[runTwoPhase]] (O(log² n) rounds — the
@@ -49,10 +51,11 @@ object ConnectedComponents {
       pairs: DataFrame, srcCol: String, dstCol: String,
       hashMinRounds: Int, twoPhaseEdges: Long): (String, DataFrame) = {
     val edges0 = canonEdges(pairs, srcCol, dstCol)
-    if (edges0.count() > twoPhaseEdges)
+    val nEdges = edges0.count()
+    if (nEdges > twoPhaseEdges)
       ("two-phase", runTwoPhase(edges0, "a", "b"))
     else {
-      val (labels, converged) = hashMin(edges0, hashMinRounds)
+      val (labels, converged) = hashMin(edges0, nEdges, hashMinRounds)
       if (converged) ("hash-min", labels)
       else ("two-phase", runTwoPhase(edges0, "a", "b"))
     }
@@ -68,15 +71,13 @@ object ConnectedComponents {
       .localCheckpoint()
 
   /** Hash-min propagation loop; returns (labels, converged). */
-  private def hashMin(edges0: DataFrame, maxIter: Int): (DataFrame, Boolean) = {
+  private def hashMin(edges0: DataFrame, nEdges: Long,
+      maxIter: Int): (DataFrame, Boolean) = {
     // size the iteration width to the graph, not the session default:
     // dedup graphs are usually tiny relative to the corpus, and paying
     // 32 shuffle tasks per round for a few hundred edges makes each
-    // round scheduling-bound. ~500k edges per partition, capped at the
-    // session parallelism.
-    val spark = edges0.sparkSession
-    val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-      (edges0.count() / 500000L).toInt + 1))
+    // round scheduling-bound. ~500k edges per partition.
+    val parts = Rounds.width(edges0.sparkSession, nEdges, 500000L)
     val edges = edges0.repartition(parts)
     val undirected = edges.unionByName(
       edges.select(col("b").as("a"), col("a").as("b"))).distinct()
@@ -84,19 +85,13 @@ object ConnectedComponents {
 
     // Convergence check: labels are monotone non-increasing under
     // hash-min propagation, so the label sum strictly decreases until
-    // the fixpoint. The sum rides as an observe() metric INSIDE each
-    // round's checkpoint job (guide §1.2: one job per round carries
-    // both the rows and the convergence scalar) instead of a separate
-    // aggregate job over the checkpointed frame — job count per round
-    // halves, values unchanged (the decimal sum is exact and
-    // order-independent; a long sum could overflow under ANSI on
-    // billions of large ids).
+    // the fixpoint. The sum rides on each round's checkpoint job
+    // ([[Rounds.checkpointObserved]]); it is an exact decimal because a
+    // long sum could overflow under ANSI on billions of large ids.
     def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val name = s"graft_cc_sum_${java.util.UUID.randomUUID().toString.take(8)}"
-      val observed = df.observe(name,
+      val (ck, r) = Rounds.checkpointObserved(df, "graft_cc_sum",
         sum(col("component").cast("decimal(38,0)")).as("label_sum"))
-      val ck = observed.localCheckpoint()
-      (ck, observed.queryExecution.observedMetrics(name).getDecimal(0))
+      (ck, r.getDecimal(0))
     }
 
     var (labels, prevSum) = checkpointWithSum(
@@ -165,16 +160,11 @@ object ConnectedComponents {
 
     // stable signature of the canonical (distinct) edge set: XOR of
     // per-edge hashes — order-insensitive and overflow-free under
-    // ANSI. Folded into each round's checkpoint job as observe()
-    // metrics (the hashMin recipe): one job per star round instead of
-    // checkpoint + separate aggregate.
+    // ANSI — observed on each star round's checkpoint job.
     def checkpointWithSig(e: DataFrame): (DataFrame, (Long, Long)) = {
-      val name = s"graft_cc2_sig_${java.util.UUID.randomUUID().toString.take(8)}"
-      val observed = e.observe(name,
+      val (ck, r) = Rounds.checkpointObserved(e, "graft_cc2_sig",
         count(lit(1)).as("n"),
         coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("h"))
-      val ck = observed.localCheckpoint()
-      val r = observed.queryExecution.observedMetrics(name)
       (ck, (r.getLong(0), r.getLong(1)))
     }
 

@@ -58,32 +58,22 @@ object Hits {
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
     val n = nodes0.count() // eager, one driver scalar
-    // graph-sized width for the node cache (the [[PageRank]] /
-    // [[ConnectedComponents]] parts rule): otherwise every stage over
-    // it pays spark.sql.shuffle.partitions tasks on a tiny frame
-    val parts = math.max(1, math.min(
-      edges.sparkSession.sparkContext.defaultParallelism,
-      (n / 2000000L).toInt + 1))
+    // graph-sized width for the node cache ([[Rounds.width]])
+    val parts = Rounds.width(edges.sparkSession, n, 2000000L)
     val nodes = nodes0.coalesce(parts).cache()
 
-    // x·10¹² DIV Σx in exact integer arithmetic. The L1 total is an
-    // observe() metric folded INTO the pull's checkpoint job (guide
-    // §1.2: one materialization job carries both the rows and the
-    // scalar), replacing the broadcast-agg crossJoin that cost one
-    // extra broadcast-build job per half-round. The metric is an exact
-    // decimal sum (order-independent), read synchronously off the
-    // executed plan; the division then rides as a literal with the
-    // same DECIMAL(38,0) DIV semantics, so scores are bit-identical.
+    // x·10¹² DIV Σx in exact integer arithmetic. The L1 total rides on
+    // the pull's checkpoint job ([[Rounds.checkpointObserved]]) as an
+    // exact decimal sum; the division then takes it as a literal with
+    // the same DECIMAL(38,0) DIV semantics, so scores are bit-identical.
     // Nodes with no in-/out-edges stay ABSENT here (their score is
     // exactly 0: they contribute nothing to the opposite pull), so the
     // per-round nodes join is deferred to the single zero-fill at the
     // output — two fewer shuffles per round.
     def l1Normalize(rawLazy: DataFrame, valCol: String): DataFrame = {
-      val name = s"graft_hits_l1_${java.util.UUID.randomUUID().toString.take(8)}"
-      val observed = rawLazy.observe(name,
+      val (raw, r) = Rounds.checkpointObserved(rawLazy, "graft_hits_l1",
         sum(col(valCol).cast("decimal(38,0)")).as("l1_total"))
-      val raw = observed.localCheckpoint()
-      val tot = observed.queryExecution.observedMetrics(name).getDecimal(0)
+      val tot = r.getDecimal(0)
       // empty pull (no edges): the projection below never evaluates, so
       // any non-null divisor literal keeps the expression well-formed
       val totLit = if (tot == null) "1" else tot.toBigInteger.toString

@@ -42,12 +42,10 @@ object LabelPropagation {
     val nodes0 = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
-    // graph-sized width for the node cache (the [[PageRank]] parts
-    // rule); the count doubles as the cache materialization
+    // graph-sized width for the node cache ([[Rounds.width]]); the
+    // count doubles as the cache materialization
     val n = nodes0.count()
-    val parts = math.max(1, math.min(
-      edges.sparkSession.sparkContext.defaultParallelism,
-      (n / 2000000L).toInt + 1))
+    val parts = Rounds.width(edges.sparkSession, n, 2000000L)
     val nodes = nodes0.coalesce(parts).cache()
 
     var labels = nodes.withColumn("label", col("node"))

@@ -90,8 +90,8 @@ object NGramJaccard {
     // min ≥ t/(1+t)·(szA+szB), which is exactly this predicate at
     // rn=1, and the predicate is strictly stronger for rn>1 (szX-rnX+1
     // ≤ szX). Adding the length filter as a second conjunct would be
-    // pure redundant compute. Profiled at sf0.1 under loadavg<1
-    // (tools/ProfileQ24): candidates 124 839, end-to-end 4.4-5.0 s —
+    // pure redundant compute. Profiled at sf0.1 under loadavg<1 (BASELINE.md
+    // round-4 re-baseline): candidates 124 839, end-to-end 4.4-5.0 s —
     // the 37.6 s in BENCH_r03 was loadavg-13 co-tenant contention, not
     // plan cost (stage split: shingle 0.3, prefix 1.1, candidate 0.7,
     // verify 0.8 warm).

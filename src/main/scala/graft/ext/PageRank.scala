@@ -61,15 +61,10 @@ object PageRank {
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
     val n = nodes0.count() // eager, one driver scalar
-    // graph-sized iteration width (the ConnectedComponents parts rule):
-    // the node frame caches at spark.sql.shuffle.partitions otherwise,
-    // and every per-round stage over it pays that task count even when
-    // the graph is tiny — coalesce (no shuffle) to ~2M nodes/partition,
-    // capped at the session parallelism; values are partition-invariant
-    // integer arithmetic, so this is purely a scheduling dial.
-    val parts = math.max(1, math.min(
-      edges.sparkSession.sparkContext.defaultParallelism,
-      (n / 2000000L).toInt + 1))
+    // graph-sized width for the node cache ([[Rounds.width]]; coalesce,
+    // no shuffle): values are partition-invariant integer arithmetic,
+    // so this is purely a scheduling dial.
+    val parts = Rounds.width(edges.sparkSession, n, 2000000L)
     val nodes = nodes0.coalesce(parts).cache()
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
       .coalesce(parts).cache()
@@ -134,9 +129,7 @@ object PageRank {
     val n = cnts.getLong(0)
     val nSeeds = if (cnts.isNullAt(1)) 0L else cnts.getLong(1)
     require(nSeeds > 0, "no seed intersects the graph's node set")
-    val parts = math.max(1, math.min(
-      edges.sparkSession.sparkContext.defaultParallelism,
-      (n / 2000000L).toInt + 1))
+    val parts = Rounds.width(edges.sparkSession, n, 2000000L)
     val flagged = flagged0.coalesce(parts).cache()
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
       .coalesce(parts).cache()

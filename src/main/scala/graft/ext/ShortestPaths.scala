@@ -46,23 +46,20 @@ object ShortestPaths {
     var frontier = visited
     var frontierNonEmpty = !frontier.isEmpty
     var hop = 0
-    // per round ONE job: the frontier checkpoint carries its own row
-    // count as an observe() metric (replacing the separate isEmpty
-    // job), and the visited set is a LAZY union of the per-round
+    // per round ONE job: the frontier checkpoint observes its own row
+    // count, and the visited set is a LAZY union of the per-round
     // checkpointed frontiers (each a flat LogicalRDD leaf, so the
     // anti-join plan stays maxHops-bounded) instead of re-copying all
     // visited rows into a third checkpoint every round.
     while (hop < maxHops && frontierNonEmpty) {
       hop += 1
-      val name = s"graft_bfs_n_${java.util.UUID.randomUUID().toString.take(8)}"
-      val observed = frontier.join(und, frontier("v") === und("src"))
-        .select(und("dst").as("v")).distinct()
-        .join(visited, Seq("v"), "left_anti")
-        .withColumn("level", lit(hop))
-        .observe(name, count(lit(1)).as("n"))
-      val next = observed.localCheckpoint(eager = true)
-      frontierNonEmpty =
-        observed.queryExecution.observedMetrics(name).getLong(0) > 0
+      val (next, r) = Rounds.checkpointObserved(
+        frontier.join(und, frontier("v") === und("src"))
+          .select(und("dst").as("v")).distinct()
+          .join(visited, Seq("v"), "left_anti")
+          .withColumn("level", lit(hop)),
+        "graft_bfs_n", count(lit(1)).as("n"))
+      frontierNonEmpty = r.getLong(0) > 0
       visited = visited.unionByName(next)
       frontier = next
     }

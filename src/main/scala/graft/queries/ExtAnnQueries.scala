@@ -184,10 +184,11 @@ object ExtAnnQueries {
     // ── ANN LSH recall-floor invariant, driver-checked (was a rows-only
     // top-k dump): overall recall of lshTopK vs exact brute-force top-k
     // must clear a pinned floor. Measured 0.20-0.28 across sf0.001/0.01/
-    // 0.1 (tools/RecallCheck; chance ≈ k/N ≈ 1-2%); floor 0.10 = real
-    // margin while still 10× chance. Emits violation rows — EMPTY
-    // expected, zero-row oracle. Complements q45 (approx can't BEAT
-    // exact); this bounds the other side (approx can't collapse).
+    // 0.1 (BASELINE.md, ANN recall margins; chance ≈ k/N ≈ 1-2%);
+    // floor 0.10 = real margin while still 10× chance. Emits violation
+    // rows — EMPTY expected, zero-row oracle. Complements q45 (approx
+    // can't BEAT exact); this bounds the other side (approx can't
+    // collapse).
     "q27_ann_lsh_recall_floor" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val q = emb.filter(col("vec_id") < 10)
@@ -203,8 +204,8 @@ object ExtAnnQueries {
     },
 
     // ── ANN IVF recall-floor invariant, driver-checked (was rows-only;
-    // see q27 for the pattern). Measured 0.58 across SFs
-    // (tools/RecallCheck) at nProbe/nCells = 1/4 of the corpus scanned;
+    // see q27 for the pattern). Measured 0.58 across SFs (BASELINE.md,
+    // ANN recall margins) at nProbe/nCells = 1/4 of the corpus scanned;
     // floor 0.30 — EMPTY expected, zero-row oracle.
     "q35_ann_ivf_recall_floor" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
@@ -266,9 +267,10 @@ object ExtAnnQueries {
     // (zero-row oracle, the q27/q35 harness): int8 asymmetric-distance
     // top-k vs exact cosine top-k. SQ8 reconstructs far tighter than
     // PQ's shared codebooks, so the floor is high: measured
-    // 1.000/1.000/0.960 at sf0.001/0.01/0.1 (tools/SqCheck); floor
-    // 0.70 keeps a wide margin while pinning that the memory tier
-    // cannot collapse. Violations emit — EMPTY expected.
+    // 1.000/1.000/0.960 at sf0.001/0.01/0.1 (BASELINE.md, Round 8
+    // session 2: closing protocol); floor 0.70 keeps a wide margin
+    // while pinning that the memory tier cannot collapse. Violations
+    // emit — EMPTY expected.
     "q146_ann_sq8_recall_floor" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val q = emb.filter(col("vec_id") < 10)
@@ -286,9 +288,9 @@ object ExtAnnQueries {
     // ── IVF × SQ8 composition recall floor (FAISS "IVF,SQ8"): Lloyd
     // cells restrict candidates, the int8 asymmetric scan runs only
     // inside the probed cells. Measured 0.580/0.580/0.560 across SFs
-    // (tools/SqCheck) vs plain IVF's 0.580 — quantization costs
-    // ≤ 0.02 recall; the loss is all cell restriction. Floor 0.30 =
-    // ~1.9× margin. Zero-row oracle.
+    // (BASELINE.md, ANN recall margins) vs plain IVF's 0.580 —
+    // quantization costs ≤ 0.02 recall; the loss is all cell
+    // restriction. Floor 0.30 = ~1.9× margin. Zero-row oracle.
     "q147_ann_ivf_sq8_recall_floor" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val q = emb.filter(col("vec_id") < 10)

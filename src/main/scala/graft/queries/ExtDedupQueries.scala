@@ -194,8 +194,9 @@ object ExtDedupQueries {
     // cluster-restricted near-dup pairs must be (a) a SUBSET of the
     // exact triangle-join answer — clustering may lose boundary pairs,
     // never fabricate one — and (b) within the recall floor. Floor 0.7
-    // is pinned from measurement (SemDedupProbe: recall 0.909/0.949/
-    // 0.858 at sf0.001/0.01/0.1 with nCells=16, nAssign=3, extra=0 at
+    // is pinned from measurement (BASELINE.md, Engine baseline
+    // protocol, round-5 measurements: recall 0.909/0.949/0.858 at
+    // sf0.001/0.01/0.1 with nCells=16, nAssign=3, extra=0 at
     // every dial); k-means is md5-seeded so per-SF recall is exactly
     // reproducible, not statistical.
     "q60_semdedup_invariant" -> { (s, dir) =>

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.{Sessions, Tables}
 
 /** Builds an sf1-scale fixture set by key-shifted replication of sf0.1
   * (the driver's generator isn't available and /root/testdata is
@@ -19,16 +21,10 @@ object ScaleUp {
     val out = args.headOption.getOrElse("/tmp/sf1")
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
 
-    def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String) = Tables.load(spark, src, t)
 
     // big offset (1e9) keeps copy key-spaces disjoint for every table
     val off = 1000000000L

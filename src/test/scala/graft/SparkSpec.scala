@@ -27,4 +27,10 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+
+  /** Spark jobs that `body` starts from this thread (job group plus
+    * sentinel job, see [[graft.tools.Profile.counted]]).
+    */
+  protected def jobsStartedBy(body: => Unit): Int =
+    graft.tools.Profile.counted(spark)(body)._3.jobs
 }

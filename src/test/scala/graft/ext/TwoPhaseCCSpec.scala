@@ -80,4 +80,20 @@ class TwoPhaseCCSpec extends SparkSpec {
     assert(tComp.as[(Long, Long)].collect().toMap ==
       sComp.as[(Long, Long)].collect().toMap)
   }
+
+  test("auto counts the edges once: no Spark job beyond hash-min's own") {
+    val star = Seq((1L, 2L), (1L, 3L), (1L, 4L), (10L, 11L)).toDF("a", "b")
+    var labels: org.apache.spark.sql.DataFrame = null
+    val autoJobs = jobsStartedBy {
+      labels = ConnectedComponents.auto(star, "a", "b")
+    }
+    // run = edge checkpoint + one edge count + hash-min, and the star
+    // converges well inside both round caps, so auto's dispatch count
+    // must also size hash-min's width (a second count is two jobs here:
+    // an AQE map stage plus its result)
+    assert(autoJobs == jobsStartedBy(ConnectedComponents.run(star, "a", "b")))
+    assert(autoJobs == 14)
+    assert(labels.as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+  }
 }

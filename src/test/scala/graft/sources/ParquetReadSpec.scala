@@ -1,12 +1,8 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkThrowable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpec
 import graft.core.{Schemas, Tables}
@@ -114,36 +110,6 @@ class ParquetReadSpec extends SparkSpec {
         case _ => null
       }
       assert(condition(actual) == condition(expected), p)
-    }
-  }
-
-  /** Spark jobs that `body` starts from this thread. The listener bus
-    * delivers events in order, so once a sentinel job started after
-    * `body` is seen, every job `body` started has been seen too.
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"readdir-${java.util.UUID.randomUUID()}"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).filter(_.getProperty("spark.jobGroup.id") == group)
-          .foreach(p => seen.add(p.getProperty("spark.job.description")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "body")
-      body
-      sc.setJobGroup(group, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains("sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains("sentinel"), "listener never saw the sentinel job")
-      seen.asScala.count(_ == "body")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
   }
 

@@ -1,0 +1,68 @@
+package graft.tools
+
+import java.io.ByteArrayOutputStream
+
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.SparkSession
+
+import graft.{SparkEntry, SparkSpec}
+
+/** [[Profile.main]] end to end at sf0.001: its stdout records, and its
+  * failure on a prefix that selects nothing.
+  */
+class ProfileMainSpec extends SparkSpec {
+
+  /** The main's outcome and stdout. It builds its own session through
+    * `Sessions.local`; clearing the default session first makes that a
+    * new session on the shared context, so the test session's conf
+    * stays as it was.
+    */
+  private def profile(args: String*): (Try[Unit], String) = {
+    val base = spark
+    val out = new ByteArrayOutputStream()
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val result =
+      try Try(Console.withOut(out)(Profile.main(args.toArray)))
+      finally {
+        SparkSession.setDefaultSession(base)
+        SparkSession.setActiveSession(base)
+      }
+    (result, out.toString("UTF-8"))
+  }
+
+  test("one JSON record per selected query with rows, both wall times and the fastest pass's counts") {
+    val (result, out) = profile(sf0001, "q01", "q34")
+    result.get
+    val lines = out.linesIterator.filter(_.nonEmpty).toSeq
+    assert(lines.size == 2, out)
+    val recs = lines.map(new ObjectMapper().readTree(_))
+    assert(recs.map(_.get("query").asText) ==
+      Seq("q01_pricing_summary", "q34_dedup_closure"))
+    recs.foreach { r =>
+      Seq("query", "sf_dir", "cores", "loadavg_start", "rows", "wall_s",
+        "min_s", "jobs", "stages", "tasks").foreach(f => assert(r.has(f), f))
+      val name = r.get("query").asText
+      assert(r.get("sf_dir").asText == sf0001)
+      assert(r.get("cores").asInt == spark.sparkContext.defaultParallelism)
+      val walls = (0 until r.get("wall_s").size).map(r.get("wall_s").get(_).asDouble)
+      assert(walls.size == 2 && walls.forall(_ > 0), name)
+      assert(r.get("min_s").asDouble == walls.min, name)
+      assert(r.get("jobs").asInt >= 1, name)
+      assert(r.get("stages").asInt >= 1, name)
+      assert(r.get("tasks").asInt >= r.get("stages").asInt, name)
+      assert(r.get("rows").asLong ==
+        SparkEntry.queries(name)(spark, sf0001).count(), name)
+    }
+  }
+
+  test("a prefix that matches no query fails with a message and prints no record") {
+    val (result, out) = profile(sf0001, "q01", "qzz")
+    val e = result.failed.get
+    assert(e.isInstanceOf[IllegalArgumentException])
+    assert(e.getMessage.contains("no query name starts with qzz"), e.getMessage)
+    assert(out.isEmpty, out)
+  }
+}
