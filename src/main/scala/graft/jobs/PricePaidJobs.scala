@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.functions._
 
 import graft.core.Schemas
-import graft.operators.{Clean, Upsert}
+import graft.operators.Clean
 import graft.orchestration.TaskGraph.{Task, TaskContext}
 import graft.sources.ParquetTable
 
@@ -33,9 +33,8 @@ object PricePaidJobs {
       .csv(csvPath)
     val cleaned = Clean.oxfordOnly(Clean.pricePaid(raw))
       .select(Schemas.pricePaid.fieldNames.map(col).toSeq: _*)
-    val merged = Upsert.insertIgnore(
-      table.read(), cleaned, Seq("transaction_unique_identifier"))
-    table.overwriteAtomic(merged, sortCols = Seq("postcode"))
+    table.insertIgnore(cleaned, Seq("transaction_unique_identifier"),
+      sortCols = Seq("postcode"))
   }
 
   /** `initial_price_paid_data` (bulk, ad-hoc): create → load → notify. */

@@ -153,8 +153,7 @@ object ScrapeJobs {
         .localCheckpoint() // pin the batch: the marking overwrite below
                            // must not re-plan the selection over the
                            // already-mutated table
-      out.overwriteAtomic(Upsert.insertIgnore(out.read(), batch,
-        Seq("property_id", "updated_date")))
+      out.insertIgnore(batch, Seq("property_id", "updated_date"))
       val marked = Upsert.updateByNormalizedKey(
         sales.read(),
         batch.select(col("property_id"),

@@ -16,17 +16,28 @@ import org.apache.spark.sql.functions._
 object Upsert {
 
   /** Insert-ignore: `INSERT ... ON CONFLICT (key) DO NOTHING`
-    * (`monthly_price_paid_data.py:153`) = rows of `updates` whose key is
-    * absent from `target`, appended. Dedups updates on the key first
-    * (keyed by an arbitrary-but-deterministic min over remaining cols is
-    * NOT needed — reference keeps first seen; we keep one row per key via
-    * row_number on the given ordering, defaulting to the key itself).
+    * (`monthly_price_paid_data.py:153`) = `target` plus [[newRows]].
+    * This frame is the spec oracle; tables commit through
+    * [[graft.sources.ParquetTable.insertIgnore]] (or
+    * [[graft.sources.TxLogTable.insertIgnore]]), which write only the
+    * new rows instead of rewriting `target`.
+    */
+  def insertIgnore(
+      target: DataFrame,
+      updates: DataFrame,
+      key: Seq[String],
+      broadcastTarget: Boolean = false): DataFrame =
+    target.unionByName(newRows(target, updates, key, broadcastTarget))
+
+  /** Rows of `updates` whose key is absent from `target`, in `target`'s
+    * column order. Dedups updates on the key first: one row per key
+    * (including one null-keyed row, which never conflicts).
     *
     * Scale note: the anti-join shuffles both sides on the key unless the
     * target's key projection broadcasts; pass `broadcastTarget=true` when
     * the target key set fits in the driver-configured broadcast threshold.
     */
-  def insertIgnore(
+  def newRows(
       target: DataFrame,
       updates: DataFrame,
       key: Seq[String],
@@ -35,10 +46,10 @@ object Upsert {
     // not the key side repeats a key, and skipping it saves a shuffle
     val targetKeys0 = target.select(key.map(col): _*)
     val targetKeys = if (broadcastTarget) broadcast(targetKeys0) else targetKeys0
-    val newRows = updates
+    updates
       .dropDuplicates(key)
       .join(targetKeys, key, "left_anti")
-    target.unionByName(newRows.select(target.columns.map(col).toSeq: _*))
+      .select(target.columns.map(col).toSeq: _*)
   }
 
   /** Merge-by-key, latest-wins: `ON CONFLICT (key) DO UPDATE SET ...`

@@ -30,10 +30,11 @@ object FormatConvert {
 
   /** Columnar ↔ columnar: parquet → ORC (ORC is in-box in Spark; Avro
     * needs the external spark-avro module, absent here). Schema rides
-    * along — no inference involved.
+    * along: parquet inputs are read through [[ParquetTable.readDir]],
+    * which takes it from one footer without an inference job.
     */
   def parquetToOrc(spark: SparkSession, inPath: String, outPath: String): Unit =
-    spark.read.parquet(inPath).write.mode(SaveMode.Overwrite).orc(outPath)
+    ParquetTable.readDir(spark, inPath).write.mode(SaveMode.Overwrite).orc(outPath)
 
   /** ORC → parquet. */
   def orcToParquet(spark: SparkSession, inPath: String, outPath: String): Unit =
@@ -70,9 +71,9 @@ object FormatConvert {
     */
   def parquetToAvro(spark: SparkSession, inPath: String, outPath: String): Unit =
     if (avroAvailable)
-      spark.read.parquet(inPath).write.mode(SaveMode.Overwrite)
+      ParquetTable.readDir(spark, inPath).write.mode(SaveMode.Overwrite)
         .format("avro").save(outPath)
-    else AvroTables.write(spark.read.parquet(inPath), outPath)
+    else AvroTables.write(ParquetTable.readDir(spark, inPath), outPath)
 
   /** Avro → parquet. Same dispatch as [[parquetToAvro]]. */
   def avroToParquet(spark: SparkSession, inPath: String, outPath: String): Unit = {

@@ -3062,9 +3062,7 @@ final class TxLogTable(spark: SparkSession,
       statsCols: Seq[String] = Nil): Long =
     commitLoop(maxRetries) { v =>
       val snap = readAt(v)
-      val newRows = updates.dropDuplicates(key)
-        .join(snap.select(key.map(snap.col): _*).distinct(), key, "left_anti")
-        .select(snap.columns.map(updates.col).toIndexedSeq: _*)
+      val newRows = Upsert.newRows(snap, updates, key)
       // empty appends still commit: idempotent-replay markers rely on
       // the version advancing even when every row was a duplicate
       val staged = stageData(newRows, checkConstraints = true)

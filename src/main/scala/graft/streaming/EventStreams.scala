@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.{Clean, Upsert}
+import graft.operators.Clean
 import graft.sources.ParquetTable
 
 /** Streaming semantics (SURVEY §2.9): the reference's chunked-HTTP
@@ -211,11 +211,8 @@ object EventStreams {
         beforeCommit(batch, batchId)
         val cleaned0 = Clean.pricePaid(batch)
         val cleaned = if (oxOnly) Clean.oxfordOnly(cleaned0) else cleaned0
-        val aligned = cleaned.select(
-          table.read().columns.map(org.apache.spark.sql.functions.col).toSeq: _*)
-        val merged = Upsert.insertIgnore(
-          table.read(), aligned, Seq("transaction_unique_identifier"))
-        table.overwriteAtomic(merged, sortCols = Seq("postcode"))
+        table.insertIgnore(cleaned, Seq("transaction_unique_identifier"),
+          sortCols = Seq("postcode"))
         ()
       }
       .start()
@@ -346,8 +343,7 @@ object EventStreams {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val kept = graft.ext.HashedClassifier.predict(batch, textCol, model)
           .filter(col("prob") >= keepProb).drop("prob", "pred")
-        corpus.overwriteAtomic(
-          Upsert.insertIgnore(corpus.read(), kept, Seq(idCol)))
+        corpus.insertIgnore(kept, Seq(idCol))
         ()
       }
       .start()
@@ -406,8 +402,8 @@ object EventStreams {
     * per-batch cost stays O(batch + collisions) no matter how large the
     * corpus grows.
     *
-    * Idempotent replay (T2): both corpus and index writes go through
-    * insert-ignore on the doc id + atomic overwrite, so a micro-batch
+    * Idempotent replay (T2): both corpus and index writes are
+    * [[ParquetTable.insertIgnore]] commits on the doc id, so a micro-batch
     * re-delivered after a crash re-lands the same rows as no-ops —
     * checkpoint + idempotent sink = exactly-once corpus state.
     *
@@ -487,13 +483,9 @@ object EventStreams {
         val kept = batch.join(losers, Seq(idCol), "left_anti").cache()
           // batch docs already in the corpus (exact re-delivery) are
           // dropped by insert-ignore below; near-dups by the pair join
-        val mergedCorpus = Upsert.insertIgnore(
-          corpus.read(), kept, Seq(idCol))
-        corpus.overwriteAtomic(mergedCorpus)
-        val mergedIndex = Upsert.insertIgnore(
-          idx, graft.ext.MinHashDedup.indexFrame(kept, idCol, textCol, n),
-          Seq("id"))
-        index.overwriteAtomic(mergedIndex)
+        corpus.insertIgnore(kept, Seq(idCol))
+        index.insertIgnore(
+          graft.ext.MinHashDedup.indexFrame(kept, idCol, textCol, n), Seq("id"))
         // unpersist ALL per-batch caches or a long-running ingest
         // accumulates dead cached frames in storage memory
         kept.unpersist()

@@ -2,6 +2,8 @@ package graft.jobs
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -61,6 +63,42 @@ class JobsSpec extends SparkSpec {
     val r = TaskGraph.run(PricePaidJobs.monthly(csv, tableRoot), spark)
     assert(r.succeeded, r.states)
     assert(new ParquetTable(spark, tableRoot).read().count() == 1)
+  }
+
+  test("monthly replay: price_paid files untouched, every data file sorted by postcode") {
+    val work = tmp("ppreplay")
+    def row(id: String, pc: String) =
+      s""""{$id}","100","2017-03-10 00:00","$pc","T","N","F","1","","X","","OXFORD","OXFORD","OXFORDSHIRE","A","A""""
+    def csv(name: String, rows: String*) = {
+      val p = java.nio.file.Paths.get(work, name)
+      Files.write(p, rows.mkString("\n").getBytes("UTF-8"))
+      p.toString
+    }
+    val tableRoot = s"$work/price_paid"
+    assert(TaskGraph.run(PricePaidJobs.initial(csv("initial.csv",
+      row("A", "OX9 9ZZ"), row("B", "OX1 1AA"), row("C", "OX4 4DD")), tableRoot), spark).succeeded)
+    val monthly = csv("monthly.csv",
+      row("D", "OX3 3CC"), row("B", "OX1 1AA"), row("E", "OX2 2BB"), row("F", "OX8 8YY"))
+    assert(TaskGraph.run(PricePaidJobs.monthly(monthly, tableRoot), spark).succeeded)
+    def files() = {
+      val s = Files.list(java.nio.file.Paths.get(tableRoot))
+      try s.iterator().asScala.map(f => f.getFileName.toString -> Files.readAttributes(
+        f, classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()).toMap
+      finally s.close()
+    }
+    val before = files()
+    assert(TaskGraph.run(PricePaidJobs.monthly(monthly, tableRoot), spark).succeeded)
+    assert(files() == before)
+    val table = new ParquetTable(spark, tableRoot)
+    assert(table.read().select("transaction_unique_identifier").as[String]
+      .collect().sorted.toSeq == Seq("A", "B", "C", "D", "E", "F"))
+    val data = before.keySet.filterNot(n => n.startsWith("_") || n.startsWith("."))
+    assert(data.size > 1)
+    data.foreach { name =>
+      val pcs = ParquetTable.readDir(spark, s"$tableRoot/$name")
+        .select("postcode").as[String].collect().toSeq
+      assert(pcs == pcs.sorted, name)
+    }
   }
 
   test("pullNewSales: work batch, merge, watermark advanced even for empty areas") {

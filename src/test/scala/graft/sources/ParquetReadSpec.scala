@@ -98,6 +98,35 @@ class ParquetReadSpec extends SparkSpec {
     assert(df.select("ts").as[Long].collect().toSeq == Seq(1700000000123456789L))
   }
 
+  test("FormatConvert's parquet reads give the plain reader's output and schema") {
+    val work = tmp("readdir-convert")
+    def sameOutput(read: String => org.apache.spark.sql.DataFrame,
+        got: String, expected: String): Unit = {
+      val (g, e) = (read(got), read(expected))
+      assert(g.schema == e.schema, got)
+      assert(g.exceptAll(e).isEmpty && e.exceptAll(g).isEmpty, got)
+    }
+    Seq("documents", "orders", "events").foreach { n =>
+      val in = s"$sf0001/$n.parquet"
+      FormatConvert.parquetToOrc(spark, in, s"$work/$n.orc")
+      spark.read.parquet(in).write.orc(s"$work/$n.plain.orc")
+      sameOutput(spark.read.orc(_), s"$work/$n.orc", s"$work/$n.plain.orc")
+    }
+    // avro goes through the same writer and reader FormatConvert picks
+    val docs = s"$sf0001/documents.parquet"
+    FormatConvert.parquetToAvro(spark, docs, s"$work/docs.avro")
+    val plain = spark.read.parquet(docs)
+    if (FormatConvert.avroAvailable) {
+      plain.write.format("avro").save(s"$work/docs.plain.avro")
+      sameOutput(spark.read.format("avro").load(_),
+        s"$work/docs.avro", s"$work/docs.plain.avro")
+    } else {
+      AvroTables.write(plain, s"$work/docs.plain.avro")
+      sameOutput(AvroTables.read(spark, _),
+        s"$work/docs.avro", s"$work/docs.plain.avro")
+    }
+  }
+
   test("readDir fails like spark.read.parquet on a missing path and an empty dir") {
     val work = tmp("readdir-none")
     val emptyDir = Files.createDirectory(Paths.get(work, "empty")).toString

@@ -85,6 +85,31 @@ class TxLogTableSpec extends SparkSpec {
     assert(asMap(t) === Map(1L -> ("a", 10L), 2L -> ("b", 10L)))
   }
 
+  test("insertIgnore: duplicate and null snapshot keys give the distinct-key plan's result") {
+    import scala.jdk.CollectionConverters._
+    val s = StructType(Seq(
+      StructField("k", StringType, nullable = true),
+      StructField("v", LongType, nullable = false)))
+    def rows(xs: (String, Long)*) =
+      spark.createDataFrame(xs.map { case (k, v) => Row(k, v) }.asJava, s)
+    val t = fresh()
+    t.ensureExists(s)
+    t.append(rows(("p1", 1L), ("p1", 2L), (null, 3L), (null, 4L)))
+    val updates = rows(("p1", 10L), ("p2", 11L), (null, 12L))
+    // the plan before the distinct() was dropped from the snapshot keys
+    val snap = t.read()
+    val old = snap.unionByName(updates.dropDuplicates("k")
+      .join(snap.select("k").distinct(), Seq("k"), "left_anti"))
+    def sorted(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (Option(r.getString(0)), r.getLong(1))).toSeq.sortBy(_._2)
+    val expected = sorted(old)
+    val jobs = jobsStartedBy(t.insertIgnore(updates, Seq("k")))
+    info(s"insertIgnore commit started $jobs Spark jobs")
+    assert(sorted(t.read()) == expected)
+    // p2 and the null-keyed update are new; p1 is a conflict
+    assert(expected.map(_._2) == Seq(1L, 2L, 3L, 4L, 11L, 12L))
+  }
+
   test("commit primitive: exactly one writer wins a version") {
     val t = fresh()
     t.ensureExists(schema)
