@@ -94,7 +94,9 @@ object DuplicateSpans {
             when(col("cut").isNull ||
               !array_contains(col("cut"), i + 1), t)),
           t => t.isNotNull)).as("clean_text"),
-        coalesce(size(col("cut")).cast("long"), lit(0L)).as("n_cut"),
+        // an uncut doc has no cut array: size(null) is -1 when ANSI is off
+        when(col("cut").isNull, lit(0L))
+          .otherwise(size(col("cut")).cast("long")).as("n_cut"),
         size(col("toks")).cast("long").as("n_tokens"))
   }
 }

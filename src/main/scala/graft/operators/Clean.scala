@@ -36,16 +36,8 @@ object Clean {
     * The P4 prefix filter is separate ([[oxfordOnly]]) because the initial
     * and monthly DAGs apply it at different points.
     */
-  def pricePaid(raw: DataFrame): DataFrame = {
-    val parsedDate = DateCodecs.lenientDate(col("date_of_transfer"))
-    raw
-      .withColumn("transaction_unique_identifier",
-        regexp_replace(col("transaction_unique_identifier"), "[{}]", ""))
-      .withColumn("transfer_date", parsedDate)
-      .withColumn("date_of_transfer", DateCodecs.yyyymmdd(parsedDate))
-      .withColumn("price", expr("try_cast(price AS double)"))
-      .na.drop(pricePaidKeyCols)
-  }
+  def pricePaid(raw: DataFrame): DataFrame =
+    coerced(raw).na.drop(pricePaidKeyCols)
 
   /** T4 improvement over the reference (which silently drops dirty
     * rows): split the cleaned frame into (clean, rejects) so bad
@@ -53,23 +45,27 @@ object Clean {
     * vanishing. One pass each; both share the coerced projection.
     */
   def pricePaidWithRejects(raw: DataFrame): (DataFrame, DataFrame) = {
-    val parsedDate = DateCodecs.lenientDate(col("date_of_transfer"))
-    val coerced = raw
-      .withColumn("transaction_unique_identifier",
-        regexp_replace(col("transaction_unique_identifier"), "[{}]", ""))
-      .withColumn("transfer_date", parsedDate)
-      .withColumn("date_of_transfer", DateCodecs.yyyymmdd(parsedDate))
-      .withColumn("price", expr("try_cast(price AS double)"))
     val reason = when(col("transaction_unique_identifier").isNull, "null_key")
       .when(col("date_of_transfer").isNull, "bad_date")
       .when(col("price").isNull, "bad_price")
       .when(col("postcode").isNull, "null_postcode")
-    val tagged = coerced.withColumn("__reject_reason", reason)
+    val tagged = coerced(raw).withColumn("__reject_reason", reason)
     val clean = tagged.filter(col("__reject_reason").isNull)
       .drop("__reject_reason")
     val rejects = tagged.filter(col("__reject_reason").isNotNull)
       .withColumnRenamed("__reject_reason", "reject_reason")
     (clean, rejects)
+  }
+
+  /** Steps 1-3 of [[pricePaid]]: the F1-F3 coercions, no rows dropped. */
+  private def coerced(raw: DataFrame): DataFrame = {
+    val parsedDate = DateCodecs.lenientDate(col("date_of_transfer"))
+    raw
+      .withColumn("transaction_unique_identifier",
+        regexp_replace(col("transaction_unique_identifier"), "[{}]", ""))
+      .withColumn("transfer_date", parsedDate)
+      .withColumn("date_of_transfer", DateCodecs.yyyymmdd(parsedDate))
+      .withColumn("price", expr("try_cast(price AS double)"))
   }
 
   /** P4: `postcode.str.startswith("OX")` (`initial_price_paid_data.py:130`).

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * hash when the key side is small, shuffle hash / sort-merge otherwise;
   * AQE may switch at runtime).
   *
-  * At 100 TB the target table should be a transactional format with real
-  * MERGE; offline, these produce the post-merge state functionally, and
-  * [[graft.sources.ParquetTable]] handles atomic overwrite-by-staging.
+  * These produce the post-merge state functionally. Tables commit it
+  * through [[graft.sources.TxLogTable]], graft's transactional format
+  * with real MERGE, or through [[graft.sources.ParquetTable]]'s staged
+  * overwrite and insert-only commit.
   */
 object Upsert {
 

@@ -14,16 +14,17 @@ import org.apache.spark.sql.types.StructType
 import graft.operators.Upsert
 
 /** Path-based parquet "table" with the reference's sink semantics
-  * (SURVEY §2.1 S7-S10): existence-checked create, append, an
-  * insert-only commit and an atomic overwrite for merge results.
+  * (SURVEY §2.1 S7-S10): existence-checked create, an insert-only
+  * commit and an atomic overwrite for merge results.
   *
-  * Offline there is no transactional table format, so a merge that
-  * changes rows ([[overwriteAtomic]]) writes the post-merge state to a
-  * staging dir, then swaps directories with two renames (SURVEY §7
-  * "hard parts" #1). The swap window is the non-transactional residue —
-  * on a real deployment this class is the seam where Delta/Iceberg MERGE
-  * plugs in. An insert-only merge ([[insertIgnore]]) writes just the new
-  * rows and moves their files into the table dir, so no existing byte is
+  * This is the log-free sink the `graft.jobs` DAGs write; graft's
+  * transactional table format, with versioned commits and MERGE, is
+  * [[TxLogTable]]. Here a merge that changes rows ([[overwriteAtomic]])
+  * writes the post-merge state to a staging dir, then swaps directories
+  * with two renames (SURVEY §7 "hard parts" #1); the swap window is the
+  * non-transactional residue. An
+  * insert-only merge ([[insertIgnore]]) writes just the new rows and
+  * moves their files into the table dir, so no existing byte is
   * rewritten until enough small files pile up to compact them. Both need
   * a local POSIX directory (atomic rename).
   *
@@ -57,10 +58,6 @@ final class ParquetTable(spark: SparkSession, root: String) {
   }
 
   def read(): DataFrame = ParquetTable.readDir(spark, root)
-
-  /** S8: plain append (micro-batch inserts). */
-  def append(df: DataFrame, sortCols: Seq[String] = Nil): Unit =
-    sorted(df, sortCols).write.mode(SaveMode.Append).parquet(root)
 
   /** Atomic-ish overwrite: stage → double rename. Readers between the
     * two renames would miss the table; acceptable in batch-job context
@@ -156,23 +153,6 @@ final class ParquetTable(spark: SparkSession, root: String) {
   def marker(name: String): Option[String] = {
     val p = dir.resolve(name)
     if (Files.exists(p)) Some(Files.readString(p)) else None
-  }
-
-  /** Small-files compaction: rewrite the table into
-    * ⌈rows / targetRowsPerFile⌉ files via `coalesce` (a repartition-
-    * free narrow merge) behind the same staged atomic swap. The
-    * maintenance pass after many micro-batch appends — at 100 TB the
-    * small-files tax (per-file open/footer cost, driver listing,
-    * scheduler overhead) dominates reads of an un-compacted table long
-    * before data volume does.
-    */
-  def compact(targetRowsPerFile: Long, sortCols: Seq[String] = Nil): Unit = {
-    require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
-    val df = read()
-    val n = df.count()
-    val files =
-      math.max(1L, (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-    overwriteAtomic(df.coalesce(files), sortCols)
   }
 
   private def sorted(df: DataFrame, sortCols: Seq[String]): DataFrame =

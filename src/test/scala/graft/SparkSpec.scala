@@ -3,18 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM, forked by sbt). */
+/** Shared local SparkSession for all suites (one JVM, forked by sbt):
+  * the session that ships, [[graft.core.Sessions.local]] on 4 cores.
+  */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.driver.host", "127.0.0.1")
-      .getOrCreate()
+    val s = graft.core.Sessions.local(4)
     s.sparkContext.setLogLevel("WARN")
     // pruning-effectiveness hooks: specs assert exact (planned, live)
     // tuples, and the live-file denominator walk is test-gated

@@ -1,43 +1,15 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.Expression
 
 import graft.SparkSpec
 
-/** Native F8 expression + SparkSessionExtensions registration.
-  *
-  * (The shared test session already exists, and `getOrCreate` ignores
-  * `withExtensions` on an existing session — so the extension's
-  * registration is unit-tested via a fresh SparkSessionExtensions
-  * instance, and the expression's SQL surface via direct registry
-  * injection into the shared session, which is exactly what the
-  * extension performs at build time.)
+/** Native F8 expression + SparkSessionExtensions registration. The
+  * extension's wiring is unit-tested via a fresh SparkSessionExtensions
+  * instance; the expressions' SQL surface runs on the shared session,
+  * which [[graft.core.Sessions.local]] builds with the extension.
   */
 class ExtensionsSpec extends SparkSpec {
-
-  private def registerIntoSession(): Unit = {
-    // mirror of GraftExtensions.apply against the live session registry
-    val ext = new GraftExtensions
-    val holder = new SparkSessionExtensions
-    ext(holder)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_extract_json",
-      (args: Seq[Expression]) => ExtractBalancedJsonExpr(args.head, args(1)),
-      "scala_udf")
-    def widen(e: Expression): Expression =
-      org.apache.spark.sql.catalyst.expressions.Cast(e,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType))
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      (args: Seq[Expression]) => DotProductExpr(widen(args.head), widen(args(1))),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_normalize",
-      (args: Seq[Expression]) => NormalizeExpr(args.head),
-      "scala_udf")
-  }
 
   test("extension wiring builds the native expression") {
     val ext = new GraftExtensions
@@ -50,7 +22,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("graft_extract_json in SQL; handles tricky braces and missing marker") {
     import spark.implicits._
-    registerIntoSession()
     Seq(
       ("""<script>window.jsonModel = {"a":{"b":"}"},"n":1};</script>""", 1),
       ("""no marker""", 2)).toDF("html", "id").createOrReplaceTempView("pages")
@@ -79,44 +50,26 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("production path: session built withExtensions runs the SQL surface") {
-    import org.apache.spark.sql.SparkSession
-    val base = spark // materialize the shared session (and its context) first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // new SparkSession over the SAME SparkContext — the only route that
-    // actually applies withExtensions, since getOrCreate ignores it on
-    // an existing session. Never .stop() it: the context is shared.
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      assert(s2 ne base)
-      import s2.implicits._
-      Seq((Array(3.0f, 4.0f), Array(1.0, 2.0)))
-        .toDF("a", "b").createOrReplaceTempView("pvecs")
-      // CTE + view indirection: function resolution can fire on multiple
-      // analyzer iterations here — the path where an eager dataType in
-      // the builder threw UnresolvedException on valid queries
-      val row = s2.sql(
-        """WITH v AS (SELECT a, b FROM pvecs)
-          |SELECT graft_dot(a, b) AS d,
-          |       graft_normalize(a) AS na,
-          |       graft_extract_json('m = {"x":1} t', 'm =') AS j
-          |FROM v""".stripMargin).collect().head
-      assert(math.abs(row.getDouble(0) - 11.0) < 1e-9)
-      val na = row.getSeq[Double](1)
-      assert(math.abs(na(0) - 0.6) < 1e-6 && math.abs(na(1) - 0.8) < 1e-6)
-      assert(row.getString(2) == """{"x":1}""")
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
+    import spark.implicits._
+    Seq((Array(3.0f, 4.0f), Array(1.0, 2.0)))
+      .toDF("a", "b").createOrReplaceTempView("pvecs")
+    // CTE + view indirection: function resolution can fire on multiple
+    // analyzer iterations here — the path where an eager dataType in
+    // the builder threw UnresolvedException on valid queries
+    val row = spark.sql(
+      """WITH v AS (SELECT a, b FROM pvecs)
+        |SELECT graft_dot(a, b) AS d,
+        |       graft_normalize(a) AS na,
+        |       graft_extract_json('m = {"x":1} t', 'm =') AS j
+        |FROM v""".stripMargin).collect().head
+    assert(math.abs(row.getDouble(0) - 11.0) < 1e-9)
+    val na = row.getSeq[Double](1)
+    assert(math.abs(na(0) - 0.6) < 1e-6 && math.abs(na(1) - 0.8) < 1e-6)
+    assert(row.getString(2) == """{"x":1}""")
   }
 
   test("graft_dot / graft_normalize in SQL match the Column-API kernels") {
     import spark.implicits._
-    registerIntoSession()
     Seq((Array(3.0f, 4.0f), Array(1.0f, 2.0f)))
       .toDF("a", "b").createOrReplaceTempView("vecs")
     val row = spark.sql(

@@ -2,7 +2,7 @@ package graft.plans
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -108,44 +108,28 @@ class GraftSqlDmlSpec extends SparkSpec {
   }
 
   test("production seam: spark.sql on a withExtensions session") {
-    val base = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      assert(s2 ne base)
-      val root = Files.createTempDirectory("sqldml_ext").toString
-      val t = new TxLogTable(s2, root)
-      t.ensureExists(schema)
-      t.append(df((1L, "a", L(10)), (2L, "b", L(20))))
-      val v1 = t.currentVersion
-      s2.sql(s"UPDATE txlog.`$root` SET n = n + 1 WHERE k = 1").collect()
-      s2.sql(s"DELETE FROM txlog.`$root` WHERE k = 2").collect()
-      // the view must live in s2's catalog (temp views are per-session)
-      s2.createDataFrame(java.util.List.of(
-        Row(1L, "A", L(100)), Row(7L, "g", L(70))), schema)
-        .createOrReplaceTempView("ext_updates")
-      val ver = s2.sql(
-        s"""MERGE INTO txlog.`$root` t USING ext_updates s ON t.k = s.k
-           |WHEN MATCHED THEN UPDATE SET *
-           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-        .collect().head.getLong(0)
-      assert(ver == t.currentVersion)
-      val cur = t.read().orderBy("k").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-      assert(cur == Seq((1L, "A", 100L), (7L, "g", 70L)))
-      // time travel through plain spark.sql too
-      assert(s2.sql(
-        s"SELECT * FROM txlog.`$root` VERSION AS OF $v1").count() == 2)
-      // and non-txlog SQL is untouched by the injected parser
-      assert(s2.sql("SELECT 1 + 1 AS two").collect().head.getInt(0) == 2)
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
+    val root = Files.createTempDirectory("sqldml_ext").toString
+    val t = new TxLogTable(spark, root)
+    t.ensureExists(schema)
+    t.append(df((1L, "a", L(10)), (2L, "b", L(20))))
+    val v1 = t.currentVersion
+    spark.sql(s"UPDATE txlog.`$root` SET n = n + 1 WHERE k = 1").collect()
+    spark.sql(s"DELETE FROM txlog.`$root` WHERE k = 2").collect()
+    df((1L, "A", L(100)), (7L, "g", L(70))).createOrReplaceTempView("ext_updates")
+    val ver = spark.sql(
+      s"""MERGE INTO txlog.`$root` t USING ext_updates s ON t.k = s.k
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      .collect().head.getLong(0)
+    assert(ver == t.currentVersion)
+    val cur = t.read().orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    assert(cur == Seq((1L, "A", 100L), (7L, "g", 70L)))
+    // time travel through plain spark.sql too
+    assert(spark.sql(
+      s"SELECT * FROM txlog.`$root` VERSION AS OF $v1").count() == 2)
+    // and non-txlog SQL is untouched by the injected parser
+    assert(spark.sql("SELECT 1 + 1 AS two").collect().head.getInt(0) == 2)
   }
 
   test("maintenance statements: DESCRIBE HISTORY, OPTIMIZE, VACUUM") {
@@ -196,16 +180,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     assert(detail.getLong(3) == 4L, s"num_rows=${detail.get(3)}")
     assert(detail.getInt(4) == 1)
     // and the statements also run through the injected-parser seam
-    val base = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder().master("local[4]")
-      .withExtensions(new GraftExtensions).getOrCreate()
-    try assert(s2.sql(s"DESCRIBE HISTORY txlog.`$root`").count() >= 5)
-    finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
+    assert(spark.sql(s"DESCRIBE HISTORY txlog.`$root`").count() >= 5)
   }
 
   test("DML and time travel work on NAMED catalog tables (USING txlog)") {
@@ -240,27 +215,17 @@ class GraftSqlDmlSpec extends SparkSpec {
   }
 
   test("Sessions.local ships the SQL surface by default") {
-    val base = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = graft.core.Sessions.local(4)
-    try {
-      assert(s2 ne base)
-      val root = Files.createTempDirectory("sqldml_sessions").toString
-      val t = new TxLogTable(s2, root)
-      t.ensureExists(schema)
-      t.append(df((1L, "a", L(1))))
-      // parser injected: maintenance + DML statements just work
-      assert(s2.sql(s"DESCRIBE HISTORY txlog.`$root`").count() == 2)
-      s2.sql(s"UPDATE txlog.`$root` SET n = 7 WHERE k = 1").collect()
-      assert(t.read().collect().head.getLong(2) == 7L)
-      // functions injected too
-      assert(s2.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) d")
-        .collect().head.getDouble(0) == 11.0)
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
+    val root = Files.createTempDirectory("sqldml_sessions").toString
+    val t = new TxLogTable(spark, root)
+    t.ensureExists(schema)
+    t.append(df((1L, "a", L(1))))
+    // parser injected: maintenance + DML statements just work
+    assert(spark.sql(s"DESCRIBE HISTORY txlog.`$root`").count() == 2)
+    spark.sql(s"UPDATE txlog.`$root` SET n = 7 WHERE k = 1").collect()
+    assert(t.read().collect().head.getLong(2) == 7L)
+    // functions injected too
+    assert(spark.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) d")
+      .collect().head.getDouble(0) == 11.0)
   }
 
   test("a genuine database named txlog resolves through the delegate") {

@@ -2,7 +2,6 @@ package graft.plans
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 
@@ -103,38 +102,25 @@ class TxLogCboStatsSpec extends SparkSpec {
   }
 
   test("V2 scan surfaces exact rowCount natively; injected rule covers the V1 temp-view seam") {
-    val base = spark
     val (root, _) = seed("cbostats_ext", 5000)
-    // V2 (the default read path): SupportsReportStatistics carries the
-    // manifest row count into plan stats with NO extension installed
     spark.conf.set("spark.sql.cbo.enabled", "true")
     try {
+      // V2 (the default read path): SupportsReportStatistics carries the
+      // manifest row count into plan stats; the injected rule matches
+      // V1 relations only
       val df = spark.read.format("txlog").load(root).filter(col("k") >= 0)
       val stats = df.queryExecution.optimizedPlan.stats
       assert(stats.rowCount.contains(BigInt(5000)),
         s"V2 rowCount=${stats.rowCount}")
-    } finally spark.conf.unset("spark.sql.cbo.enabled")
-    // V1 seam (CREATE TEMPORARY VIEW ... USING resolves through the V1
-    // relation): the injected TxLogCboStats rule still supplies stats
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      s2.conf.set("spark.sql.cbo.enabled", "true")
-      s2.sql(s"CREATE OR REPLACE TEMPORARY VIEW cbostats_ext_v " +
+      // V1 seam (CREATE TEMPORARY VIEW ... USING resolves through the V1
+      // relation): the injected TxLogCboStats rule still supplies stats
+      spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW cbostats_ext_v " +
         s"USING txlog OPTIONS (path '$root')")
-      val df = s2.sql("SELECT * FROM cbostats_ext_v WHERE k >= 0")
-      val stats = df.queryExecution.optimizedPlan.stats
-      assert(stats.rowCount.contains(BigInt(5000)),
-        s"V1 temp-view rowCount=${stats.rowCount}")
-      s2.sql("DROP VIEW cbostats_ext_v")
-    } finally {
-      s2.conf.unset("spark.sql.cbo.enabled")
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
+      val v1 = spark.sql("SELECT * FROM cbostats_ext_v WHERE k >= 0")
+      val v1Stats = v1.queryExecution.optimizedPlan.stats
+      assert(v1Stats.rowCount.contains(BigInt(5000)),
+        s"V1 temp-view rowCount=${v1Stats.rowCount}")
+      spark.sql("DROP VIEW cbostats_ext_v")
+    } finally spark.conf.unset("spark.sql.cbo.enabled")
   }
 }

@@ -159,24 +159,6 @@ class MiscSpec extends SparkSpec {
     assert(back.exceptAll(src).count() == 0 && src.exceptAll(back).count() == 0)
   }
 
-  test("compact collapses micro-batch appends into sized files, data intact") {
-    val work = Files.createTempDirectory("compact").toString
-    val t = new graft.sources.ParquetTable(spark, s"$work/t")
-    (1 to 8).foreach { b =>
-      t.append(Seq.tabulate(50)(i => (b * 100L + i, s"v$b")).toDF("id", "v")
-        .repartition(4))
-    }
-    val before = new java.io.File(s"$work/t").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(before >= 8, s"expected many small files, saw $before")
-    val data = t.read().collect().toSet
-    t.compact(targetRowsPerFile = 1000)
-    val after = new java.io.File(s"$work/t").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(after == 1, s"expected 1 compacted file, saw $after")
-    assert(t.read().collect().toSet == data)
-  }
-
   test("normalizeUrl prefixes relative hrefs only (F7)") {
     val out = Seq("/properties/1", "https://x.com/p/2").toDF("href")
       .select(ScrapeParse.normalizeUrl($"href", "https://host").as("u"))

@@ -65,8 +65,8 @@ class ParquetReadSpec extends SparkSpec {
     val appended = new ParquetTable(spark, s"$work/appended")
     appended.ensureExists(Schemas.rightmoveAreas)
     (1 to 3).foreach { i =>
-      appended.append(Seq((s"OX$i", Some(i.toLong), s"area $i", None: Option[Long]))
-        .toDF("outcode", "area_id", "display_name", "last_updated_sale"))
+      appended.insertIgnore(Seq((s"OX$i", Some(i.toLong), s"area $i", None: Option[Long]))
+        .toDF("outcode", "area_id", "display_name", "last_updated_sale"), Seq("outcode"))
     }
     assert(appended.read().count() == 3)
     assertSameSchema(s"$work/appended")

@@ -27,19 +27,12 @@ class RocksDbStateSpec extends SparkSpec {
   private val steps = Seq("view", "click", "purchase")
   private val idleMs = 40L * 86400000L
 
-  private def withRocksDb[A](f: => A): A = {
+  /** The shared session is the shipped one, so it runs on RocksDB. */
+  private def assertRocksDbSession(): Unit = {
     assert(graft.core.Sessions.engineConfs(
       "spark.sql.streaming.stateStore.providerClass") == provider,
       "engineConfs must pin the RocksDB provider for production sessions")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
-    try f finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.unset(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-    }
+    assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass") == provider)
   }
 
   private def mkEvents(nUsers: Int, perUser: Int): Seq[UserEvent] = {
@@ -99,70 +92,68 @@ class RocksDbStateSpec extends SparkSpec {
   }
 
   test("funnel stream == batch twin on the RocksDB state store") {
-    withRocksDb {
-      import spark.implicits._
-      val events = mkEvents(40, 12)
-      val dir = Files.createTempDirectory("rocks_funnel").toString
-      writeWithSentinels(events, dir, 4)
-      val in = spark.readStream
-        .schema(org.apache.spark.sql.Encoders.product[UserEvent].schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir + "/*").as[UserEvent]
-      val (streamed, ckpt) = runToMemory(
-        funnelStream(in, steps, "0 seconds", idleMs).toDF(), "rocks_funnel")
-      val got = streamed.collect().map { r =>
-        r.getLong(0) -> ((r.getSeq[Long](1), r.getLong(2)))
+    assertRocksDbSession()
+    import spark.implicits._
+    val events = mkEvents(40, 12)
+    val dir = Files.createTempDirectory("rocks_funnel").toString
+    writeWithSentinels(events, dir, 4)
+    val in = spark.readStream
+      .schema(org.apache.spark.sql.Encoders.product[UserEvent].schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir + "/*").as[UserEvent]
+    val (streamed, ckpt) = runToMemory(
+      funnelStream(in, steps, "0 seconds", idleMs).toDF(), "rocks_funnel")
+    val got = streamed.collect().map { r =>
+      r.getLong(0) -> ((r.getSeq[Long](1), r.getLong(2)))
+    }.toMap
+    val want = EventAnalytics.orderedFunnel(events.toDF(), "user_id",
+        "ts", "event_type", steps)
+      .collect().map { r =>
+        val su = steps.indices.map(i =>
+          if (r.isNullAt(r.fieldIndex(s"step${i}_us"))) -1L
+          else r.getLong(r.fieldIndex(s"step${i}_us")))
+        r.getLong(0) -> ((su, r.getLong(r.fieldIndex("funnel_depth"))))
       }.toMap
-      val want = EventAnalytics.orderedFunnel(events.toDF(), "user_id",
-          "ts", "event_type", steps)
-        .collect().map { r =>
-          val su = steps.indices.map(i =>
-            if (r.isNullAt(r.fieldIndex(s"step${i}_us"))) -1L
-            else r.getLong(r.fieldIndex(s"step${i}_us")))
-          r.getLong(0) -> ((su, r.getLong(r.fieldIndex("funnel_depth"))))
-        }.toMap
-      assert(got.keySet == want.keySet)
-      want.foreach { case (u, (su, d)) =>
-        assert(got(u)._1.toSeq == su, s"user $u step timestamps")
-        assert(got(u)._2 == d, s"user $u depth")
-      }
-      // the provider REALLY engaged: RocksDB checkpoints are zip
-      // snapshots + changelogs; the heap provider writes .delta files
-      val files = stateFiles(ckpt)
-      assert(files.exists(f => f.endsWith(".zip") || f.endsWith(".changelog")),
-        s"no RocksDB artifacts under $ckpt/state: ${files.take(10)}")
-      assert(!files.exists(_.endsWith(".delta")),
-        "HDFS-provider .delta files present — RocksDB did not engage")
+    assert(got.keySet == want.keySet)
+    want.foreach { case (u, (su, d)) =>
+      assert(got(u)._1.toSeq == su, s"user $u step timestamps")
+      assert(got(u)._2 == d, s"user $u depth")
     }
+    // the provider REALLY engaged: RocksDB checkpoints are zip
+    // snapshots + changelogs; the heap provider writes .delta files
+    val files = stateFiles(ckpt)
+    assert(files.exists(f => f.endsWith(".zip") || f.endsWith(".changelog")),
+      s"no RocksDB artifacts under $ckpt/state: ${files.take(10)}")
+    assert(!files.exists(_.endsWith(".delta")),
+      "HDFS-provider .delta files present — RocksDB did not engage")
   }
 
   test("a 60k-key funnel keyspace runs and finalizes every key on RocksDB") {
-    withRocksDb {
-      import spark.implicits._
-      val n = 60000
-      val base = 1700000000000L
-      val dir = Files.createTempDirectory("rocks_wide").toString
-      // every user: view then click (depth 2 of 3), one file per step
-      // wave, then sentinels push the watermark past the idle horizon
-      (0 to 1).foreach { wave =>
-        (0 until n).map(u => UserEvent(u.toLong,
-          new Timestamp(base + wave * 60000L + u % 997), steps(wave)))
-          .toDS().coalesce(2).write.parquet(s"$dir/w$wave")
-      }
-      Seq(40L, 81L).zipWithIndex.foreach { case (days, i) =>
-        Seq(UserEvent(-1L, new Timestamp(base + days * 86400000L), "other"))
-          .toDS().coalesce(1).write.parquet(s"$dir/sentinel$i")
-      }
-      val in = spark.readStream
-        .schema(org.apache.spark.sql.Encoders.product[UserEvent].schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir + "/*").as[UserEvent]
-      val (streamed, _) = runToMemory(
-        funnelStream(in, steps, "0 seconds", idleMs).toDF(), "rocks_wide")
-      val rows = streamed.collect()
-      // sentinel key never matches step 0 → emits nothing; every real
-      // user finalizes exactly once
-      assert(rows.length == n, s"got ${rows.length} rows, want $n")
-      assert(rows.count(_.getLong(2) == 2L) == n,
-        "every user must finalize at depth 2 (view+click, no purchase)")
+    assertRocksDbSession()
+    import spark.implicits._
+    val n = 60000
+    val base = 1700000000000L
+    val dir = Files.createTempDirectory("rocks_wide").toString
+    // every user: view then click (depth 2 of 3), one file per step
+    // wave, then sentinels push the watermark past the idle horizon
+    (0 to 1).foreach { wave =>
+      (0 until n).map(u => UserEvent(u.toLong,
+        new Timestamp(base + wave * 60000L + u % 997), steps(wave)))
+        .toDS().coalesce(2).write.parquet(s"$dir/w$wave")
     }
+    Seq(40L, 81L).zipWithIndex.foreach { case (days, i) =>
+      Seq(UserEvent(-1L, new Timestamp(base + days * 86400000L), "other"))
+        .toDS().coalesce(1).write.parquet(s"$dir/sentinel$i")
+    }
+    val in = spark.readStream
+      .schema(org.apache.spark.sql.Encoders.product[UserEvent].schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir + "/*").as[UserEvent]
+    val (streamed, _) = runToMemory(
+      funnelStream(in, steps, "0 seconds", idleMs).toDF(), "rocks_wide")
+    val rows = streamed.collect()
+    // sentinel key never matches step 0 → emits nothing; every real
+    // user finalizes exactly once
+    assert(rows.length == n, s"got ${rows.length} rows, want $n")
+    assert(rows.count(_.getLong(2) == 2L) == n,
+      "every user must finalize at depth 2 (view+click, no purchase)")
   }
 }

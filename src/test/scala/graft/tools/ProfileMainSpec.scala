@@ -5,7 +5,6 @@ import java.io.ByteArrayOutputStream
 import scala.util.Try
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.SparkSession
 
 import graft.{SparkEntry, SparkSpec}
 
@@ -14,22 +13,17 @@ import graft.{SparkEntry, SparkSpec}
   */
 class ProfileMainSpec extends SparkSpec {
 
-  /** The main's outcome and stdout. It builds its own session through
-    * `Sessions.local`; clearing the default session first makes that a
-    * new session on the shared context, so the test session's conf
-    * stays as it was.
+  /** The main's outcome and stdout. Its `Sessions.local()` returns the
+    * shared session, whose builder re-applies the engine's runtime confs
+    * (already in place) and sizes the shuffle partitions to the host's
+    * cores; the shared session's value is put back afterwards.
     */
   private def profile(args: String*): (Try[Unit], String) = {
-    val base = spark
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
     val out = new ByteArrayOutputStream()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
     val result =
       try Try(Console.withOut(out)(Profile.main(args.toArray)))
-      finally {
-        SparkSession.setDefaultSession(base)
-        SparkSession.setActiveSession(base)
-      }
+      finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
     (result, out.toString("UTF-8"))
   }
 
