@@ -74,12 +74,21 @@ object Sessions {
     "spark.sql.codegen.cache.maxEntries" -> "10000"
   )
 
+  /** A `local[cores]` session. A JVM has one SparkContext: when a
+    * session is already live, `getOrCreate` returns it with its master
+    * unchanged, so the shuffle partitions follow that context's
+    * parallelism rather than `cores`.
+    */
   def local(cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {
+    val partitions = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
+      .filterNot(_.sparkContext.isStopped)
+      .fold(cores)(_.sparkContext.defaultParallelism)
     val b = SparkSession
       .builder()
       .appName("graft")
       .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.shuffle.partitions", partitions.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       // the engine's full session surface: SQL functions, the txlog

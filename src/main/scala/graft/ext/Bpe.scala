@@ -102,42 +102,12 @@ object Bpe {
   /** Train `nMerges` BPE merges. Returns the ordered merge list —
     * the learned tokenizer. Each round: exact pair count (vocab-sized
     * shuffle), deterministic argmax to the driver (ONE row), fold the
-    * merge through the symbol table. `localCheckpoint` per round keeps
-    * lineage flat (the [[PageRank]] recipe); the symbol table is
-    * reused across rounds via persist.
+    * merge through the symbol table. The rounds run on
+    * [[Rounds.trainMerges]], which cuts the symbol table's lineage
+    * every round.
     */
   def train(docs: DataFrame, textCol: String, nMerges: Int): Seq[(String, String)] =
     trainFromWords(wordFreq(docs, textCol), nMerges)
-
-  /** Greedy non-overlapping selection from a ranked candidate list:
-    * take pairs in rank order, skipping any that shares a symbol with
-    * an already-taken pair. Symbol-disjoint pairs have EXACTLY
-    * invariant counts under each other's application (a merge only
-    * creates/destroys pairs involving its own operands or product),
-    * so applying a disjoint batch in rank order equals running the
-    * classic one-merge loop whenever no skip occurred — and is a
-    * documented rank-order approximation when one did.
-    */
-  private[ext] def pickDisjoint(ranked: Seq[(String, String)],
-      want: Int): Seq[(String, String)] = {
-    val used = scala.collection.mutable.Set.empty[String]
-    val out = Seq.newBuilder[(String, String)]
-    var taken = 0
-    val it = ranked.iterator
-    while (taken < want && it.hasNext) {
-      val (l, r) = it.next()
-      if (!used(l) && !used(r)) {
-        out += ((l, r)); used += l; used += r; taken += 1
-      }
-    }
-    out.result()
-  }
-
-  /** Test hook: training rounds (= Spark job waves) of the most recent
-    * trainFromWords call — lets the batching spec pin
-    * rounds ≤ ⌈nMerges / batchMerges⌉ without instrumenting Spark.
-    */
-  @volatile private[ext] var lastTrainRounds: Int = 0
 
   /** [[train]] from a prebuilt `(word, freq)` table — callers that
     * also tokenize should build the vocab table ONCE (checkpointed)
@@ -159,43 +129,9 @@ object Bpe {
     * classic sequence exactly; BpeBatchSpec pins this).
     */
   def trainFromWords(words: DataFrame, nMerges: Int,
-      batchMerges: Int = 1): Seq[(String, String)] = {
-    require(nMerges >= 0)
-    require(batchMerges >= 1, "batchMerges must be >= 1")
-    // LAZY checkpoints throughout the loop: each round's top-pair
-    // collect is the next action anyway, so it materializes the symbol
-    // table inside its own job — one job per round instead of two —
-    // and the LAST round's fold (consumed by nobody: the merge list is
-    // the result) never materializes at all. Plans stay flat (the
-    // checkpoint leaf is a LogicalRDD either way), which is what the
-    // checkpoint is here for (the nested merge-fold AQE pathology in
-    // the scaladoc).
-    var syms = initialSymbols(words).localCheckpoint(eager = false)
-    val merges = Seq.newBuilder[(String, String)]
-    var done = false
-    var count = 0
-    var rounds = 0
-    while (count < nMerges && !done) {
-      val want = math.min(batchMerges, nMerges - count)
-      // fetch enough ranked candidates to survive overlap skips; the
-      // driver rows stay bounded by the batch size, never the vocab
-      val top = pairCounts(syms)
-        .orderBy(col("pair_count").desc, col("left"), col("right"))
-        .limit(want * 4 + 8).collect()
-        .map(r => (r.getString(0), r.getString(1))).toSeq
-      val picked = pickDisjoint(top, want)
-      if (picked.isEmpty) done = true // every word fused to one symbol
-      else {
-        merges ++= picked
-        count += picked.size
-        syms = syms.withColumn("syms", foldMerges(col("syms"), picked))
-          .localCheckpoint(eager = false)
-      }
-      rounds += 1
-    }
-    lastTrainRounds = rounds
-    merges.result()
-  }
+      batchMerges: Int = 1): Seq[(String, String)] =
+    Rounds.trainMerges(initialSymbols(words).localCheckpoint(eager = false),
+      nMerges, batchMerges, pairCounts, "pair_count", foldMerges)._1
 
   /** Tokenize words with a trained merge list: split to chars and fold
     * the whole merge list in order via [[foldMerges]] — the inference

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Shared centroid-assignment kernel for the k-means family
   * ([[SemDedup]], [[SimilaritySearch.ivfTopK]]).
@@ -288,11 +288,11 @@ object CentroidAssign {
       .toArray.sortBy(_._1)
   }
 
-  /** The Lloyd recipe [[SimilaritySearch.ivfTopK]] pioneered,
-    * extracted for NEW cell-index call sites (existing sites keep
-    * their inline copies — their init order is oracle-pinned):
+  /** The Lloyd recipe of [[SimilaritySearch.ivfTopK]] and
+    * [[ScalarQuantization.ivfSqTopK]]:
     * md5-scattered seeding (deterministic), `iters` rounds of
-    * assign + per-dimension mean. The SEEDING is bit-reproducible;
+    * assign + per-dimension mean; a round whose cells all come back
+    * empty keeps the previous centroids. The SEEDING is bit-reproducible;
     * the per-round `avg()` over doubles is order-dependent, so the
     * trained centroids may differ in low-order bits across
     * partitionings — downstream consumers must gate on recall (as
@@ -318,5 +318,24 @@ object CentroidAssign {
       if (means.nonEmpty) centroids = means
     }
     centroids
+  }
+
+  /** The IVF probe join: `probed` (one row per query and probed cell)
+    * equi-joined with `indexed` on `cell`. The hint is only safe while
+    * the probes stay executor-memory-small ("probe a corpus with a
+    * handful of queries"), so the probe side broadcasts while
+    * `probeEst`, the caller's byte estimate of the exploded probes, is
+    * within the session broadcast threshold, and both sides shuffle on
+    * the cell past it. (The shuffle path's parallelism is bounded by
+    * nCells; size nCells ≥ cluster cores for bulk probes, and AQE
+    * skew-join splits hot cells.)
+    */
+  def probeJoin(probed: DataFrame, indexed: DataFrame,
+      probeEst: BigInt): DataFrame = {
+    val bcLimit = BigInt(
+      probed.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+    if (bcLimit > 0 && probeEst <= bcLimit)
+      org.apache.spark.sql.functions.broadcast(probed).join(indexed, Seq("cell"))
+    else probed.join(indexed, Seq("cell"))
   }
 }

@@ -21,26 +21,18 @@ import org.apache.spark.sql.functions._
   * round — bounded, deterministic, mirrored exactly in the oracle.
   *
   * Scale shape: per round, one hash shuffle keyed on src (hub pull)
-  * and one on dst (authority pull); the L1 total is a single-row
-  * aggregate broadcast back via crossJoin (the [[TfIdf]] scalar
-  * pattern — no driver collect); each round's pull is
+  * and one on dst (authority pull). Each round's pull is eagerly
   * `localCheckpoint`ed because it feeds two consumers (total + next
-  * pull) — per-round materialization, not PageRank's every-k cadence,
-  * is what keeps the plan linear in `iters`. Edge-less nodes stay out
-  * of the iteration entirely (their score is identically 0) and are
-  * zero-filled by one census join at the output.
+  * pull), and its L1 total rides on that checkpoint job as an observed
+  * metric that comes back as a literal, so the rounds cut on
+  * [[Rounds.checkpointObserved]] rather than [[Rounds.fixed]]'s lazy
+  * cut. Edge-less nodes stay out of the iteration entirely (their
+  * score is identically 0) and are zero-filled by one census join at
+  * the output.
   */
 object Hits {
 
   val Scale = 1000000000000L // 10^12 fixed-point
-
-  /** Node-count bound for broadcasting a per-round score frame
-    * ((node, score_e12) rows, ~24 B each ⇒ ~25 MB at the bound)
-    * instead of checkpointing it — the operator KNOWS |nodes| exactly,
-    * so the broadcast-vs-materialize choice is a driver scalar, not a
-    * planner estimate. Scale-adaptive: big graphs keep the checkpoint.
-    */
-  val BroadcastableNodes = 1000000L
 
   /** (node, hub_e12, auth_e12) after `iters` full rounds (authority
     * update then hub update) over `edges(srcCol, dstCol)`. Node set =
@@ -53,14 +45,8 @@ object Hits {
       dstCol: String,
       iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).cache()
-    val nodes0 = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-    val n = nodes0.count() // eager, one driver scalar
-    // graph-sized width for the node cache ([[Rounds.width]])
-    val parts = Rounds.width(edges.sparkSession, n, 2000000L)
-    val nodes = nodes0.coalesce(parts).cache()
+    val g = Rounds.graph(edges, srcCol, dstCol)
+    val (e, n) = (g.edges, g.n)
 
     // x·10¹² DIV Σx in exact integer arithmetic. The L1 total rides on
     // the pull's checkpoint job ([[Rounds.checkpointObserved]]) as an
@@ -82,7 +68,7 @@ object Hits {
           s"DIV CAST('$totLit' AS DECIMAL(38,0)) AS BIGINT)").as(valCol))
     }
 
-    var hub = nodes.withColumn("hub_e12", lit(Scale / math.max(n, 1L)))
+    var hub = g.nodes.withColumn("hub_e12", lit(Scale / math.max(n, 1L)))
     var auth: DataFrame = null
     for (i <- 1 to iters) {
       // sums ride DECIMAL so a hub-heavy node set can never wrap an
@@ -102,10 +88,10 @@ object Hits {
       // sizeInBytes used to buy (the r17 lazy attempt regressed to a
       // sort-merge of the edges precisely because the un-checkpointed
       // plan lost the estimate). Above the bound the checkpoint
-      // returns. Values are unaffected either way: integer arithmetic,
-      // spec-pinned partition invariance.
+      // returns ([[Rounds.broadcastable]]). Values are unaffected
+      // either way: integer arithmetic, spec-pinned partition invariance.
       def scoreFrame(norm: DataFrame): DataFrame =
-        if (n <= BroadcastableNodes) broadcast(norm)
+        if (Rounds.broadcastable(n)) broadcast(norm)
         else norm.localCheckpoint()
       auth = scoreFrame(l1Normalize(araw, "auth_e12"))
       val hraw = e
@@ -115,14 +101,14 @@ object Hits {
       hub = scoreFrame(l1Normalize(hraw, "hub_e12"))
     }
     // one zero-fill join against the node census at the very end
-    val out = nodes
+    val out = g.nodes
       .join(hub, Seq("node"), "left")
       .join(auth, Seq("node"), "left")
       .select(col("node"),
         coalesce(col("hub_e12"), lit(0L)).as("hub_e12"),
         coalesce(col("auth_e12"), lit(0L)).as("auth_e12"))
       .localCheckpoint()
-    e.unpersist(); nodes.unpersist()
+    g.release()
     out
   }
 }

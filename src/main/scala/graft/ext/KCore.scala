@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   * when callers need proof.
   *
   * Scale shape: per round, one degree hash-agg and two left-semi joins
-  * keyed on the vertex — no driver state, lineage cut per round (the
-  * iterative-operator recipe shared with [[ConnectedComponents]],
-  * [[PageRank]], [[ShortestPaths]]).
+  * keyed on the vertex — nothing collected; the rounds run on
+  * [[Rounds.fixed]], whose lazy per-round cut lets the keep side and
+  * both semi-join probes of round r+1 share round r's blocks.
   */
 object KCore {
 
@@ -35,25 +35,15 @@ object KCore {
   def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var e = edges.select(col("a"), col("b"))
     def degrees(ed: DataFrame): DataFrame =
       ed.select(explode(array(col("a"), col("b"))).as("v"))
         .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    var r = 0
-    while (r < rounds) {
-      r += 1
+    // no round's result is read back, so no cut is eager
+    val e = Rounds.fixed(edges.select(col("a"), col("b")), rounds,
+        materialize = false) { e =>
       val keep = degrees(e).filter(col("deg") >= k).select(col("v"))
-      // LAZY checkpoint: no per-round driver scalar is needed, so the
-      // rounds materialize inside the consuming job (one job for the
-      // whole peel instead of one per round) while each round's leaf
-      // stays a flat LogicalRDD — plan size and join planning (stats
-      // come from the origin plan either way) are unchanged, and each
-      // round's blocks still compute exactly once (the keep-side and
-      // both semi-join probes of round r+1 share round r's blocks).
-      e = e
-        .join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
+      e.join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
-        .localCheckpoint(eager = false)
     }
     degrees(e)
   }

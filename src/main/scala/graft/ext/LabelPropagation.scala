@@ -20,10 +20,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: per round one (node,label) count aggregate and one
   * node-keyed window for the argmax — both plain hash exchanges on
-  * frames bounded by the neighbor-label multiset; labels are
-  * `localCheckpoint`ed per round (flat lineage, [[ConnectedComponents]]
-  * recipe). Edges are taken as DIRECTED adjacency: pass a symmetrized
-  * frame for undirected semantics (the q169 gate does).
+  * frames bounded by the neighbor-label multiset; the rounds run on
+  * [[Rounds.fixed]] (flat lineage). Edges are taken as DIRECTED
+  * adjacency: pass a symmetrized frame for undirected semantics (the
+  * q169 gate does).
   */
 object LabelPropagation {
 
@@ -38,18 +38,13 @@ object LabelPropagation {
       dstCol: String,
       iters: Int): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).cache()
-    val nodes0 = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-    // graph-sized width for the node cache ([[Rounds.width]]); the
-    // count doubles as the cache materialization
-    val n = nodes0.count()
-    val parts = Rounds.width(edges.sparkSession, n, 2000000L)
-    val nodes = nodes0.coalesce(parts).cache()
-
-    var labels = nodes.withColumn("label", col("node"))
-    for (i <- 1 to iters) {
+    val g = Rounds.graph(edges, srcCol, dstCol)
+    // the label frame has EXACTLY n rows, so the per-round joins
+    // broadcast by that exact count ([[Rounds.broadcastable]])
+    def small(df: DataFrame): DataFrame =
+      if (Rounds.broadcastable(g.n)) broadcast(df) else df
+    val labels = Rounds.fixed(g.nodes.withColumn("label", col("node")), iters,
+        materialize = true) { labels =>
       // argmax(count, ties smallest label) as ONE hash aggregate:
       // max(struct(c, ~label)) picks the largest count and, among
       // ties, the largest ~label = the SMALLEST label (bitwise NOT is
@@ -59,31 +54,20 @@ object LabelPropagation {
       // sort of the neighbor-label multiset; the second aggregate is
       // map-side partial and node-keyed (guide §2.3/§2.4).
       // LabelPropagationSpec pins equality against the window form.
-      // the label frame has EXACTLY n rows (a driver scalar), so the
-      // broadcast-vs-shuffle choice for the per-round joins needs no
-      // planner estimate (the [[Hits.BroadcastableNodes]] rationale)
-      def small(df: DataFrame): DataFrame =
-        if (n <= Hits.BroadcastableNodes) broadcast(df) else df
-      val picked = e
+      val picked = g.edges
         .join(small(labels).withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node"), col("label"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("node"))
         .agg(max(struct(col("c"), bitwise_not(col("label")).as("nl"))).as("m"))
         .select(col("node"), bitwise_not(col("m.nl")).as("label"))
-      // intermediate rounds stay LAZY (plans are flat either way —
-      // the checkpoint leaf is a LogicalRDD, so round k+1's plan does
-      // not grow — and the blocks still materialize exactly once,
-      // inside the consuming job); only the final round is eager so
-      // the result is materialized before the caches are dropped.
-      labels = nodes
+      g.nodes
         .join(small(picked).withColumnRenamed("label", "new_label"),
           Seq("node"), "left")
         .select(col("node"),
           coalesce(col("new_label"), col("node")).as("label"))
-        .localCheckpoint(eager = i == iters)
     }
-    e.unpersist(); nodes.unpersist()
+    g.release()
     labels
   }
 }

@@ -193,7 +193,10 @@ object ProductQuantization {
     * the IVF cell stage shared by [[ivfAdcTopK]] and
     * [[ivfAdcResidualTopK]]. Deterministic md5-ordered seeding; cell
     * ids are 0..nCells−1 throughout (the residual path indexes a
-    * value literal by them).
+    * value literal by them). Not [[CentroidAssign.trainCells]],
+    * whose rule differs: an empty cell keeps its previous centroid
+    * here, while `trainCells` drops it (its set becomes the non-empty
+    * cells' means), so the two can train different cells.
     */
   private[ext] def trainCoarse(c: DataFrame, nCells: Int,
       iters: Int): Array[(Int, Seq[Double])] = {
@@ -288,8 +291,6 @@ object ProductQuantization {
   private def scoreProbes(probed: DataFrame, indexed: DataFrame,
       queries: DataFrame, nProbe: Int, topK: Int,
       model: PqModel): DataFrame = {
-    val bcLimit = BigInt(
-      probed.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
     // each probed row carries the m·k ADC table (doubles) + base/ids —
     // dominant payload the raw `queries` stats cannot see (the frame
     // only holds the dim-double embedding), so estimate rows from the
@@ -300,12 +301,8 @@ object ProductQuantization {
     val rowEst = qStats.rowCount.getOrElse(
       (qStats.sizeInBytes / BigInt(model.dim.toLong * 8L).max(1)).max(1))
     val tableBytesPerRow = BigInt(model.m.toLong * model.k * 8L + 96L)
-    val probeEst =
-      qStats.sizeInBytes * nProbe + rowEst * nProbe * tableBytesPerRow
-    val probeJoin =
-      if (bcLimit > 0 && probeEst <= bcLimit)
-        broadcast(probed).join(indexed, Seq("cell"))
-      else probed.join(indexed, Seq("cell"))
+    val probeJoin = CentroidAssign.probeJoin(probed, indexed,
+      qStats.sizeInBytes * nProbe + rowEst * nProbe * tableBytesPerRow)
     val scored = probeJoin
       .where(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),

@@ -80,8 +80,8 @@ object ScalarQuantization {
     * ([[CentroidAssign.trainCells]], same deterministic recipe as
     * [[SimilaritySearch.ivfTopK]]), then the asymmetric int8 scan runs
     * ONLY inside the probed cells. Probe side broadcasts below the
-    * session threshold, shuffles on the cell key past it (the
-    * [[SimilaritySearch]] guard). This is FAISS's `IVF,SQ8` index as
+    * session threshold, shuffles on the cell key past it
+    * ([[CentroidAssign.probeJoin]]). This is FAISS's `IVF,SQ8` index as
     * two equi-joined DataFrame stages; memory per candidate is dim
     * bytes, work per query is nProbe cells.
     */
@@ -104,14 +104,8 @@ object ScalarQuantization {
         explode(transform(
           CentroidAssign.nearestCells(col("qd"), centroids, nProbe),
           _.getField("cell"))).as("cell"))
-    val bcLimit = BigInt(corpus.sparkSession.sessionState.conf
-      .autoBroadcastJoinThreshold)
-    val probeEst =
-      queries.queryExecution.optimizedPlan.stats.sizeInBytes * nProbe
-    val joined =
-      if (bcLimit > 0 && probeEst <= bcLimit)
-        broadcast(probed).join(indexed, Seq("cell"))
-      else probed.join(indexed, Seq("cell"))
+    val joined = CentroidAssign.probeJoin(probed, indexed,
+      queries.queryExecution.optimizedPlan.stats.sizeInBytes * nProbe)
     val scored = joined
       .where(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),

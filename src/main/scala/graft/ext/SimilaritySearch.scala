@@ -255,55 +255,21 @@ object SimilaritySearch {
       .withColumn("vd", transform(col("cv"), _.cast("double")))
       .cache()
 
-    // deterministic init: cells seeded by hash-scattered corpus vectors
-    var centroids: Array[(Int, Seq[Double])] = c
-      .select(col("cand_id"), col("vd"))
-      .orderBy(md5(col("cand_id").cast("string"))).limit(nCells)
-      .collect().zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](1)) }
-
-    // nearest cells by adjusted distance ‖c‖² − 2·v·c (same argmin as
-    // true L2; the v·c term runs through the native dot product).
-    // Value-literal kernel — see CentroidAssign for the codegen-cache
-    // rationale.
-    def nearestCells(vecD: Column, cents: Array[(Int, Seq[Double])], take: Int): Column =
-      CentroidAssign.nearestCells(vecD, cents, take)
-
-    // Lloyd rounds: assign to nearest cell, recompute cell means — one
-    // mapper-only dense aggregate per round (CentroidAssign.cellMeans)
-    for (_ <- 1 to iters) {
-      val assigned = c.select(col("vd"),
-        element_at(nearestCells(col("vd"), centroids, 1), 1)
-          .getField("cell").as("cell"))
-      val means = CentroidAssign.cellMeans(assigned)
-        .map { case (i, v) => (i, v.toSeq: Seq[Double]) }
-      if (means.nonEmpty) centroids = means
-    }
+    // deterministic md5-seeded Lloyd cells ([[CentroidAssign.trainCells]])
+    val centroids = CentroidAssign.trainCells(c, nCells, iters)
 
     val indexed = c.select(col("cand_id"), col("vd"),
-      element_at(nearestCells(col("vd"), centroids, 1), 1)
+      element_at(CentroidAssign.nearestCells(col("vd"), centroids, 1), 1)
         .getField("cell").as("cell"))
     val probed = queries
       .select(col(idCol).as("query_id"),
         transform(col(vecCol), _.cast("double")).as("qd"))
       .select(col("query_id"), col("qd"),
-        explode(transform(nearestCells(col("qd"), centroids, nProbe),
+        explode(transform(
+          CentroidAssign.nearestCells(col("qd"), centroids, nProbe),
           _.getField("cell"))).as("cell"))
-    // Probe-side broadcast guard: the hint is only correct while
-    // queries×nProbe stays executor-memory-small ("probe a corpus with
-    // a handful of queries"). A bulk probe (say 10⁹ queries) must
-    // shuffle on cell instead — estimate the exploded probe size from
-    // the query frame's optimizer stats × nProbe and fall back to a
-    // shuffle join past the session broadcast threshold. (The shuffle
-    // path's parallelism is bounded by nCells; size nCells ≥ cluster
-    // cores for bulk probes, and AQE skew-join splits hot cells.)
-    val bcLimit = BigInt(
-      corpus.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
-    val probeEst =
-      queries.queryExecution.optimizedPlan.stats.sizeInBytes * nProbe
-    val probeJoin =
-      if (bcLimit > 0 && probeEst <= bcLimit) broadcast(probed).join(indexed, Seq("cell"))
-      else probed.join(indexed, Seq("cell"))
+    val probeJoin = CentroidAssign.probeJoin(probed, indexed,
+      queries.queryExecution.optimizedPlan.stats.sizeInBytes * nProbe)
     val scored = probeJoin
       .where(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),

@@ -90,9 +90,6 @@ object WordPiece {
           .otherwise(concat(out, array(s)))))
   }
 
-  /** Test hook mirroring [[Bpe.lastTrainRounds]]. */
-  @volatile private[ext] var lastTrainRounds: Int = 0
-
   /** Train `nMerges` likelihood-scored merges from a `(word, freq)`
     * table; returns the model (merges + vocabulary). The alphabet
     * (every initial symbol of the corpus) is always in the vocab, so
@@ -107,39 +104,15 @@ object WordPiece {
     */
   def trainFromWords(words: DataFrame, nMerges: Int,
       batchMerges: Int = 1): Model = {
-    require(nMerges >= 0)
-    require(batchMerges >= 1, "batchMerges must be >= 1")
-    // LAZY checkpoints (the [[Bpe.trainFromWords]] recipe): each
-    // round's collect materializes the symbol table inside its own
-    // job, and the final fold (consumed by nobody) never runs. The
-    // alphabet census reads the checkpointed syms frame itself — same
-    // rows, and its collect is what materializes the initial table.
-    var syms = initialSymbols(words).localCheckpoint(eager = false)
+    // the rounds run on [[Rounds.trainMerges]]; the alphabet census
+    // reads the cut initial table itself — same rows, and its collect
+    // is what materializes the table before round 1
+    val syms = initialSymbols(words).localCheckpoint(eager = false)
     val alphabet = syms
       .select(explode(col("syms")).as("sym"))
       .distinct().collect().map(_.getString(0)).toSet
-    val merges = Seq.newBuilder[(String, String)]
-    var done = false
-    var count = 0
-    var rounds = 0
-    while (count < nMerges && !done) {
-      val want = math.min(batchMerges, nMerges - count)
-      val top = pairScores(syms)
-        .orderBy(col("score").desc, col("left"), col("right"))
-        .limit(want * 4 + 8).collect()
-        .map(r => (r.getString(0), r.getString(1))).toSeq
-      val picked = Bpe.pickDisjoint(top, want)
-      if (picked.isEmpty) done = true
-      else {
-        merges ++= picked
-        count += picked.size
-        syms = syms.withColumn("syms",
-          foldMerges(col("syms"), picked)).localCheckpoint(eager = false)
-      }
-      rounds += 1
-    }
-    lastTrainRounds = rounds
-    val ms = merges.result()
+    val (ms, _) = Rounds.trainMerges(syms, nMerges, batchMerges,
+      pairScores, "score", foldMerges)
     Model(ms, alphabet ++ ms.map { case (l, r) => joined(l, r) })
   }
 

@@ -43,7 +43,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // natively through SupportsReportStatistics, and dynamic file
     // pruning is Spark's own runtime filtering on the V2 scan — no
     // injected rule needed for either.
-    ext.injectPreCBORule(session => new TxLogCboStats(session))
+    ext.injectPreCBORule(_ => TxLogCboStats)
     ext.injectFunction((
       new FunctionIdentifier("graft_extract_json"),
       new ExpressionInfo(classOf[ExtractBalancedJsonExpr].getName,

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -18,17 +17,11 @@ import graft.sources.TxLogRelation
   * of the byte-size guess. Injected preCBO (before join reorder, which
   * is exactly who consumes this); tables where any live file lacks
   * stats keep the plain sizeInBytes path — exactness over coverage.
-  * Disable with `spark.graft.txlog.cboStats.enabled=false`.
   */
-class TxLogCboStats(session: SparkSession) extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean =
-    try session.conf.get("spark.graft.txlog.cboStats.enabled").toBoolean
-    catch { case _: Exception => true }
+object TxLogCboStats extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan transformUp {
+    plan transformUp {
       case lr @ LogicalRelation(r: TxLogRelation, _, None, _, _) =>
         r.catalogTableWithStats
           .map(ct => lr.copy(catalogTable = Some(ct)))

@@ -56,6 +56,11 @@ import graft.sources.TxStore.RichPath
   * here as serialized optimistic commits over object storage.
   */
 object TxLogTable {
+  /** Most distinct source keys a MERGE turns into per-column IN lists
+    * for file skipping; past it the key's [min, max] range is used.
+    */
+  private[sources] val DmlKeyInListMax = 100000
+
   /** The deletion-vector FILE KEY of a scanned row: the last two path
     * segments ("dir/part-file") of `_metadata.file_path` — what the
     * sidecars store in `_dv_file`. `substring_index` (a backward char
@@ -1262,7 +1267,7 @@ final class TxLogTable(spark: SparkSession,
   /** Skipping predicate (PHYSICAL names) a file must pass to possibly
     * hold a SOURCE KEY of a merge: per key column, membership in the
     * source's distinct value set (precise — ranges AND Blooms bite)
-    * up to `spark.graft.txlog.dmlKeyInListMax` distinct values, else
+    * up to [[TxLogTable.DmlKeyInListMax]] distinct values, else
     * the source's [min, max] range (coarse but still file-decisive on
     * a clustered table). Multi-column keys test column-wise — a
     * conservative superset of the true tuple match. `nullKeysMatch`
@@ -1282,9 +1287,7 @@ final class TxLogTable(spark: SparkSession,
       val p = cmap.getOrElse(k, k)
       AttributeReference(p, phys(phys.fieldIndex(p)).dataType)()
     }
-    val cap = spark.conf
-      .getOption("spark.graft.txlog.dmlKeyInListMax")
-      .map(_.toInt).getOrElse(100000)
+    val cap = TxLogTable.DmlKeyInListMax
     val keyCols = key.map(fcol)
     val distinctKeys =
       source.select(keyCols: _*).distinct().limit(cap + 1).collect()

@@ -1,5 +1,7 @@
 package graft.ext
 
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSpec
 
 /** Batched tokenizer training: top-m SYMBOL-DISJOINT merges per round
@@ -24,16 +26,28 @@ class BpeBatchSpec extends SparkSpec {
     Seq(("aa", 40L), ("bb", 30L), ("cc", 20L), ("dd", 10L))
       .toDF("word", "freq")
 
+  /** Merges and round count of the shared training loop, ranked and
+    * folded the way [[Bpe.trainFromWords]] does.
+    */
+  private def bpeRounds(words: DataFrame, n: Int, m: Int) =
+    Rounds.trainMerges(Bpe.initialSymbols(words), n, m,
+      Bpe.pairCounts, "pair_count", Bpe.foldMerges)
+
+  /** The same for [[WordPiece.trainFromWords]]. */
+  private def wordPieceRounds(words: DataFrame, n: Int, m: Int) =
+    Rounds.trainMerges(WordPiece.initialSymbols(words), n, m,
+      WordPiece.pairScores, "score", WordPiece.foldMerges)
+
   test("BPE: batched disjoint merges = classic sequence, in ceil(n/m) rounds") {
     val classic = Bpe.trainFromWords(disjointWords(), 4, batchMerges = 1)
-    assert(Bpe.lastTrainRounds == 4)
+    assert(bpeRounds(disjointWords(), 4, 1) == ((classic, 4)))
     assert(classic == Seq(("a", "a"), ("b", "b"), ("c", "c"), ("d", "d")))
     val batched = Bpe.trainFromWords(disjointWords(), 4, batchMerges = 4)
     assert(batched == classic)
-    assert(Bpe.lastTrainRounds == 1, s"rounds=${Bpe.lastTrainRounds}")
+    assert(bpeRounds(disjointWords(), 4, 4) == ((classic, 1)))
     // m=3 over 4 merges: 2 rounds (3 + 1)
     assert(Bpe.trainFromWords(disjointWords(), 4, batchMerges = 3) == classic)
-    assert(Bpe.lastTrainRounds == 2)
+    assert(bpeRounds(disjointWords(), 4, 3) == ((classic, 2)))
     // tokenization under the batched merges is identical too
     val tok = Bpe.tokenizeWords(disjointWords(), batched)
       .orderBy("word").collect().map(_.getSeq[String](2).toSeq).toSeq
@@ -49,14 +63,15 @@ class BpeBatchSpec extends SparkSpec {
     val batched = Bpe.trainFromWords(words, 2, batchMerges = 2)
     assert(classic == Seq(("a", "b"), ("ab", "c")))
     assert(batched == classic)
-    assert(Bpe.lastTrainRounds == 2) // the overlap forces a second round
+    // the overlap forces a second round
+    assert(bpeRounds(words, 2, 2) == ((classic, 2)))
   }
 
   test("WordPiece: batched disjoint merges = classic model, fewer rounds") {
     val classic = WordPiece.trainFromWords(disjointWords(), 4, batchMerges = 1)
-    assert(WordPiece.lastTrainRounds == 4)
+    assert(wordPieceRounds(disjointWords(), 4, 1) == ((classic.merges, 4)))
     val batched = WordPiece.trainFromWords(disjointWords(), 4, batchMerges = 4)
-    assert(WordPiece.lastTrainRounds == 1)
+    assert(wordPieceRounds(disjointWords(), 4, 4) == ((classic.merges, 1)))
     assert(batched.merges == classic.merges)
     assert(batched.vocab == classic.vocab)
   }

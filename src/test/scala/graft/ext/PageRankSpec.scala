@@ -57,17 +57,33 @@ class PageRankSpec extends SparkSpec {
     assert(out.values.toSet == Set(S / 3L))
   }
 
-  test("checkpoint cadence never changes a bit") {
-    val edges = for { a <- 1L to 25L; b <- Seq((a % 25) + 1, (a * 3 % 25) + 1) }
-      yield a -> b
-    val df = edges.toDF("src", "dst")
-    val every1 = PageRank.run(df, "src", "dst", 7, checkpointEvery = 1)
-      .as[(Long, Long)].collect().toMap
-    val every3 = PageRank.run(df, "src", "dst", 7, checkpointEvery = 3)
-      .as[(Long, Long)].collect().toMap
-    val never = PageRank.run(df, "src", "dst", 7, checkpointEvery = 100)
-      .as[(Long, Long)].collect().toMap
-    assert(every1 == every3 && every3 == never)
+  test("lineage cuts never change a bit: the two-node cycle over seven rounds") {
+    // every round of a↔b gives base + 85% of S/2, so any round count
+    // lands on the same hand-checked value; Rounds.fixed cuts every
+    // round's lineage, so seven rounds read across six cuts
+    val expected = (S / 100L) * 15L / 2L + 85L * (S / 2L) / 100L
+    val out = run(Seq(1L -> 2L, 2L -> 1L), 7)
+    assert(out == Map(1L -> expected, 2L -> expected))
+  }
+
+  test("run equals personalized with every node a seed, under any partitioning") {
+    val fixtures: Seq[(Seq[(Long, Long)], Int)] = Seq(
+      (Seq(1L -> 2L, 2L -> 1L), 3),
+      (Seq(1L -> 2L, 3L -> 2L), 2),
+      (Seq(1L -> 2L, 1L -> 2L, 1L -> 3L, 2L -> 1L, 3L -> 1L), 1),
+      (Seq(1L -> 2L, 2L -> 3L, 3L -> 1L), 0),
+      (for { a <- 1L to 40L; b <- Seq((a % 40) + 1, (a * 7 % 40) + 1) }
+        yield a -> b, 5))
+    for ((edges, iters) <- fixtures) {
+      val every = edges.flatMap { case (a, b) => Seq(a, b) }.distinct.toDF("node")
+      for (df <- Seq(edges.toDF("src", "dst"), edges.toDF("src", "dst").repartition(13))) {
+        val plain = PageRank.run(df, "src", "dst", iters)
+          .as[(Long, Long)].collect().toMap
+        val seeded = PageRank.personalized(df, "src", "dst", every, iters)
+          .as[(Long, Long)].collect().toMap
+        assert(plain == seeded, s"iters=$iters edges=$edges")
+      }
+    }
   }
 
   test("personalized: teleport lands only on seeds; trust decays with distance") {

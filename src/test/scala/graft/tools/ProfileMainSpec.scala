@@ -15,15 +15,11 @@ class ProfileMainSpec extends SparkSpec {
 
   /** The main's outcome and stdout. Its `Sessions.local()` returns the
     * shared session, whose builder re-applies the engine's runtime confs
-    * (already in place) and sizes the shuffle partitions to the host's
-    * cores; the shared session's value is put back afterwards.
+    * (already in place).
     */
   private def profile(args: String*): (Try[Unit], String) = {
-    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
     val out = new ByteArrayOutputStream()
-    val result =
-      try Try(Console.withOut(out)(Profile.main(args.toArray)))
-      finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    val result = Try(Console.withOut(out)(Profile.main(args.toArray)))
     (result, out.toString("UTF-8"))
   }
 
