@@ -68,8 +68,11 @@ object Rounds {
 
   /** `rounds` applications of `step` to `init`. Each round's result is
     * cut from its lineage with a lazy `localCheckpoint`: the plan of
-    * round k+1 starts at a LogicalRDD whatever k is, and the blocks
-    * compute once, inside the job that first reads them. With
+    * round k+1 starts at a LogicalRDD whatever k is. "Lazy" holds for
+    * the final stage only: under adaptive execution the cut runs the
+    * round's shuffle-map stages at the call, one job each
+    * (`TxLogCommitJobsSpec` pins this), and the blocks of the last
+    * stage compute once, inside the job that first reads them. With
     * `materialize` the last round's cut is eager, for callers that
     * release caches the result reads; zero rounds return `init`.
     */

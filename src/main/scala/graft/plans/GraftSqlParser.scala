@@ -561,19 +561,26 @@ case class GraftDeleteCommand(root: String, condition: Option[String])
   }
 }
 
-/** DESCRIBE HISTORY txlog.`root` — the commit log, newest first. */
+/** DESCRIBE HISTORY txlog.`root` — the commit log, newest first, with
+  * each commit's operation metrics (null where the commit recorded
+  * none).
+  */
 case class GraftHistoryCommand(target: Either[String, Seq[String]])
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(
     AttributeReference("version", LongType, nullable = false)(),
     AttributeReference("action", StringType, nullable = false)(),
-    AttributeReference("timestamp_millis", LongType, nullable = false)())
-  override def run(sparkSession: SparkSession): Seq[Row] =
-    new TxLogTable(sparkSession,
+    AttributeReference("timestamp_millis", LongType, nullable = false)(),
+    AttributeReference("operation_metrics",
+      org.apache.spark.sql.types.MapType(StringType, LongType,
+        valueContainsNull = false), nullable = true)())
+  override def run(sparkSession: SparkSession): Seq[Row] = {
+    val t = new TxLogTable(sparkSession,
       GraftSqlRewrite.resolveTarget(sparkSession, target))
-      .history().reverse.map {
-        case (v, action, ts) => Row(v, action, ts)
-      }
+    t.history().reverse.map {
+      case (v, action, ts) => Row(v, action, ts, t.metricsAt(v).orNull)
+    }
+  }
 }
 
 /** DESCRIBE DETAIL txlog.`root` — one snapshot-summary row (the Delta

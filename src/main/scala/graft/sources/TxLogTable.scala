@@ -8,7 +8,8 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.graft.v2bridge
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
@@ -113,6 +114,12 @@ object TxLogTable {
     * of every data-changing commit (SQL CHECK semantics: only FALSE
     * violates, NULL passes).
     */
+  /** `metrics` are the commit's operation metrics (Delta's DESCRIBE
+    * HISTORY `operationMetrics`): rows written, updated and deleted,
+    * files added and removed, bytes added and the commit's duration,
+    * all taken from the staging tasks' commit messages. Absent on
+    * manifests written before the field and on metadata-only commits.
+    */
   private[sources] case class Manifest(version: Long, action: String,
       add: Seq[String], schemaJson: String, tsMillis: Long,
       markers: Option[Map[String, String]] = None,
@@ -125,7 +132,24 @@ object TxLogTable {
       copyFiles: Option[Seq[String]] = None,
       minReader: Option[Int] = None,
       droppedCols: Option[Seq[String]] = None,
-      removed: Option[Seq[String]] = None)
+      removed: Option[Seq[String]] = None,
+      metrics: Option[Map[String, Long]] = None)
+
+  /** What one staging write produced: the data dir `name` with the
+    * files its tasks published, and the change dir with its row counts
+    * by `_change_type` when the frame carried change tags.
+    */
+  private[sources] final case class Staged(name: String,
+      files: Seq[StagedFile], changeDir: Option[String] = None,
+      changeRows: Map[String, Long] = Map.empty) {
+    /** Per-file skipping stats keyed "dir/part-file"; None when the
+      * write folded none (no stats columns, or no file).
+      */
+    def stats: Option[Map[String, FileStats]] = {
+      val m = files.flatMap(f => f.stats.map(s"$name/${f.name}" -> _)).toMap
+      if (m.isEmpty) None else Some(m)
+    }
+  }
 
   /** Protocol versioning (the Delta minReaderVersion idea): a manifest
     * whose correct interpretation REQUIRES a feature declares the
@@ -506,6 +530,7 @@ final class TxLogTable(spark: SparkSession,
       options: Map[String, String] = Map.empty,
       maxRetries: Int = 20): Long = {
     val files = RangedIo.listFiles(spark, glob).map(_._1)
+    val t0 = System.currentTimeMillis()
     commitLoop(maxRetries) { v =>
       require(v >= 0,
         s"copyInto needs an existing table (ensureExists first): $root")
@@ -517,10 +542,10 @@ final class TxLogTable(spark: SparkSession,
         val df = spark.read.format(format).options(options)
           .schema(schema).load(fresh: _*)
         val staged = stageData(df, checkConstraints = true)
-        Some(Manifest(0L, "append", Seq(staged), schema.json,
+        Some(Manifest(0L, "append", Seq(staged.name), schema.json,
           System.currentTimeMillis(),
           markers = Some(Map("copy_into" -> fresh.size.toString)),
-          copyFiles = Some(fresh)))
+          copyFiles = Some(fresh), metrics = metricsOf(t0, Seq(staged))))
       }
     }
   }
@@ -628,10 +653,12 @@ final class TxLogTable(spark: SparkSession,
     * (single pass, no extra action) — `assert_true` throws with the
     * constraint's name and expression on the first FALSE; NULL passes
     * (SQL CHECK semantics). Returns the frame unchanged when no
-    * constraints are live.
+    * constraints are live. With `gate`, only rows where it holds are
+    * checked (the data rows of a change-tagged frame).
     */
   private def enforce(df: DataFrame,
-      constraints: Map[String, String]): DataFrame = {
+      constraints: Map[String, String],
+      gate: Option[Column] = None): DataFrame = {
     if (constraints.isEmpty) return df
     import org.apache.spark.sql.functions.{assert_true, coalesce => sqlCoalesce, expr, lit}
     // an evolved batch may legally OMIT columns a constraint references
@@ -644,7 +671,8 @@ final class TxLogTable(spark: SparkSession,
     val base = missing.foldLeft(df)((d, c) => d.withColumn(c, lit(null)))
     val checked = constraints.foldLeft(base) { case (d, (name, sql)) =>
       d.withColumn(s"__check_$name",
-        assert_true(sqlCoalesce(expr(sql), lit(true)),
+        assert_true(gate.foldLeft(sqlCoalesce(expr(sql), lit(true)))(
+            (ok, g) => ok || !g),
           lit(s"CHECK constraint '$name' violated: $sql")))
     }
     // the filter keeps every row (assert_true yields NULL on pass) and
@@ -1115,7 +1143,7 @@ final class TxLogTable(spark: SparkSession,
     */
   private[sources] final case class TouchedSplit(kept: Seq[String],
       keptStats: Map[String, FileStats], keptCkpt: Option[String],
-      touchedPaths: Seq[String]) {
+      touchedPaths: Seq[String], touchedFiles: Long) {
     def touchedCount: Int = touchedPaths.size
   }
 
@@ -1196,6 +1224,7 @@ final class TxLogTable(spark: SparkSession,
     val kept = Seq.newBuilder[String]
     val keptStats = Map.newBuilder[String, FileStats]
     val touchedPaths = Seq.newBuilder[String]
+    var touchedFiles = 0L
     def keepStats(f: String): Unit =
       inline.get(f).foreach(fs => keptStats += f -> fs)
     live.foreach { e =>
@@ -1204,7 +1233,7 @@ final class TxLogTable(spark: SparkSession,
         // AND the verdict proves no touch; absent stats ⇒ touched
         if (coveredFileEntries.contains(e) && !touchedCovered.contains(e)) {
           kept += e; keepStats(e)
-        } else touchedPaths += dataFilePath(e)
+        } else { touchedPaths += dataFilePath(e); touchedFiles += 1 }
       } else {
         val files = store.list(dataDir.resolve(e))
           .filter(_.endsWith(".parquet")).map(f => s"$e/$f")
@@ -1213,6 +1242,7 @@ final class TxLogTable(spark: SparkSession,
           // some file carries no stat row: the whole dir rewrites —
           // keeping an unprovable file would be a lost update
           touchedPaths += dataDir.resolve(e).toString
+          touchedFiles += files.size
         } else {
           val (touchedF, keptF) = files.partition(touchedCovered.contains)
           if (touchedF.isEmpty) {
@@ -1221,12 +1251,13 @@ final class TxLogTable(spark: SparkSession,
           } else {
             keptF.foreach { f => kept += f; keepStats(f) }
             touchedF.foreach(f => touchedPaths += dataFilePath(f))
+            touchedFiles += touchedF.size
           }
         }
       }
     }
     TouchedSplit(kept.result(), keptStats.result(), priorCkpt,
-      touchedPaths.result())
+      touchedPaths.result(), touchedFiles)
   }
 
   /** Whether every live file key has an INLINE stat row (then the
@@ -1274,10 +1305,14 @@ final class TxLogTable(spark: SparkSession,
     * adds the IS NULL arm for DML whose key semantics group nulls
     * (the latest-wins merge window); the conditional MERGE joins by
     * equality where nulls never match, so it omits it.
+    *
+    * The key census counts each key's rows, largest count first, so
+    * with `rejectDuplicates` the same collect is the conditional
+    * MERGE's ambiguity gate: a source key with several rows throws.
     */
   private def sourceKeyPredicate(source: DataFrame, key: Seq[String],
       schema: StructType, cmap: Map[String, String],
-      nullKeysMatch: Boolean):
+      nullKeysMatch: Boolean, rejectDuplicates: Boolean = false):
       org.apache.spark.sql.catalyst.expressions.Expression = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.functions.{col => fcol, count, lit,
@@ -1289,8 +1324,15 @@ final class TxLogTable(spark: SparkSession,
     }
     val cap = TxLogTable.DmlKeyInListMax
     val keyCols = key.map(fcol)
+    val counted = source.groupBy(keyCols: _*).agg(count(lit(1)).as("count"))
     val distinctKeys =
-      source.select(keyCols: _*).distinct().limit(cap + 1).collect()
+      (if (rejectDuplicates) counted.orderBy(fcol("count").desc) else counted)
+        .limit(cap + 1).collect()
+    if (rejectDuplicates) {
+      val dupKey = distinctKeys.take(1).filter(_.getLong(key.size) > 1)
+      require(dupKey.isEmpty,
+        s"ambiguous MERGE: source has multiple rows for key ${dupKey.toSeq}")
+    }
     val colPreds: Seq[Expression] =
       if (distinctKeys.length <= cap) {
         key.zipWithIndex.map { case (k, i) =>
@@ -1902,6 +1944,19 @@ final class TxLogTable(spark: SparkSession,
   private[sources] def dropStagedDir(name: String): Unit =
     store.deleteRecursive(dataDir.resolve(name))
 
+  /** The stats the staging tasks of a write under `schema` (logical
+    * names) fold for `statsCols`/`bloomCols`, keyed by the physical
+    * names the files store.
+    */
+  private[sources] def statsSpecFor(schema: StructType,
+      statsCols: Seq[String], bloomCols: Seq[String]): Option[StatsSpec] = {
+    val cmap = currentColMap
+    StatsSpec.of(physSchema(schema, cmap),
+      statsCols.map(c => cmap.getOrElse(c, c)),
+      bloomCols.map(c => cmap.getOrElse(c, c)),
+      spark.sessionState.conf.sessionLocalTimeZone)
+  }
+
   /** Commit a dir the V2 writers already staged (the driver half of
     * [[TxLogBatchWrite]]): same optimistic loop and commit shape as
     * [[append]]/[[overwrite]]. CHECK constraints were enforced
@@ -1909,30 +1964,29 @@ final class TxLogTable(spark: SparkSession,
     * point the V1 staging job enforces at); the commit re-validates
     * with one batch-sized read only when the live set MOVED since the
     * writers bound theirs (a concurrent addConstraint — the same race
-    * guard [[append]] has). Stats collect off the staged dir exactly
-    * as the V1 path's do.
+    * guard [[append]] has). The stats came back with the writers'
+    * commit messages, as on the V1 path.
     */
-  private[sources] def commitStagedV2(dirName: String,
-      batchSchema: StructType, overwrite: Boolean,
-      statsCols: Seq[String], bloomCols: Seq[String],
+  private[sources] def commitStagedV2(staged: TxLogTable.Staged,
+      batchSchema: StructType, overwrite: Boolean, t0: Long,
       validatedConstraints: Map[String, String] = Map.empty,
       maxRetries: Int = 20,
-      markers: Map[String, String] = Map.empty): Long = {
-    val stats = statsOpt(dirName, batchSchema, statsCols, bloomCols)
+      markers: Map[String, String] = Map.empty): Long =
     commitLoop(maxRetries) { v =>
       val cs = constraintsAt(v)
       if (cs.nonEmpty && cs != validatedConstraints)
-        enforce(readPhysical(Seq(stagedDirPath(dirName)), batchSchema,
+        enforce(readPhysical(Seq(stagedDirPath(staged.name)), batchSchema,
           colMapAt(v)), cs).foreach(_ => ())
       val schema =
         if (v < 0 || overwrite) batchSchema
         else evolveSchema(manifestChainAt(v)._2, batchSchema, colMapAt(v),
           droppedColsAt(v).toSeq)
       Some(Manifest(0L, if (overwrite) "overwrite" else "append",
-        Seq(dirName), schema.json, System.currentTimeMillis(),
-        wrap(markers), stats))
+        Seq(staged.name), schema.json, System.currentTimeMillis(),
+        wrap(markers), staged.stats,
+        metrics = metricsOf(t0, Seq(staged),
+          if (overwrite) liveFileCount(v) else 0L)))
     }
-  }
 
   /** Reader protocol the snapshot's manifest actually requires —
     * the DESCRIBE DETAIL surface (derived from feature presence at
@@ -1986,6 +2040,11 @@ final class TxLogTable(spark: SparkSession,
     None
   }
 
+  /** Operation metrics of commit `v` (see [[TxLogTable.Manifest]]);
+    * None for commits that carry none.
+    */
+  def metricsAt(v: Long): Option[Map[String, Long]] = manifestAt(v).metrics
+
   /** (version, action, tsMillis) per commit, oldest first. */
   def history(): Seq[(Long, String, Long)] =
     (0L to currentVersion).flatMap { v =>
@@ -1997,21 +2056,39 @@ final class TxLogTable(spark: SparkSession,
 
   // ── write path ────────────────────────────────────────────────────
 
-  /** Write `df` as a fresh immutable data dir; returns its name. The
-    * dir is INERT until a manifest references it — a crash here leaks
-    * an orphan for [[vacuum]], never a half-visible table state.
+  /** Write `df` as a fresh immutable data dir — the one staging path
+    * of every txlog write. The dir is INERT until a manifest
+    * references it; a failed write drops it. Rows go through Spark's
+    * V2 append protocol into the staged-file writers of
+    * [[TxLogDataWriter]]: while a task writes a file it folds the
+    * file's skipping stats for `statsCols`/`bloomCols`, and returns
+    * them with its commit message, so a commit with stats is one
+    * Spark job.
+    *
+    * With `changes` the frame is change-tagged ([[ChangeSpec]]): its
+    * first `width` columns are the data row, the tag says which rows
+    * are data and which change rows each row yields, and the same
+    * tasks write the change rows (`_change_type` appended) into a
+    * second staged dir, returned as `changeDir`. CHECK constraints
+    * then gate only the data rows.
     */
   private[sources] def stageData(df: DataFrame,
       sortCols: Seq[String] = Nil,
       cmapOverride: Option[Map[String, String]] = None,
-      checkConstraints: Boolean = false): String = {
+      checkConstraints: Boolean = false,
+      statsCols: Seq[String] = Nil,
+      bloomCols: Seq[String] = Nil,
+      changes: Option[ChangeSpec] = None): TxLogTable.Staged = {
+    import org.apache.spark.sql.functions.col
     val name = UUID.randomUUID().toString
     // CHECK constraints ride inside this same write job (fail-fast per
     // row, no second pass). Only DATA-changing public writers opt in —
     // CDC/DV/compaction stages carry rows already validated (or
     // metadata rows a later, stricter constraint must not veto).
     val input =
-      if (checkConstraints) enforce(df, constraintsAt(currentVersion))
+      if (checkConstraints) enforce(df, constraintsAt(currentVersion),
+        changes.map(_ =>
+          col(ChangeSpec.Column).bitwiseAND(ChangeSpec.Data) =!= 0))
       else df
     val sorted =
       if (sortCols.isEmpty) input
@@ -2025,169 +2102,62 @@ final class TxLogTable(spark: SparkSession,
       if (cmap.isEmpty) sorted
       else sorted.select(sorted.columns.map(c =>
         sorted.col(c).as(cmap.getOrElse(c, c))).toIndexedSeq: _*)
-    out.write.parquet(dataDir.resolve(name).toString)
-    name
-  }
-
-  /** Stage the full CDC row set of a keyed write: classify by key
-    * presence between the pre-commit snapshot and the staged result,
-    * restricted to `touched` keys PLUS any duplicate-key groups of the
-    * target (a latest-wins merge collapses those even when the batch
-    * never names them — without this the feed would silently miss the
-    * collapse). Emits Delta-CDF-style `_change_type` rows:
-    * `insert` / `update_preimage` / `update_postimage` / `delete`.
-    *
-    * A matched key whose row survives unchanged (conditional-merge
-    * keep arm, or a latest-wins merge the target won) emits a no-op
-    * pre/post pair — pre = post, so it cancels in any additive fold
-    * (the incremental-view contract); exact change-row suppression
-    * would cost a full-row comparison for no consumer benefit.
-    *
-    * Null-keyed rows never key-match, so they are invisible to the
-    * typed feed (the same rule the merge join itself applies).
-    * Cost: semi-joins against frames the commit already materialized —
-    * batch-proportional, plus one duplicate-key aggregate on the
-    * snapshot the merge is reading anyway.
-    */
-  private def stageCdc(target: DataFrame, newDf: DataFrame,
-      touched: DataFrame, key: Seq[String]): String = {
-    import org.apache.spark.sql.functions._
-    val dupKeys = target.groupBy(key.map(target.col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-      .select(key.map(col): _*)
-    // materialize the three bounded frames each consumed by TWO
-    // branches of the classification DAG below: without it the single
-    // CDC write job recomputes the keys subtree (touched ∪ dup census)
-    // four times and re-scans the touched files / staged batch once
-    // per branch (guide §5 localCheckpoint: cut a reused subtree).
-    // All three are delta-sized — keys ≤ touched keys, oldT/newT ≤
-    // touched rows — the same bound the CDC dir itself carries.
-    // LAZY (r17 verdict: the three eager jobs cost q118 ~15% at bench
-    // scale): the CDC write below is the only consumer, so the frames
-    // materialize inside that one job — persisted blocks still dedupe
-    // the two branches of each — without three extra job launches.
-    val keys = touched.unionByName(dupKeys).distinct()
-      .localCheckpoint(eager = false)
-    val oldT = target.join(keys, key, "left_semi")
-      .localCheckpoint(eager = false)
-    val newT = newDf.join(keys, key, "left_semi")
-      .localCheckpoint(eager = false)
-    val oldKeys = oldT.select(key.map(oldT.col): _*).distinct()
-    val newKeys = newT.select(key.map(newT.col): _*).distinct()
-    // one pass per side: a left join against the OTHER side's key set
-    // (batch-proportional; AQE broadcasts it when small) classifies
-    // each row — old rows split delete / update_preimage, new rows
-    // split insert / update_postimage
-    val mark = "__other_side"
-    val cdc = oldT
-        .join(newKeys.withColumn(mark, lit(true)), key, "left")
-        .withColumn("_change_type",
-          when(col(mark).isNull, "delete").otherwise("update_preimage"))
-        .drop(mark)
-      .unionByName(newT
-        .join(oldKeys.withColumn(mark, lit(true)), key, "left")
-        .withColumn("_change_type",
-          when(col(mark).isNull, "insert").otherwise("update_postimage"))
-        .drop(mark))
-    stageData(cdc)
-  }
-
-  /** Per-file min/max/null-count ranges for `statsCols` over a staged
-    * dir — one column-pruned scan of ONLY the stats columns (parquet
-    * reads nothing else), grouped by file. The collect is bounded at
-    * one row per part-file of the staged batch. Unsupported column
-    * types are silently skipped (no stats ⇒ never pruned).
-    */
-  private def collectStats(dirName: String, schema: StructType,
-      statsCols: Seq[String], bloomCols: Seq[String] = Nil,
-      bloomExpectedItems: Long = 100000L,
-      bloomFpp: Double = 0.01): Map[String, FileStats] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graft.bridge
-    import org.apache.spark.sql.types.{LongType => SLong}
-    val valid = statsCols.filter(c =>
-      schema.fieldNames.contains(c) && DataSkipping.supported(schema(c).dataType))
-    val validBloom = bloomCols.filter(c => schema.fieldNames.contains(c) &&
-      DataSkipping.bloomSupported(schema(c).dataType))
-    if (valid.isEmpty && validBloom.isEmpty) return Map.empty
-    val numBits = org.apache.spark.util.sketch.BloomFilter
-      .optimalNumOfBits(bloomExpectedItems, bloomFpp)
-    val aggs = Seq(count(lit(1L)).as("__rows")) ++
-      valid.flatMap(c => Seq(
-        min(col(c)).as(s"__min__$c"),
-        max(col(c)).as(s"__max__$c"),
-        count(col(c)).as(s"__nn__$c"))) ++
-      validBloom.map { c =>
-        // canonical hash form (DataSkipping.bloomHash's contract):
-        // integrals as LONG, strings raw
-        val canon = schema(c).dataType match {
-          case _: org.apache.spark.sql.types.StringType => col(c)
-          case _ => col(c).cast(SLong)
-        }
-        bridge.column(new BloomFilterAggregate(
-          bridge.expression(xxhash64(canon)),
-          Literal(bloomExpectedItems), Literal(numBits))
-          .toAggregateExpression()).as(s"__bloom__$c")
-      } ++
-      // per-file NDV sketch (same single pass): distinct values fed as
-      // canonical strings (injective per distinct value, so the sketch
-      // estimates the column's true NDV); unions across files in
-      // statsSummaryAt recover the TABLE NDV the CBO needs. lgK=9 →
-      // ≤4 KB compact sketch per column per file, ~4% RSE.
-      valid.map { c =>
-        bridge.column(graft.plans.ThetaSketchAgg(
-          bridge.expression(col(c).cast("string")), lgK = 9)
-          .toAggregateExpression()).as(s"__theta__$c")
-      }
-    val rows = spark.read.schema(schema)
-      .parquet(dataDir.resolve(dirName).toString)
-      .select(((valid ++ validBloom).distinct.map(col) :+
-        input_file_name().as("__file")): _*)
-      .groupBy(col("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    rows.map { r =>
-      val uri = r.getString(0)
-      val fname = new Path(uri).getName
-      val total = r.getLong(1)
-      val cols = valid.zipWithIndex.map { case (c, i) =>
-        val base = 2 + i * 3
-        c -> ColRange(
-          DataSkipping.encodeExternal(r.get(base)),
-          DataSkipping.encodeExternal(r.get(base + 1)),
-          total - r.getLong(base + 2))
-      }.toMap
-      val bloomBase = 2 + valid.length * 3
-      val blooms = validBloom.zipWithIndex.flatMap { case (c, i) =>
-        Option(r.get(bloomBase + i)).map(b => c ->
-          java.util.Base64.getEncoder.encodeToString(
-            b.asInstanceOf[Array[Byte]]))
-      }.toMap
-      val thetaBase = bloomBase + validBloom.length
-      val thetas = valid.zipWithIndex.flatMap { case (c, i) =>
-        Option(r.get(thetaBase + i)).map(b => c ->
-          java.util.Base64.getEncoder.encodeToString(
-            b.asInstanceOf[Array[Byte]]))
-      }.toMap
-      s"$dirName/$fname" -> FileStats(total, cols, blooms, thetas)
-    }.toMap
-  }
-
-  private def statsOpt(dirName: String, schema: StructType,
-      statsCols: Seq[String],
-      bloomCols: Seq[String] = Nil): Option[Map[String, FileStats]] =
-    if (statsCols.isEmpty && bloomCols.isEmpty) None
-    else {
-      // staged files store PHYSICAL names; stats are keyed by them too
-      // (scanPathsAt consults them under the physical filter rewrite)
-      val cmap = currentColMap
-      val m = collectStats(dirName, physSchema(schema, cmap),
-        statsCols.map(c => cmap.getOrElse(c, c)),
-        bloomCols.map(c => cmap.getOrElse(c, c)))
-      if (m.isEmpty) None else Some(m)
+    // files declare every column nullable, as Spark's file sources do
+    val dataSchema = TxLogV2.asNullable(StructType(
+      out.schema.fields.take(changes.fold(out.schema.length)(_.width))))
+    val changeName = changes.map(_ => UUID.randomUUID().toString)
+    val dirs = (name +: changeName.toSeq).map(dataDir.resolve)
+    dirs.foreach(store.mkdirs)
+    val route = changes.zip(changeName).map { case (spec, cn) =>
+      ChangeRoute(spec, dataDir.resolve(cn).toString,
+        v2bridge.stagedParquetWriters(spark,
+          dataSchema.add("_change_type", StringType)))
     }
+    val factory = TxLogDataWriterFactory(dataDir.resolve(name).toString,
+      v2bridge.stagedParquetWriters(spark, dataSchema),
+      stats = StatsSpec.of(dataSchema, statsCols.map(c => cmap.getOrElse(c, c)),
+        bloomCols.map(c => cmap.getOrElse(c, c)),
+        spark.sessionState.conf.sessionLocalTimeZone),
+      changes = route)
+    val done =
+      try v2bridge.stageWrite(out, factory).toSeq.collect {
+        case d: TxLogWriteDone => d
+      } catch {
+        case NonFatal(e) => dirs.foreach(store.deleteRecursive); throw e
+      }
+    TxLogTable.Staged(name, done.flatMap(_.files), changeName,
+      done.flatMap(_.changeRows).groupMapReduce(_._1)(_._2)(_ + _))
+  }
+
+  /** Operation metrics of a commit from its staging results (see
+    * [[TxLogTable.Manifest]]): rows, files and bytes of the `staged`
+    * data dirs, updated and deleted rows from their change rows unless
+    * given, `removedFiles` and the time since `t0`.
+    */
+  private def metricsOf(t0: Long, staged: Seq[TxLogTable.Staged],
+      removedFiles: Long = 0L, updated: Option[Long] = None,
+      deleted: Option[Long] = None): Option[Map[String, Long]] = {
+    def changed(t: String) = staged.map(_.changeRows.getOrElse(t, 0L)).sum
+    val files = staged.flatMap(_.files)
+    Some(Map(
+      "numOutputRows" -> files.map(_.rows).sum,
+      "numUpdatedRows" -> updated.getOrElse(changed("update_postimage")),
+      "numDeletedRows" -> deleted.getOrElse(changed("delete")),
+      "numAddedFiles" -> files.size.toLong,
+      "numRemovedFiles" -> removedFiles,
+      "numAddedBytes" -> files.map(_.bytes).sum,
+      "executionTimeMs" -> (System.currentTimeMillis() - t0)))
+  }
+
+  /** Live data files of snapshot `v` (0 before the first commit) — the
+    * files an overwrite of the whole snapshot removes.
+    */
+  private def liveFileCount(v: Long): Long =
+    if (v < 0) 0L
+    else manifestChainAt(v)._1.flatMap(_.add).map { e =>
+      if (e.contains("/")) 1L
+      else store.list(dataDir.resolve(e)).count(_.endsWith(".parquet")).toLong
+    }.sum
 
   /** The atomic publish, delegated to the [[CommitOwner]] seam: the
     * whole concurrency story reduces to put-if-absent with exactly one
@@ -2308,6 +2278,7 @@ final class TxLogTable(spark: SparkSession,
       markers: Map[String, String] = Map.empty,
       statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil): Long = {
+    val t0 = System.currentTimeMillis()
     // pre-validate against the current snapshot so an invalid batch
     // (type change, retired-physical shadow) fails with ITS error
     // before any data is staged; the in-loop evolve stays authoritative
@@ -2317,22 +2288,23 @@ final class TxLogTable(spark: SparkSession,
         colMapAt(v0), droppedColsAt(v0).toSeq)
     }
     val cs0 = constraintsAt(currentVersion)
-    val staged = stageData(df, sortCols, checkConstraints = true)
-    val stats = statsOpt(staged, df.schema, statsCols, bloomCols)
+    val staged = stageData(df, sortCols, checkConstraints = true,
+      statsCols = statsCols, bloomCols = bloomCols)
     commitLoop(maxRetries) { v =>
       // staging enforced the constraints live at STAGING time; a
       // concurrent addConstraint would otherwise slip violating rows
       // under a live CHECK — when the set moved, re-validate the
       // already-staged data against the set this commit will assert
       if (v >= 0 && constraintsAt(v) != cs0)
-        enforce(readPhysical(Seq(dataDir.resolve(staged).toString),
+        enforce(readPhysical(Seq(dataDir.resolve(staged.name).toString),
           df.schema, colMapAt(v)), constraintsAt(v)).foreach(_ => ())
       val schema =
         if (v < 0) df.schema
         else evolveSchema(manifestChainAt(v)._2, df.schema, colMapAt(v),
           droppedColsAt(v).toSeq)
-      Some(Manifest(0L, "append", Seq(staged), schema.json,
-        System.currentTimeMillis(), wrap(markers), stats))
+      Some(Manifest(0L, "append", Seq(staged.name), schema.json,
+        System.currentTimeMillis(), wrap(markers), staged.stats,
+        metrics = metricsOf(t0, Seq(staged))))
     }
   }
 
@@ -2344,16 +2316,18 @@ final class TxLogTable(spark: SparkSession,
       markers: Map[String, String] = Map.empty,
       statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil): Long = {
+    val t0 = System.currentTimeMillis()
     val cs0 = constraintsAt(currentVersion)
-    val staged = stageData(df, sortCols, checkConstraints = true)
+    val staged = stageData(df, sortCols, checkConstraints = true,
+      statsCols = statsCols, bloomCols = bloomCols)
     val schemaJson = df.schema.json
-    val stats = statsOpt(staged, df.schema, statsCols, bloomCols)
     commitLoop(maxRetries) { v =>
       if (v >= 0 && constraintsAt(v) != cs0)
-        enforce(readPhysical(Seq(dataDir.resolve(staged).toString),
+        enforce(readPhysical(Seq(dataDir.resolve(staged.name).toString),
           df.schema, colMapAt(v)), constraintsAt(v)).foreach(_ => ())
-      Some(Manifest(0L, "overwrite", Seq(staged), schemaJson,
-        System.currentTimeMillis(), wrap(markers), stats))
+      Some(Manifest(0L, "overwrite", Seq(staged.name), schemaJson,
+        System.currentTimeMillis(), wrap(markers), staged.stats,
+        metrics = metricsOf(t0, Seq(staged), liveFileCount(v))))
     }
   }
 
@@ -2379,19 +2353,20 @@ final class TxLogTable(spark: SparkSession,
   def replaceWhere(data: DataFrame, condition: Column,
       sortCols: Seq[String] = Nil, statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil, maxRetries: Int = 20): Long = {
+    val t0 = System.currentTimeMillis()
     val cs0 = constraintsAt(currentVersion)
-    val staged = stageData(data, sortCols, checkConstraints = true)
-    requireStagedInRegion(staged, data.schema, condition)
-    val stats = statsOpt(staged, data.schema, statsCols, bloomCols)
+    val staged = stageData(data, sortCols, checkConstraints = true,
+      statsCols = statsCols, bloomCols = bloomCols)
+    requireStagedInRegion(staged.name, data.schema, condition)
     commitLoop(maxRetries) { v =>
       if (v >= 0 && constraintsAt(v) != cs0)
-        enforce(readPhysical(Seq(dataDir.resolve(staged).toString),
+        enforce(readPhysical(Seq(dataDir.resolve(staged.name).toString),
           data.schema, colMapAt(v)), constraintsAt(v)).foreach(_ => ())
       val schema =
         if (v < 0) data.schema
         else evolveSchema(manifestChainAt(v)._2, data.schema, colMapAt(v),
           droppedColsAt(v).toSeq)
-      Some(replaceWhereManifest(v, staged, schema, condition, stats))
+      Some(replaceWhereManifest(v, staged, schema, condition, t0))
     }
   }
 
@@ -2399,23 +2374,21 @@ final class TxLogTable(spark: SparkSession,
     * overwrite predicate): the writers already staged `dirName`; the
     * commit classifies the snapshot's files and publishes the swap.
     */
-  private[sources] def commitStagedReplaceWhere(dirName: String,
-      batchSchema: StructType, condition: Column,
-      statsCols: Seq[String], bloomCols: Seq[String],
+  private[sources] def commitStagedReplaceWhere(staged: TxLogTable.Staged,
+      batchSchema: StructType, condition: Column, t0: Long,
       validatedConstraints: Map[String, String] = Map.empty,
       maxRetries: Int = 20): Long = {
-    requireStagedInRegion(dirName, batchSchema, condition)
-    val stats = statsOpt(dirName, batchSchema, statsCols, bloomCols)
+    requireStagedInRegion(staged.name, batchSchema, condition)
     commitLoop(maxRetries) { v =>
       val cs = constraintsAt(v)
       if (cs.nonEmpty && cs != validatedConstraints)
-        enforce(readPhysical(Seq(stagedDirPath(dirName)), batchSchema,
+        enforce(readPhysical(Seq(stagedDirPath(staged.name)), batchSchema,
           colMapAt(v)), cs).foreach(_ => ())
       val schema =
         if (v < 0) batchSchema
         else evolveSchema(manifestChainAt(v)._2, batchSchema, colMapAt(v),
           droppedColsAt(v).toSeq)
-      Some(replaceWhereManifest(v, dirName, schema, condition, stats))
+      Some(replaceWhereManifest(v, staged, schema, condition, t0))
     }
   }
 
@@ -2439,9 +2412,8 @@ final class TxLogTable(spark: SparkSession,
     * file (drop / keep / refuse), carry kept stats forward, publish
     * kept entries + the staged dir as an overwrite.
     */
-  private def replaceWhereManifest(v: Long, stagedDir: String,
-      schema: StructType, condition: Column,
-      stagedStats: Option[Map[String, FileStats]]): Manifest = {
+  private def replaceWhereManifest(v: Long, staged: TxLogTable.Staged,
+      schema: StructType, condition: Column, t0: Long): Manifest = {
     require(v >= 0, s"replaceWhere needs an existing table at $root")
     val (chain, schema0) = manifestChainAt(v)
     val cmap = colMapOf(chain)
@@ -2495,7 +2467,7 @@ final class TxLogTable(spark: SparkSession,
         else dropped += f
       }
     }
-    val mergedStats = keptStats.result() ++ stagedStats.getOrElse(Map.empty)
+    val mergedStats = keptStats.result() ++ staged.stats.getOrElse(Map.empty)
     // CDC contract: `removed` names the dropped files so [[changes]]
     // emits a PRECISE delete+insert feed for this commit (the Delta
     // replaceWhere CDF shape). `cdc` stays None on purpose — a reader
@@ -2508,14 +2480,16 @@ final class TxLogTable(spark: SparkSession,
     // state forward when any kept file is referenced (the CDC feed
     // reads the removed census DV-applied, so already-deleted rows
     // never resurface as deletes)
-    Manifest(0L, "overwrite", kept.result() :+ stagedDir, schema.json,
+    Manifest(0L, "overwrite", kept.result() :+ staged.name, schema.json,
       System.currentTimeMillis(),
       markers = Some(Map("replace_where" -> condition.toString)),
       stats = if (mergedStats.isEmpty) None else Some(mergedStats),
       statsFile = priorCkpt,
       dv = carriedDvFor(chain, kept.result()),
       removed = if (dropped.result().isEmpty) None
-        else Some(dropped.result()))
+        else Some(dropped.result()),
+      metrics = metricsOf(t0, Seq(staged), dropped.result().size.toLong,
+        deleted = Some(dropped.result().map(all(_).rows).sum)))
   }
 
   /** Transactional MERGE (S10/J2 semantics — latest-wins by
@@ -2561,6 +2535,7 @@ final class TxLogTable(spark: SparkSession,
     // return — unless the CALLER already cached it (persist returns
     // the same Dataset), in which case unpersisting here would
     // silently drop their cache (ADVICE r17).
+    val t0 = System.currentTimeMillis()
     val callerCached = updates0.storageLevel !=
       org.apache.spark.storage.StorageLevel.NONE
     val updates = if (callerCached) updates0 else updates0.persist()
@@ -2578,33 +2553,80 @@ final class TxLogTable(spark: SparkSession,
         if (split.touchedPaths.isEmpty)
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
         else readPathsAt(v, split.touchedPaths)
-      val merged = Upsert.mergeByKey(target, updates, key, precedence)
-      val staged = stageData(merged, sortCols, checkConstraints = true)
-      // CDC: full change rows (pre/post images, typed) — read back
-      // from the staged dir (already materialized) so the change set
-      // is BY CONSTRUCTION consistent with the commit
-      val stagedDf = readPhysical(
-        Seq(dataDir.resolve(staged).toString), merged.schema, currentColMap)
-      val touched = updates.select(key.map(updates.col): _*).distinct()
-      val cdcDir = stageCdc(target, stagedDf, touched, key)
-      val newStats = statsOpt(staged, merged.schema, statsCols)
-      if (split.touchedPaths.isEmpty && chain.flatMap(_.add).nonEmpty)
-        // pure-insert merge on a non-empty table: an append extends
-        // the live set without re-asserting it
-        Some(Manifest(0L, "append", Seq(staged), merged.schema.json,
-          System.currentTimeMillis(), wrap(markers), newStats,
-          Some(Seq(cdcDir))))
-      else {
-        val mergedStats =
-          split.keptStats ++ newStats.getOrElse(Map.empty)
-        Some(Manifest(0L, "overwrite", split.kept :+ staged,
-          merged.schema.json, System.currentTimeMillis(), wrap(markers),
-          if (mergedStats.isEmpty) None else Some(mergedStats),
-          Some(Seq(cdcDir)), split.keptCkpt,
-          carriedDvFor(chain, split.kept)))
-      }
+      // CDC: the same tasks that write the merged rows write the
+      // change rows (pre/post images, typed), so the change set is BY
+      // CONSTRUCTION consistent with the commit
+      val (merged, spec) = latestWinsTagged(target, updates, key, precedence)
+      val staged = stageData(merged, sortCols, checkConstraints = true,
+        statsCols = statsCols, changes = Some(spec))
+      commitDml(t0, chain, split, staged, schemaOf(merged, spec), markers)
     }
     finally { if (!callerCached) updates.unpersist(); () }
+  }
+
+  /** The data columns of a change-tagged frame. */
+  private def schemaOf(tagged: DataFrame, spec: ChangeSpec): StructType =
+    StructType(tagged.schema.fields.take(spec.width))
+
+  /** The manifest of a file-granular merge/DML commit: the kept
+    * entries of `split` plus the staged dir, with its change dir. A
+    * pure insert into a non-empty table (nothing touched) commits as
+    * an append, which extends the live set without re-asserting it.
+    */
+  private def commitDml(t0: Long, chain: List[Manifest],
+      split: TouchedSplit, staged: TxLogTable.Staged, schema: StructType,
+      markers: Map[String, String]): Option[Manifest] = {
+    val cdc = Some(staged.changeDir.toSeq)
+    if (split.touchedPaths.isEmpty && chain.flatMap(_.add).nonEmpty)
+      Some(Manifest(0L, "append", Seq(staged.name), schema.json,
+        System.currentTimeMillis(), wrap(markers), staged.stats, cdc,
+        metrics = metricsOf(t0, Seq(staged))))
+    else {
+      val mergedStats = split.keptStats ++ staged.stats.getOrElse(Map.empty)
+      Some(Manifest(0L, "overwrite", split.kept :+ staged.name,
+        schema.json, System.currentTimeMillis(), wrap(markers),
+        if (mergedStats.isEmpty) None else Some(mergedStats),
+        cdc, split.keptCkpt, carriedDvFor(chain, split.kept),
+        metrics = metricsOf(t0, Seq(staged), split.touchedFiles)))
+    }
+  }
+
+  /** [[Upsert.mergeByKey]] as a change-tagged frame ([[ChangeSpec]]):
+    * per key, the row that sorts first by `precedence` over target ∪
+    * updates is data. A key has change rows when the batch names it or
+    * the target holds it more than once (the window collapses that
+    * group even unnamed): every target row of the key is an
+    * `update_preimage`, and the surviving row an `update_postimage`,
+    * or an `insert` when the target lacked the key. A key the target
+    * won yields a no-op pre/post pair — pre = post, so it cancels in
+    * any additive fold (the incremental-view contract). Null-keyed
+    * rows never key-match, so they have no change rows.
+    */
+  private def latestWinsTagged(target: DataFrame, updates: DataFrame,
+      key: Seq[String], precedence: Seq[Column]): (DataFrame, ChangeSpec) = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import ChangeSpec._
+    val cols = target.columns.toSeq
+    val src = "__from_batch"
+    val unioned = target.withColumn(src, lit(0)).unionByName(
+      updates.select(cols.map(col): _*).withColumn(src, lit(1)))
+    val w = Window.partitionBy(key.map(col): _*).orderBy(precedence: _*)
+    val group =
+      w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val fromBatch = sum(col(src)).over(group)
+    val fromTarget = count(lit(1)).over(group) - fromBatch
+    val first = row_number().over(w) === 1
+    val changed = key.map(col(_).isNotNull).reduce(_ && _) &&
+      (fromBatch > 0 || fromTarget > 1)
+    val tag = when(first, Data).otherwise(0) +
+      when(changed && first,
+        when(fromTarget === 0, Insert).otherwise(PostImage)).otherwise(0) +
+      when(changed && col(src) === 0, PreImage).otherwise(0)
+    val tagged = unioned.withColumn(Column, tag)
+      .filter(col(Column) =!= 0)
+      .select(cols.map(col) :+ col(Column): _*)
+    (tagged, ChangeSpec(cols.size, 0, cols.size))
   }
 
   /** Transactional row-level DELETE (the third core DML next to
@@ -2633,6 +2655,7 @@ final class TxLogTable(spark: SparkSession,
       statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions._
+    val t0 = System.currentTimeMillis()
     commitLoop(maxRetries) { v =>
       val (chain, schema) = manifestChainAt(v)
       val cond = coalesce(condition, lit(false))
@@ -2651,17 +2674,22 @@ final class TxLogTable(spark: SparkSession,
         Some(Manifest(0L, "append", Nil, schema.json,
           System.currentTimeMillis(), wrap(markers), None, Some(Nil)))
       else {
+        // one pass writes the kept rows and the deleted rows' `delete`
+        // change rows
         val target = readPathsAt(v, split.touchedPaths)
-        val staged = stageData(target.filter(!cond), sortCols)
-        val cdcDir = stageData(target.filter(cond)
-          .withColumn("_change_type", lit("delete")))
-        val newStats = statsOpt(staged, schema, statsCols, bloomCols)
-        val merged = split.keptStats ++ newStats.getOrElse(Map.empty)
-        Some(Manifest(0L, "overwrite", split.kept :+ staged, schema.json,
-          System.currentTimeMillis(), wrap(markers),
+        val width = target.columns.length
+        val staged = stageData(
+          target.withColumn(ChangeSpec.Column,
+            when(cond, ChangeSpec.Delete).otherwise(ChangeSpec.Data)),
+          sortCols, statsCols = statsCols, bloomCols = bloomCols,
+          changes = Some(ChangeSpec(width, 0, width)))
+        val merged = split.keptStats ++ staged.stats.getOrElse(Map.empty)
+        Some(Manifest(0L, "overwrite", split.kept :+ staged.name,
+          schema.json, System.currentTimeMillis(), wrap(markers),
           if (merged.isEmpty) None else Some(merged),
-          Some(Seq(cdcDir)), split.keptCkpt,
-          carriedDvFor(chain, split.kept)))
+          Some(staged.changeDir.toSeq), split.keptCkpt,
+          carriedDvFor(chain, split.kept),
+          metrics = metricsOf(t0, Seq(staged), split.touchedFiles)))
       }
     }
   }
@@ -2686,6 +2714,7 @@ final class TxLogTable(spark: SparkSession,
   def deleteVectored(condition: Column, maxRetries: Int = 20,
       markers: Map[String, String] = Map.empty): Long = {
     import org.apache.spark.sql.functions._
+    val t0 = System.currentTimeMillis()
     commitLoop(maxRetries) { v =>
       val (chain, schema) = manifestChainAt(v)
       val live = chain.flatMap(_.add)
@@ -2742,7 +2771,9 @@ final class TxLogTable(spark: SparkSession,
             .hint("rebalance"))
         Some(Manifest(0L, "append", Nil, schema.json,
           System.currentTimeMillis(), wrap(markers), None,
-          Some(Seq(staged)), None, Some(prevDv :+ staged)))
+          Some(Seq(staged.name)), None, Some(prevDv :+ staged.name),
+          metrics = metricsOf(t0, Nil,
+            deleted = Some(staged.files.map(_.rows).sum))))
         }
       }
     }
@@ -2774,6 +2805,7 @@ final class TxLogTable(spark: SparkSession,
       bloomCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions._
     require(set.nonEmpty, "UPDATE needs at least one assignment")
+    val t0 = System.currentTimeMillis()
     commitLoop(maxRetries) { v =>
       val (chain, schema) = manifestChainAt(v)
       set.keys.foreach(c => require(schema.fieldNames.contains(c),
@@ -2825,13 +2857,15 @@ final class TxLogTable(spark: SparkSession,
             case None => col(f.name)
           }
         }.toIndexedSeq: _*)
-        val postDir = stageData(applied.hint("rebalance"),
-          checkConstraints = true)
-        Some(Manifest(0L, "append", Seq(postDir), schema.json,
-          System.currentTimeMillis(), wrap(markers),
-          statsOpt(postDir, schema, statsCols, bloomCols),
-          Some(Seq(sidecar, postDir)), None,
-          Some(prevDv :+ sidecar)))
+        val posted = stageData(applied.hint("rebalance"),
+          checkConstraints = true, statsCols = statsCols,
+          bloomCols = bloomCols)
+        Some(Manifest(0L, "append", Seq(posted.name), schema.json,
+          System.currentTimeMillis(), wrap(markers), posted.stats,
+          Some(Seq(sidecar.name, posted.name)), None,
+          Some(prevDv :+ sidecar.name),
+          metrics = metricsOf(t0, Seq(posted),
+            updated = Some(posted.files.map(_.rows).sum))))
       }
     }
   }
@@ -2850,19 +2884,12 @@ final class TxLogTable(spark: SparkSession,
       bloomCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions._
     require(set.nonEmpty, "UPDATE needs at least one assignment")
+    val t0 = System.currentTimeMillis()
     commitLoop(maxRetries) { v =>
       val (chain, schema) = manifestChainAt(v)
       set.keys.foreach(c => require(schema.fieldNames.contains(c),
         s"UPDATE assigns unknown column $c"))
       val cond = coalesce(condition, lit(false))
-      def applied(df: DataFrame): DataFrame =
-        df.select(df.schema.fields.map { f =>
-          set.get(f.name) match {
-            case Some(e) => when(cond, e.cast(f.dataType))
-              .otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }.toSeq: _*)
       // file-granular copy-on-write (same shape as [[delete]]): only
       // files whose stats admit a matching row are read and rewritten.
       // Classified on the RAW condition — the coalesce null-guard is
@@ -2877,21 +2904,33 @@ final class TxLogTable(spark: SparkSession,
         Some(Manifest(0L, "append", Nil, schema.json,
           System.currentTimeMillis(), wrap(markers), None, Some(Nil)))
       else {
+        // one pass writes the updated snapshot and, for matching rows,
+        // the pre/post change rows: data columns are the assigned row,
+        // followed by the old row as the pre-image
         val target = readPathsAt(v, split.touchedPaths)
-        val staged = stageData(applied(target), sortCols,
-          checkConstraints = true)
-        val cdcDir = stageData(
-          target.filter(cond)
-            .withColumn("_change_type", lit("update_preimage"))
-            .unionByName(applied(target.filter(cond))
-              .withColumn("_change_type", lit("update_postimage"))))
-        val newStats = statsOpt(staged, schema, statsCols, bloomCols)
-        val merged = split.keptStats ++ newStats.getOrElse(Map.empty)
-        Some(Manifest(0L, "overwrite", split.kept :+ staged, schema.json,
-          System.currentTimeMillis(), wrap(markers),
+        val fields = target.schema.fields.toSeq
+        val staged = stageData(
+          target.select(fields.map { f =>
+            set.get(f.name) match {
+              case Some(e) => when(cond, e.cast(f.dataType))
+                .otherwise(col(f.name)).as(f.name)
+              case None => col(f.name)
+            }
+          } ++ fields.map(f => col(f.name).as(s"__pre_${f.name}")) :+
+            when(cond, ChangeSpec.Data + ChangeSpec.PreImage +
+              ChangeSpec.PostImage).otherwise(ChangeSpec.Data)
+              .as(ChangeSpec.Column): _*),
+          sortCols, checkConstraints = true, statsCols = statsCols,
+          bloomCols = bloomCols,
+          changes = Some(ChangeSpec(fields.size, fields.size,
+            2 * fields.size)))
+        val merged = split.keptStats ++ staged.stats.getOrElse(Map.empty)
+        Some(Manifest(0L, "overwrite", split.kept :+ staged.name,
+          schema.json, System.currentTimeMillis(), wrap(markers),
           if (merged.isEmpty) None else Some(merged),
-          Some(Seq(cdcDir)), split.keptCkpt,
-          carriedDvFor(chain, split.kept)))
+          Some(staged.changeDir.toSeq), split.keptCkpt,
+          carriedDvFor(chain, split.kept),
+          metrics = metricsOf(t0, Seq(staged), split.touchedFiles)))
       }
     }
   }
@@ -2917,14 +2956,15 @@ final class TxLogTable(spark: SparkSession,
     *     on UPDATE and null-fill on INSERT — the schema-drifting CDC
     *     feed lands without pre-conforming.
     *   - Multiple source rows matching one target key make the MERGE
-    *     ambiguous — rejected up front (the check is one bounded
-    *     aggregate: first duplicated key or nothing).
+    *     ambiguous — rejected before anything is staged, by the
+    *     key census the file skipping collects anyway.
     *   - Keys join by plain equality: null-keyed rows never match
     *     (null-keyed source rows flow to the NOT MATCHED branch).
     *
     * Plan shape: ONE full-outer shuffle join on the key plus a
-    * scan-stage when-chain projection — identical cost to the
-    * latest-wins [[merge]]; the clause logic adds no exchange.
+    * scan-stage when-chain projection, written with its change rows
+    * by one staging job; the clause logic and the target's per-key
+    * row count (a window on the join's own shuffle) add no exchange.
     *
     * Covers the reference's conditional upsert tier
     * (monthly_price_paid_data.py:140-160 ON CONFLICT DO UPDATE;
@@ -2940,11 +2980,15 @@ final class TxLogTable(spark: SparkSession,
       markers: Map[String, String] = Map.empty,
       statsCols: Seq[String] = Nil,
       withSchemaEvolution: Boolean = false): Long = {
+    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     import TxLogTable.{MatchedDelete, MatchedUpdate}
-    // four consumers of the batch (ambiguity gate, key-predicate
-    // distinct, the full-outer join, the CDC touched-key set) — one
-    // materialization instead of four executions of the upstream
+    import ChangeSpec.{Data, Delete, Group, Insert, PostImage, PreImage,
+      PreOrDelete}
+    val t0 = System.currentTimeMillis()
+    // three consumers of the batch (the key census that is also the
+    // ambiguity gate, the full-outer join, the change rows) — one
+    // materialization instead of three executions of the upstream
     // pipeline, plus one consistent snapshot across commit retries
     // (the [[merge]] rationale); delta-sized, released on return —
     // unless the caller already cached it (see [[merge]])
@@ -2952,10 +2996,6 @@ final class TxLogTable(spark: SparkSession,
       org.apache.spark.storage.StorageLevel.NONE
     val source = if (callerCached) source0 else source0.persist()
     try {
-    val dupKey = source.groupBy(key.map(source.col): _*)
-      .count().filter(col("count") > 1).limit(1).collect()
-    require(dupKey.isEmpty,
-      s"ambiguous MERGE: source has multiple rows for key ${dupKey.toSeq}")
     commitLoop(maxRetries) { v =>
       val (chain, schema) = manifestChainAt(v)
       val cmap = colMapOf(chain)
@@ -2965,7 +3005,7 @@ final class TxLogTable(spark: SparkSession,
       // unmatched target rows in kept files pass through VERBATIM,
       // exactly the clause semantics
       val keyPred = sourceKeyPredicate(source, key, schema, cmap,
-        nullKeysMatch = false)
+        nullKeysMatch = false, rejectDuplicates = true)
       val split = classifyTouched(v, keyPred)
       TxLogTable.lastDmlRewritten = split.touchedCount
       // schema evolution: source-only columns widen the schema
@@ -2993,8 +3033,13 @@ final class TxLogTable(spark: SparkSession,
       def srcHas(c: String): Boolean =
         source.columns.exists(_.equalsIgnoreCase(c))
       // presence markers survive the full-outer join where every data
-      // column (keys included) may be legitimately null on one side
-      val t = target.withColumn("__t_present", lit(true)).alias("t")
+      // column (keys included) may be legitimately null on one side;
+      // `__t_n` counts the target rows of the row's key — the window
+      // shuffles the target on the key, which the join reuses
+      val t = target.withColumn("__t_present", lit(true))
+        .withColumn("__t_n",
+          count(lit(1)).over(Window.partitionBy(key.map(col): _*)))
+        .alias("t")
       val s = source.withColumn("__s_present", lit(true)).alias("s")
       val keyCond = key.map(k => col(s"t.$k") === col(s"s.$k"))
         .reduce(_ && _)
@@ -3015,8 +3060,31 @@ final class TxLogTable(spark: SparkSession,
         .when(col("s.__s_present").isNotNull && col("t.__t_present").isNull,
           insertAction)
         .otherwise(matchedAction)
+      // change rows ([[ChangeSpec]]), per key of the batch or
+      // duplicated in the target: a matched row that survives is a
+      // pre/post pair (pre = post on the keep arm: a no-op pair that
+      // cancels in any additive fold), a dropped one a `delete` —
+      // unless its duplicated key keeps another row, which the writing
+      // task resolves; an inserted row is an `insert`. Null keys never
+      // key-match, so they have no change rows.
+      val matched = col("t.__t_present").isNotNull &&
+        col("s.__s_present").isNotNull
+      val dup = col("t.__t_n") > 1
+      val keyed = key.map(k =>
+        coalesce(col(s"t.$k"), col(s"s.$k")).isNotNull).reduce(_ && _)
+      val a = col("__action")
+      val tag =
+        when(matched,
+          when(a === DROP, when(dup, PreOrDelete + Group).otherwise(Delete))
+            .otherwise(when(dup, Data + PreImage + PostImage + Group)
+              .otherwise(Data + PreImage + PostImage)))
+        .when(col("t.__t_present").isNotNull,
+          when(keyed && dup, Data + PreImage + PostImage).otherwise(Data))
+        .otherwise(when(a === INS,
+          when(keyed, Data + Insert).otherwise(Data)).otherwise(0))
       val merged = j.withColumn("__action", action)
-        .filter(col("__action") =!= DROP)
+        .withColumn(ChangeSpec.Column, tag)
+        .filter(col(ChangeSpec.Column) =!= 0)
         .select(tgtCols.map { c =>
           // UPDATE writes source columns and keeps target-only ones;
           // INSERT writes source columns and null-fills the rest
@@ -3026,28 +3094,16 @@ final class TxLogTable(spark: SparkSession,
           when(col("__action") === USE_SRC, upd)
             .when(col("__action") === INS, ins)
             .otherwise(col(s"t.$c")).as(c)
-        }: _*)
-      val staged = stageData(merged, sortCols, checkConstraints = true)
-      val stagedDf = readPhysical(
-        Seq(dataDir.resolve(staged).toString), merged.schema, currentColMap)
-      // CDC: typed change rows; the delete arm surfaces as explicit
-      // `delete` pre-images (not as absence); touched = source keys
-      val touched = source.select(key.map(source.col): _*).distinct()
-      val cdcDir = stageCdc(target, stagedDf, touched, key)
-      val newStats = statsOpt(staged, merged.schema, statsCols)
-      if (split.touchedPaths.isEmpty && chain.flatMap(_.add).nonEmpty)
-        Some(Manifest(0L, "append", Seq(staged), merged.schema.json,
-          System.currentTimeMillis(), wrap(markers), newStats,
-          Some(Seq(cdcDir))))
-      else {
-        val mergedStats =
-          split.keptStats ++ newStats.getOrElse(Map.empty)
-        Some(Manifest(0L, "overwrite", split.kept :+ staged,
-          merged.schema.json, System.currentTimeMillis(), wrap(markers),
-          if (mergedStats.isEmpty) None else Some(mergedStats),
-          Some(Seq(cdcDir)), split.keptCkpt,
-          carriedDvFor(chain, split.kept)))
-      }
+        } ++ tgtCols.map(c => col(s"t.$c").as(s"__pre_$c")) :+
+          col(ChangeSpec.Column): _*)
+      val spec = ChangeSpec(tgtCols.size, tgtCols.size, 2 * tgtCols.size,
+        key.map { k =>
+          val i = tgtCols.indexWhere(_.equalsIgnoreCase(k))
+          (i, merged.schema(i).dataType)
+        })
+      val staged = stageData(merged, sortCols, checkConstraints = true,
+        statsCols = statsCols, changes = Some(spec))
+      commitDml(t0, chain, split, staged, schemaOf(merged, spec), markers)
     }
     } finally { if (!callerCached) source.unpersist(); () }
   }
@@ -3062,17 +3118,20 @@ final class TxLogTable(spark: SparkSession,
   def insertIgnore(updates: DataFrame, key: Seq[String],
       maxRetries: Int = 20,
       markers: Map[String, String] = Map.empty,
-      statsCols: Seq[String] = Nil): Long =
+      statsCols: Seq[String] = Nil): Long = {
+    val t0 = System.currentTimeMillis()
     commitLoop(maxRetries) { v =>
       val snap = readAt(v)
       val newRows = Upsert.newRows(snap, updates, key)
       // empty appends still commit: idempotent-replay markers rely on
       // the version advancing even when every row was a duplicate
-      val staged = stageData(newRows, checkConstraints = true)
-      Some(Manifest(0L, "append", Seq(staged),
+      val staged = stageData(newRows, checkConstraints = true,
+        statsCols = statsCols)
+      Some(Manifest(0L, "append", Seq(staged.name),
         snap.schema.json, System.currentTimeMillis(), wrap(markers),
-        statsOpt(staged, snap.schema, statsCols)))
+        staged.stats, metrics = metricsOf(t0, Seq(staged))))
     }
+  }
 
   // ── maintenance ───────────────────────────────────────────────────
 
@@ -3220,15 +3279,16 @@ final class TxLogTable(spark: SparkSession,
   def compact(targetRowsPerFile: Long, sortCols: Seq[String] = Nil,
       maxRetries: Int = 20): Long = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
+    val t0 = System.currentTimeMillis()
     commitLoop(maxRetries) { v =>
       val snap = readAt(v)
       val n = snap.count()
       val files =
         math.max(1L, (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      Some(Manifest(0L, "overwrite",
-        Seq(stageData(snap.coalesce(files), sortCols)),
+      val staged = stageData(snap.coalesce(files), sortCols)
+      Some(Manifest(0L, "overwrite", Seq(staged.name),
         snap.schema.json, System.currentTimeMillis(), None, None,
-        Some(Nil)))
+        Some(Nil), metrics = metricsOf(t0, Seq(staged), liveFileCount(v))))
     }
   }
 
@@ -3255,6 +3315,7 @@ final class TxLogTable(spark: SparkSession,
       maxRetries: Int = 20): Long = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
     require(minFileBytes > 0, "minFileBytes must be positive")
+    val t0 = System.currentTimeMillis()
     commitLoop(maxRetries) { v =>
       val (chain, schema) = manifestChainAt(v)
       val live = chain.flatMap(_.add)
@@ -3306,15 +3367,16 @@ final class TxLogTable(spark: SparkSession,
           val n = snap.count()
           val nFiles = math.max(1L,
             (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-          val staged = stageData(snap.coalesce(nFiles), sortCols)
-          val newStats = statsOpt(staged, schema, statsCols)
-          val merged = keptStats.result() ++ newStats.getOrElse(Map.empty)
+          val staged = stageData(snap.coalesce(nFiles), sortCols,
+            statsCols = statsCols)
+          val merged = keptStats.result() ++ staged.stats.getOrElse(Map.empty)
           val keptEntries = kept.result()
-          Some(Manifest(0L, "overwrite", keptEntries :+ staged,
+          Some(Manifest(0L, "overwrite", keptEntries :+ staged.name,
             schema.json, System.currentTimeMillis(), None,
             if (merged.isEmpty) None else Some(merged),
             Some(Nil), chain.flatMap(_.statsFile).lastOption,
-            carriedDvFor(chain, keptEntries)))
+            carriedDvFor(chain, keptEntries),
+            metrics = metricsOf(t0, Seq(staged), cand.size.toLong)))
         }
       }
     }
@@ -3335,16 +3397,17 @@ final class TxLogTable(spark: SparkSession,
       statsCols: Seq[String] = Nil, maxRetries: Int = 20): Long = {
     require(clusterCols.nonEmpty, "clusterCols must be non-empty")
     require(numFiles > 0, "numFiles must be positive")
+    val t0 = System.currentTimeMillis()
     commitLoop(maxRetries) { v =>
       val snap = readAt(v)
       val arranged = snap
         .repartitionByRange(numFiles, clusterCols.map(snap.col): _*)
         .sortWithinPartitions(clusterCols.map(snap.col): _*)
-      val staged = stageData(arranged)
-      Some(Manifest(0L, "overwrite", Seq(staged), snap.schema.json,
-        System.currentTimeMillis(), None,
-        statsOpt(staged, snap.schema, (clusterCols ++ statsCols).distinct),
-        Some(Nil)))
+      val staged = stageData(arranged,
+        statsCols = (clusterCols ++ statsCols).distinct)
+      Some(Manifest(0L, "overwrite", Seq(staged.name), snap.schema.json,
+        System.currentTimeMillis(), None, staged.stats, Some(Nil),
+        metrics = metricsOf(t0, Seq(staged), liveFileCount(v))))
     }
   }
 
@@ -3364,15 +3427,16 @@ final class TxLogTable(spark: SparkSession,
       maxRetries: Int = 20): Long = {
     require(clusterCols.nonEmpty, "clusterCols must be non-empty")
     require(numFiles > 0, "numFiles must be positive")
+    val t0 = System.currentTimeMillis()
     commitLoop(maxRetries) { v =>
       val snap = readAt(v)
       val arranged = ZOrder.layoutBy(snap, clusterCols, bits, numFiles)
         .drop("zval")
-      val staged = stageData(arranged)
-      Some(Manifest(0L, "overwrite", Seq(staged), snap.schema.json,
-        System.currentTimeMillis(), None,
-        statsOpt(staged, snap.schema, (clusterCols ++ statsCols).distinct),
-        Some(Nil)))
+      val staged = stageData(arranged,
+        statsCols = (clusterCols ++ statsCols).distinct)
+      Some(Manifest(0L, "overwrite", Seq(staged.name), snap.schema.json,
+        System.currentTimeMillis(), None, staged.stats, Some(Nil),
+        metrics = metricsOf(t0, Seq(staged), liveFileCount(v))))
     }
   }
 
@@ -3632,7 +3696,7 @@ final class TxLogTable(spark: SparkSession,
         if (sides.isEmpty) Some(Nil) // no-op restore
         else Some(Seq(stageData(
           sides.reduce(_.unionByName(_, allowMissingColumns = true)),
-          cmapOverride = Some(cmapT))))
+          cmapOverride = Some(cmapT)).name))
       Some(Manifest(0L, "overwrite", dirs, schema.json,
         System.currentTimeMillis(),
         wrap(markers + ("restoredFrom" -> version.toString)), wrap2(stats),

@@ -78,6 +78,15 @@ object TxLogV2 {
   private[sources] def asNullable(s: StructType): StructType =
     TxLogRelation.asNullable(s).asInstanceOf[StructType]
 
+  /** The staging result of a V2 write into `dirName`, from its task
+    * commit messages.
+    */
+  private[sources] def staged(dirName: String, messages: Array[
+      org.apache.spark.sql.connector.write.WriterCommitMessage])
+      : TxLogTable.Staged =
+    TxLogTable.Staged(dirName,
+      messages.toSeq.collect { case d: TxLogWriteDone => d.files }.flatten)
+
   /** CHECK constraints compiled to BOUND catalyst predicates over the
     * write schema — what the native V2 writers evaluate PER ROW inside
     * the write task (fail-fast, single pass — the same point the V1
@@ -363,8 +372,8 @@ final class TxLogNativeWriteBuilder(spark: SparkSession, root: String,
   * crashed attempt can never smuggle duplicate rows into the staged
   * dir. The driver commit is one optimistic manifest bid
   * ([[TxLogTable.commitStagedV2]]) — CHECK constraints enforced,
-  * schema evolved, stats collected, the same shape every other
-  * commit has.
+  * schema evolved, the stats the writers folded recorded, the same
+  * shape every other commit has.
   */
 final class TxLogBatchWrite(spark: SparkSession, root: String,
     logicalSchema: StructType, overwriteAll: Boolean,
@@ -380,6 +389,7 @@ final class TxLogBatchWrite(spark: SparkSession, root: String,
   // falls back to a validation read if the set moved concurrently
   // (the same addConstraint race guard the V1 append path has)
   @volatile private var validated: Map[String, String] = Map.empty
+  @volatile private var t0 = 0L
 
   /** Effective stats columns: a PARTITIONED table with no explicit
     * statsCols defaults to every skipping-eligible column (first 32,
@@ -396,6 +406,7 @@ final class TxLogBatchWrite(spark: SparkSession, root: String,
   override def createBatchWriterFactory(
       pinfo: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DataWriterFactory = {
+    t0 = System.currentTimeMillis()
     table.ensureExists(logicalSchema)
     table.mkStagedDir(dirName)
     validated = table.constraintsAt(table.currentVersion)
@@ -412,20 +423,20 @@ final class TxLogBatchWrite(spark: SparkSession, root: String,
         table.physicalWriteSchema(logicalSchema)),
       TxLogV2.bindConstraints(spark,
         TxLogV2.asNullable(logicalSchema), validated),
-      keyFields)
+      keyFields, table.statsSpecFor(logicalSchema, effStatsCols, bloomCols))
   }
 
   override def commit(messages: Array[
       org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
     table.ensureExists(logicalSchema)
+    val staged = TxLogV2.staged(dirName, messages)
     replaceCond match {
       case Some(cond) =>
-        table.commitStagedReplaceWhere(dirName,
-          TxLogV2.asNullable(logicalSchema), cond, effStatsCols,
-          bloomCols, validated)
+        table.commitStagedReplaceWhere(staged,
+          TxLogV2.asNullable(logicalSchema), cond, t0, validated)
       case None =>
-        table.commitStagedV2(dirName, TxLogV2.asNullable(logicalSchema),
-          overwriteAll, effStatsCols, bloomCols, validated)
+        table.commitStagedV2(staged, TxLogV2.asNullable(logicalSchema),
+          overwriteAll, t0, validated)
     }
     ()
   }
@@ -487,7 +498,7 @@ final class TxLogStreamingWrite(spark: SparkSession, root: String,
         table.physicalWriteSchema(logicalSchema)),
       TxLogV2.bindConstraints(spark,
         TxLogV2.asNullable(logicalSchema), validated),
-      keyFields)
+      keyFields, table.statsSpecFor(logicalSchema, statsCols, bloomCols))
   }
 
   override def commit(epochId: Long, messages: Array[
@@ -501,8 +512,9 @@ final class TxLogStreamingWrite(spark: SparkSession, root: String,
     }
     table.ensureExists(logicalSchema)
     table.mkStagedDir(dir) // an empty batch never opened a file
-    table.commitStagedV2(dir, TxLogV2.asNullable(logicalSchema),
-      overwrite = false, statsCols, bloomCols, validated,
+    table.commitStagedV2(TxLogV2.staged(dir, messages),
+      TxLogV2.asNullable(logicalSchema), overwrite = false,
+      System.currentTimeMillis(), validated,
       markers = Map(scopedMarker -> epochId.toString,
         TxLogStream.SinkBatchMarker -> epochId.toString))
     checkpointEvery.foreach(n => table.maybeCheckpoint(n))
@@ -521,51 +533,254 @@ private[sources] final case class TxLogStreamingWriterFactory(
     baseDirPath: String, writers: v2bridge.StagedParquetWriters,
     constraints: Seq[(String, String,
       org.apache.spark.sql.catalyst.expressions.Expression)],
-    clusterKeys: Seq[(Int, DataType)])
+    clusterKeys: Seq[(Int, DataType)],
+    stats: Option[StatsSpec] = None)
     extends org.apache.spark.sql.connector.write.streaming
       .StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     new TxLogDataWriter(s"$baseDirPath-$epochId", writers, partitionId,
-      taskId, constraints, clusterKeys)
+      taskId, constraints, clusterKeys, stats)
 }
 
-private[sources] final case class TxLogWriteDone(file: String, rows: Long)
+/** One file a staging task published: its name inside the staged dir,
+  * its rows and on-disk bytes, and its skipping stats when the write
+  * asked for them.
+  */
+private[sources] final case class StagedFile(name: String, rows: Long,
+    bytes: Long, stats: Option[DataSkipping.FileStats] = None)
+
+/** A staging task's commit message: the data files it published, and
+  * its change rows counted by `_change_type`.
+  */
+private[sources] final case class TxLogWriteDone(files: Seq[StagedFile],
+    changeRows: Map[String, Long] = Map.empty)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
+
+/** The columns whose per-file stats the staging tasks fold while they
+  * write: `(physical name, ordinal, type)` for min/max/null counts and
+  * theta sketches (`cols`) and for Bloom filters (`blooms`). These are
+  * the aggregates the census scan of a staged dir computes, evaluated
+  * by the same expressions: `cast(c as string)` into a lgK=9
+  * [[graft.plans.ThetaSketchAgg]], `xxhash64` of the canonical value
+  * into a `BloomFilterAggregate`, min/max by Spark's ordering.
+  */
+private[sources] final case class StatsSpec(cols: Seq[(String, Int, DataType)],
+    blooms: Seq[(String, Int, DataType)], timeZone: String)
+
+private[sources] object StatsSpec {
+  val BloomItems = 100000L
+  val BloomFpp = 0.01
+
+  /** The spec for `statsCols`/`bloomCols` (physical names) of a write
+    * schema; columns the schema lacks or whose type carries no stats
+    * are skipped, and None means nothing is left to fold.
+    */
+  def of(schema: StructType, statsCols: Seq[String], bloomCols: Seq[String],
+      timeZone: String): Option[StatsSpec] = {
+    def pick(cs: Seq[String], ok: DataType => Boolean) =
+      cs.distinct.filter(c => schema.fieldNames.contains(c) &&
+          ok(schema(c).dataType))
+        .map(c => (c, schema.fieldIndex(c), schema(c).dataType))
+    val cols = pick(statsCols, DataSkipping.supported)
+    val blooms = pick(bloomCols, DataSkipping.bloomSupported)
+    if (cols.isEmpty && blooms.isEmpty) None
+    else Some(StatsSpec(cols, blooms, timeZone))
+  }
+}
+
+/** Per-file stats of one staged file, folded row by row as the task
+  * writes it.
+  */
+private final class FileStatsFold(spec: StatsSpec) {
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+    Literal, MutableProjection, XxHash64}
+  import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+
+  private val cols = spec.cols.toArray
+  private val n = cols.length
+  private val order = cols.map(c => v2bridge.ordering(c._3))
+  private val mins = new Array[Any](n)
+  private val maxs = new Array[Any](n)
+  private val nonNull = new Array[Long](n)
+  private var rows = 0L
+
+  // one projection per row: the theta inputs, then the Bloom hashes
+  private val inputs = MutableProjection.create(
+    cols.toSeq.map { case (_, i, dt) =>
+      Cast(BoundReference(i, dt, nullable = true), StringType,
+        Some(spec.timeZone))
+    } ++ spec.blooms.map { case (_, i, dt) =>
+      val ref = BoundReference(i, dt, nullable = true)
+      XxHash64(Seq(dt match {
+        case _: StringType => ref
+        case _ => Cast(ref, LongType)
+      }), 42L)
+    })
+  private val thetas = Array.tabulate(n)(k => graft.plans.ThetaSketchAgg(
+    BoundReference(k, StringType, nullable = true), lgK = 9))
+  private val thetaBufs = thetas.map(_.createAggregationBuffer())
+  private val blooms = spec.blooms.indices.map(j => new BloomFilterAggregate(
+    BoundReference(n + j, LongType, nullable = false),
+    Literal(StatsSpec.BloomItems),
+    Literal(org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(
+      StatsSpec.BloomItems, StatsSpec.BloomFpp)))).toArray
+  private val bloomBufs = blooms.map(_.createAggregationBuffer())
+
+  private def copied(v: Any): Any = v match {
+    case u: org.apache.spark.unsafe.types.UTF8String => u.copy()
+    case d: Decimal => d.clone()
+    case other => other
+  }
+
+  def add(r: InternalRow): Unit = {
+    rows += 1
+    var k = 0
+    while (k < n) {
+      val (_, i, dt) = cols(k)
+      if (!r.isNullAt(i)) {
+        nonNull(k) += 1
+        val v = r.get(i, dt)
+        // strict comparisons: the first of equal values stays, as in
+        // the min/max aggregates
+        if (mins(k) == null || order(k).lt(v, mins(k))) mins(k) = copied(v)
+        if (maxs(k) == null || order(k).gt(v, maxs(k))) maxs(k) = copied(v)
+      }
+      k += 1
+    }
+    val p = inputs(r)
+    k = 0
+    while (k < n) { thetas(k).update(thetaBufs(k), p); k += 1 }
+    k = 0
+    while (k < blooms.length) { blooms(k).update(bloomBufs(k), p); k += 1 }
+  }
+
+  private def encoded(v: Any, dt: DataType): Option[String] =
+    if (v == null) None
+    else DataSkipping.encodeExternal(
+      org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .convertToScala(v, dt))
+
+  private def b64(bytes: Any): String =
+    java.util.Base64.getEncoder.encodeToString(bytes.asInstanceOf[Array[Byte]])
+
+  def result(): DataSkipping.FileStats = DataSkipping.FileStats(rows,
+    cols.indices.map { k =>
+      val (name, _, dt) = cols(k)
+      name -> DataSkipping.ColRange(encoded(mins(k), dt),
+        encoded(maxs(k), dt), rows - nonNull(k))
+    }.toMap,
+    blooms.indices.flatMap { j =>
+      Option(blooms(j).eval(bloomBufs(j))).map(b => spec.blooms(j)._1 -> b64(b))
+    }.toMap,
+    cols.indices.map(k =>
+      cols(k)._1 -> b64(thetas(k).eval(thetaBufs(k)))).toMap)
+}
+
+/** How a staging task splits a change-tagged frame. The input row is
+  * the data columns (`width` of them, written as the data file's row),
+  * then optionally the pre-image columns at `preOffset` (`preOffset =
+  * 0` when the pre-image is the row itself), then the Int tag at
+  * `tagOrdinal`, a bit set of [[ChangeSpec]] flags. `keys` are the
+  * merge key's ordinals among the data columns.
+  */
+private[sources] final case class ChangeSpec(width: Int, preOffset: Int,
+    tagOrdinal: Int, keys: Seq[(Int, DataType)] = Nil)
+
+private[sources] object ChangeSpec {
+  /** Name of the tag column. */
+  val Column = "__change"
+  /** The data columns are a row of the new data file. */
+  val Data = 1
+  /** The data columns are an `insert` change row. */
+  val Insert = 2
+  /** The data columns are an `update_postimage` change row. */
+  val PostImage = 4
+  /** The pre-image columns are an `update_preimage` change row. */
+  val PreImage = 8
+  /** The pre-image columns are a `delete` change row. */
+  val Delete = 16
+  /** The pre-image columns are an `update_preimage` change row when a
+    * row of the same key group is written as data, else a `delete`.
+    * Set only together with [[Group]].
+    */
+  val PreOrDelete = 32
+  /** The row belongs to a key group that needs [[PreOrDelete]]
+    * resolved: all rows of such a group reach the same task, which
+    * resolves them when it commits.
+    */
+  val Group = 64
+}
+
+/** Where a staging task writes the change rows of a change-tagged
+  * frame: the `_change_type`-extended schema's writers and dir.
+  */
+private[sources] final case class ChangeRoute(spec: ChangeSpec, dir: String,
+    writers: v2bridge.StagedParquetWriters)
 
 private[sources] final case class TxLogDataWriterFactory(dir: String,
     writers: v2bridge.StagedParquetWriters,
     constraints: Seq[(String, String,
       org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
-    clusterKeys: Seq[(Int, DataType)] = Nil)
+    clusterKeys: Seq[(Int, DataType)] = Nil,
+    stats: Option[StatsSpec] = None,
+    changes: Option[ChangeRoute] = None)
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     new TxLogDataWriter(dir, writers, partitionId, taskId, constraints,
-      clusterKeys)
+      clusterKeys, stats, changes)
 }
 
-/** One task attempt's writer: rows stream to hidden in-progress
-  * files; task commit renames them visible; abort deletes them.
-  * Empty partitions never open a file. With cluster keys the writer
-  * ROLLS to a fresh file on every key change (rows arrive clustered
-  * and sorted, so runs are contiguous and files-per-value stays one
-  * per task) — hive-style partition layout without per-value
-  * directories.
+/** One task attempt's writer — the one staging writer of every txlog
+  * write: rows stream to hidden in-progress files; task commit renames
+  * them visible; abort deletes what the attempt wrote. Empty
+  * partitions never open a file. With cluster keys the writer ROLLS
+  * to a fresh file on every key change (rows arrive clustered and
+  * sorted, so runs are contiguous and files-per-value stays one per
+  * task) — hive-style partition layout without per-value directories.
+  * With a [[StatsSpec]] each data file's skipping stats fold as it is
+  * written and ride the commit message; with a [[ChangeRoute]] the
+  * same pass writes the change rows of a change-tagged frame.
   */
 private final class TxLogDataWriter(dir: String,
     writers: v2bridge.StagedParquetWriters, partitionId: Int, taskId: Long,
     constraints: Seq[(String, String,
       org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
-    clusterKeys: Seq[(Int, DataType)] = Nil)
+    clusterKeys: Seq[(Int, DataType)] = Nil,
+    stats: Option[StatsSpec] = None,
+    changes: Option[ChangeRoute] = None)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
+  import ChangeSpec._
 
   private var writer: v2bridge.StagedRowWriter = null
+  private var open: (String, String) = null // (tmp, final) being written
+  private var fold: FileStatsFold = null
+  private var fileRows = 0L
   private var seq = 0
-  private var staged: List[(String, String)] = Nil // (tmp, final)
+  // closed files: (tmp, final, rows, stats)
+  private var staged: List[(String, String, Long,
+    Option[DataSkipping.FileStats])] = Nil
+  private var published: List[String] = Nil
   private val keysArr: Array[(Int, DataType)] = clusterKeys.toArray
   private var curKey: Array[Any] = null
-  private var rows = 0L
+
+  private var changeWriter: v2bridge.StagedRowWriter = null
+  private var changeFile: (String, String) = null
+  private val changeRows =
+    scala.collection.mutable.LinkedHashMap.empty[String, Long]
+  private val dataView = changes.map(c =>
+    org.apache.spark.sql.catalyst.ProjectingInternalRow(writers.schema,
+      0 until c.spec.width))
+  private val preView = changes.map(c =>
+    org.apache.spark.sql.catalyst.ProjectingInternalRow(writers.schema,
+      c.spec.preOffset until c.spec.preOffset + c.spec.width))
+  private val typeRows: Map[String, InternalRow] =
+    Seq("insert", "update_preimage", "update_postimage", "delete").map(t =>
+      t -> InternalRow(org.apache.spark.unsafe.types.UTF8String.fromString(t)))
+      .toMap
+  private val survivors = scala.collection.mutable.HashSet.empty[Seq[Any]]
+  private val pending = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
 
   /** The CHECK conjunction compiled ONCE per writer through Spark's
     * whole-expression codegen (`Predicate.create`, interpreted
@@ -598,15 +813,15 @@ private final class TxLogDataWriter(dir: String,
     true
   }
 
-  /** Capture the row's cluster-key values, COPYING out of the reused
-    * row buffer (UTF8String payloads are transient).
+  /** Values of `keys` in `r`, COPIED out of the reused row buffer
+    * (UTF8String payloads are transient).
     */
-  private def captureKey(r: InternalRow): Unit = {
-    if (curKey == null) curKey = new Array[Any](keysArr.length)
+  private def keyValues(r: InternalRow, keys: Array[(Int, DataType)],
+      into: Array[Any]): Array[Any] = {
     var j = 0
-    while (j < keysArr.length) {
-      val (i, dt) = keysArr(j)
-      curKey(j) =
+    while (j < keys.length) {
+      val (i, dt) = keys(j)
+      into(j) =
         if (r.isNullAt(i)) null
         else r.get(i, dt) match {
           case u: org.apache.spark.unsafe.types.UTF8String => u.copy()
@@ -614,12 +829,17 @@ private final class TxLogDataWriter(dir: String,
         }
       j += 1
     }
+    into
   }
 
   private def closeCurrent(): Unit =
-    if (writer != null) { writer.close(); writer = null }
+    if (writer != null) {
+      writer.close(); writer = null
+      staged ::= ((open._1, open._2, fileRows, Option(fold).map(_.result())))
+      open = null; fold = null; fileRows = 0L
+    }
 
-  override def write(r: InternalRow): Unit = {
+  private def writeData(r: InternalRow): Unit = {
     // fail-fast per-row CHECK enforcement inside the write task —
     // single pass, the same point the V1 staging job enforces at;
     // only FALSE violates (the bound predicate coalesces NULL→true)
@@ -632,36 +852,102 @@ private final class TxLogDataWriter(dir: String,
       i += 1
     }
     if (keysArr.nonEmpty) {
-      if (curKey == null) captureKey(r)
-      else if (!sameKey(r)) { closeCurrent(); captureKey(r) }
+      if (curKey == null)
+        curKey = keyValues(r, keysArr, new Array[Any](keysArr.length))
+      else if (!sameKey(r)) {
+        closeCurrent(); keyValues(r, keysArr, curKey)
+      }
     }
     if (writer == null) {
-      val tmp = f"$dir/.inprogress-$partitionId%05d-$taskId-$seq.parquet"
-      val fin = f"$dir/part-$partitionId%05d-$taskId-$seq.parquet"
+      open = (f"$dir/.inprogress-$partitionId%05d-$taskId-$seq.parquet",
+        f"$dir/part-$partitionId%05d-$taskId-$seq.parquet")
       seq += 1
-      staged ::= (tmp, fin)
-      writer = writers.open(tmp, partitionId, taskId)
+      writer = writers.open(open._1, partitionId, taskId)
+      fold = stats.map(new FileStatsFold(_)).orNull
     }
     writer.write(r)
-    rows += 1
+    if (fold != null) fold.add(r)
+    fileRows += 1
+  }
+
+  private def writeChange(route: ChangeRoute, row: InternalRow,
+      changeType: String): Unit = {
+    if (changeWriter == null) {
+      changeFile = (
+        f"${route.dir}/.inprogress-$partitionId%05d-$taskId.parquet",
+        f"${route.dir}/part-$partitionId%05d-$taskId.parquet")
+      changeWriter = route.writers.open(changeFile._1, partitionId, taskId)
+    }
+    changeWriter.write(
+      new org.apache.spark.sql.catalyst.expressions.JoinedRow(row,
+        typeRows(changeType)))
+    changeRows(changeType) = changeRows.getOrElse(changeType, 0L) + 1
+  }
+
+  override def write(r: InternalRow): Unit = changes match {
+    case None => writeData(r)
+    case Some(route) =>
+      val tag = r.getInt(route.spec.tagOrdinal)
+      val data = dataView.get
+      data.project(r)
+      if ((tag & Data) != 0) writeData(data)
+      if ((tag & Insert) != 0) writeChange(route, data, "insert")
+      if ((tag & PostImage) != 0) writeChange(route, data, "update_postimage")
+      if ((tag & (PreImage | Delete)) != 0) {
+        val pre = preView.get
+        pre.project(r)
+        if ((tag & PreImage) != 0) writeChange(route, pre, "update_preimage")
+        if ((tag & Delete) != 0) writeChange(route, pre, "delete")
+      }
+      if ((tag & Group) != 0) {
+        if ((tag & Data) != 0) survivors += groupKey(route, r)
+        if ((tag & PreOrDelete) != 0) pending += r.copy()
+      }
+  }
+
+  private def groupKey(route: ChangeRoute, r: InternalRow): Seq[Any] = {
+    val ks = route.spec.keys.toArray
+    keyValues(r, ks, new Array[Any](ks.length)).toSeq
   }
 
   override def commit()
       : org.apache.spark.sql.connector.write.WriterCommitMessage = {
+    changes.foreach { route =>
+      val pre = preView.get
+      pending.foreach { r =>
+        pre.project(r)
+        writeChange(route, pre,
+          if (survivors.contains(groupKey(route, r))) "update_preimage"
+          else "delete")
+      }
+      pending.clear()
+    }
     closeCurrent()
-    staged.reverse.foreach { case (tmp, fin) =>
+    if (changeWriter != null) { changeWriter.close(); changeWriter = null }
+    def publish(tmp: String, fin: String): Long = {
       require(writers.rename(tmp, fin),
         s"staged-file publish failed: $tmp -> $fin")
+      published ::= fin
+      writers.length(fin)
     }
-    TxLogWriteDone(staged.map(_._2).mkString(","), rows)
+    val files = staged.reverse.map { case (tmp, fin, rows, st) =>
+      StagedFile(fin.substring(fin.lastIndexOf('/') + 1), rows,
+        publish(tmp, fin), st)
+    }
+    Option(changeFile).foreach { case (tmp, fin) => publish(tmp, fin) }
+    TxLogWriteDone(files, changeRows.toMap)
   }
 
   override def abort(): Unit = {
-    closeCurrent()
-    staged.foreach { case (tmp, _) => writers.delete(tmp) }
+    close()
+    (staged.map(_._1) ++ Option(open).map(_._1) ++
+      Option(changeFile).map(_._1) ++ published).foreach(writers.delete)
   }
 
-  override def close(): Unit = closeCurrent()
+  override def close(): Unit = {
+    closeCurrent()
+    if (changeWriter != null) { changeWriter.close(); changeWriter = null }
+  }
 }
 
 /** V2 pushdown for one snapshot scan. Predicates are pushed for

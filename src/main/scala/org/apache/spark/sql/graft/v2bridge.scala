@@ -101,7 +101,7 @@ object v2bridge {
   final class StagedParquetWriters private[graft] (
       factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
       conf: org.apache.spark.util.SerializableConfiguration,
-      schema: StructType) extends Serializable {
+      val schema: StructType) extends Serializable {
 
     def open(path: String, partitionId: Int, taskId: Long): StagedRowWriter = {
       import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
@@ -124,6 +124,11 @@ object v2bridge {
       p.getFileSystem(conf.value).rename(p, new Path(to))
     }
 
+    def length(path: String): Long = {
+      val p = new Path(path)
+      p.getFileSystem(conf.value).getFileStatus(p).getLen
+    }
+
     def delete(path: String): Unit = {
       val p = new Path(path)
       p.getFileSystem(conf.value).delete(p, false)
@@ -141,6 +146,58 @@ object v2bridge {
       new org.apache.spark.util.SerializableConfiguration(
         job.getConfiguration), schema)
   }
+
+  /** Write `df` through Spark's DataSource-V2 append protocol into
+    * `factory`'s writers and return the task commit messages, in
+    * partition order. The frame is the child of an `AppendData` over a
+    * write-only table, so the rows reach the writers through
+    * `DataWritingSparkTask`: one write job, output-commit coordination,
+    * and task abort on failure. A failed job throws after the writers
+    * of every failed task attempt aborted; cleaning the staged dir is
+    * the caller's.
+    */
+  def stageWrite(df: org.apache.spark.sql.DataFrame,
+      factory: org.apache.spark.sql.connector.write.DataWriterFactory)
+      : Array[org.apache.spark.sql.connector.write.WriterCommitMessage] = {
+    import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table,
+      TableCapability}
+    import org.apache.spark.sql.connector.write.{BatchWrite,
+      LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder,
+      WriterCommitMessage}
+    @volatile var committed: Array[WriterCommitMessage] = null
+    val batch = new BatchWrite {
+      override def createBatchWriterFactory(info: PhysicalWriteInfo) = factory
+      override def commit(messages: Array[WriterCommitMessage]): Unit =
+        committed = messages
+      override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+    }
+    val table = new Table with SupportsWrite {
+      override def name(): String = "txlog staging"
+      // nullable, so the optimizer may widen the frame's nullability
+      // (the output check of AppendData compares the two)
+      override def schema(): StructType = df.schema.asNullable
+      override def capabilities(): java.util.Set[TableCapability] =
+        java.util.EnumSet.of(TableCapability.BATCH_WRITE)
+      override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+        new WriteBuilder {
+          override def build(): Write = new Write {
+            override def toBatch: BatchWrite = batch
+          }
+        }
+    }
+    val relation = org.apache.spark.sql.execution.datasources.v2
+      .DataSourceV2Relation.create(table, None, None)
+    bridge.ofRows(df.sparkSession,
+      org.apache.spark.sql.catalyst.plans.logical.AppendData.byPosition(
+        relation, df.queryExecution.analyzed))
+    committed
+  }
+
+  /** The ordering Spark's `min`/`max` aggregates compare `dt` values
+    * by (NaN above every double, binary string order).
+    */
+  def ordering(dt: DataType): Ordering[Any] =
+    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
 
   /** Decode a stats string in `CatalogColumnStat.fromExternalString`
     * version-2 format (the encoding the txlog manifest stores) into

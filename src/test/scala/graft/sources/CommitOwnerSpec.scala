@@ -340,4 +340,33 @@ class CommitOwnerSpec extends SparkSpec {
     store.delete(p) // idempotent: deleting a missing key succeeds
     assert(!store.exists(p))
   }
+
+  test("Hadoop-rename owner: of two writers bidding for one version over a " +
+      "local FileContext one wins, and the loser retries at the next") {
+    val root = Files.createTempDirectory("txlog_hrename").toString
+    def table() = new TxLogTable(spark, root, HadoopRenameCommitOwner)
+    import spark.implicits._
+    val (a, b) = (table(), table())
+    a.ensureExists(schema)
+    // both writers stage against version 0, then bid for version 1
+    val stagedA = a.stageData(Seq((1L, "a")).toDF("k", "v")).name
+    val stagedB = b.stageData(Seq((2L, "b")).toDF("k", "v")).name
+    assert(a.tryCommitForTest(1L, stagedA, schema.json))
+    assert(!b.tryCommitForTest(1L, stagedB, schema.json),
+      "the rename must refuse a published version")
+    // the loser's bid left the winner's manifest and no temp file
+    val logDir = nio(new Path(new Path(root), "_log"))
+    val names = Files.list(logDir).iterator()
+    var litter = List.empty[String]
+    while (names.hasNext) {
+      val n = names.next().getFileName.toString
+      if (n.contains(".tmp-")) litter ::= n
+    }
+    assert(litter.isEmpty, s"litter: $litter")
+    assert(b.readAt(1L).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+    // the loser's commit loop retries against the winner's snapshot
+    assert(b.append(Seq((2L, "b")).toDF("k", "v")) === 2L)
+    assert(table().read().orderBy("k").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "a"), (2L, "b")))
+  }
 }
