@@ -18,6 +18,7 @@ object BucketedTable {
   def save(df: DataFrame, table: String, bucketCols: Seq[String],
       buckets: Int, sortCols: Seq[String] = Nil): Unit = {
     var w = df.write.mode(SaveMode.Overwrite).format("parquet")
+      .options(TableFiles.parquetOptions)
       .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
     if (sortCols.nonEmpty) w = w.sortBy(sortCols.head, sortCols.tail: _*)
     w.saveAsTable(table)

@@ -38,7 +38,8 @@ object FormatConvert {
 
   /** ORC → parquet. */
   def orcToParquet(spark: SparkSession, inPath: String, outPath: String): Unit =
-    spark.read.orc(inPath).write.mode(SaveMode.Overwrite).parquet(outPath)
+    spark.read.orc(inPath).write.mode(SaveMode.Overwrite)
+      .options(TableFiles.parquetOptions).parquet(outPath)
 
   /** Whether the external spark-avro module is on the classpath. Avro
     * is NOT in-box in Spark (unlike ORC/parquet/CSV/JSON): deployments
@@ -80,6 +81,7 @@ object FormatConvert {
     val df =
       if (avroAvailable) spark.read.format("avro").load(inPath)
       else AvroTables.read(spark, inPath)
-    df.write.mode(SaveMode.Overwrite).parquet(outPath)
+    df.write.mode(SaveMode.Overwrite).options(TableFiles.parquetOptions)
+      .parquet(outPath)
   }
 }

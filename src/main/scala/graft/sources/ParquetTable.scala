@@ -54,7 +54,8 @@ final class ParquetTable(spark: SparkSession, root: String) {
   def ensureExists(schema: StructType): Unit = if (!exists) {
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .write.mode(SaveMode.Overwrite).parquet(root)
+      .write.mode(SaveMode.Overwrite).options(TableFiles.parquetOptions)
+      .parquet(root)
   }
 
   def read(): DataFrame = ParquetTable.readDir(spark, root)
@@ -73,7 +74,8 @@ final class ParquetTable(spark: SparkSession, root: String) {
       markers: Map[String, String] = Map.empty): Unit = {
     val old = Paths.get(root + ".old")
     deleteRecursive(staging)
-    sorted(df, sortCols).write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    sorted(df, sortCols).write.mode(SaveMode.Overwrite)
+      .options(TableFiles.parquetOptions).parquet(staging.toString)
     markers.foreach { case (name, content) =>
       Files.writeString(staging.resolve(name), content)
     }
@@ -102,7 +104,8 @@ final class ParquetTable(spark: SparkSession, root: String) {
     val inserted = Observation()
     deleteRecursive(staging)
     sorted(rows.observe(inserted, count(lit(1)).as("n")), sortCols)
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      .write.mode(SaveMode.Overwrite).options(TableFiles.parquetOptions)
+      .parquet(staging.toString)
     val n = inserted.get("n").asInstanceOf[Long]
     if (n > 0) dataFiles(staging).foreach { f =>
       // part-file names carry the writing job's id, so a staged name

@@ -26,14 +26,16 @@ final class PartitionedTable(
     */
   def write(df: DataFrame, sortCols: Seq[String] = Nil): Unit =
     sorted(df, sortCols).write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*).parquet(root)
+      .partitionBy(partitionCols: _*).options(TableFiles.parquetOptions)
+      .parquet(root)
 
   /** S8 at scale: append lands new files only in the partitions the
     * batch touches.
     */
   def append(df: DataFrame, sortCols: Seq[String] = Nil): Unit =
     sorted(df, sortCols).write.mode(SaveMode.Append)
-      .partitionBy(partitionCols: _*).parquet(root)
+      .partitionBy(partitionCols: _*).options(TableFiles.parquetOptions)
+      .parquet(root)
 
   /** Idempotent partition replay: dynamic partition overwrite replaces
     * ONLY the partitions present in `df`; all other partitions keep
@@ -42,7 +44,8 @@ final class PartitionedTable(
   def overwritePartitions(df: DataFrame, sortCols: Seq[String] = Nil): Unit =
     sorted(df, sortCols).write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*).parquet(root)
+      .partitionBy(partitionCols: _*).options(TableFiles.parquetOptions)
+      .parquet(root)
 
   def read(): DataFrame = spark.read.parquet(root)
 

@@ -2111,10 +2111,12 @@ final class TxLogTable(spark: SparkSession,
     val route = changes.zip(changeName).map { case (spec, cn) =>
       ChangeRoute(spec, dataDir.resolve(cn).toString,
         v2bridge.stagedParquetWriters(spark,
-          dataSchema.add("_change_type", StringType)))
+          dataSchema.add("_change_type", StringType),
+          TableFiles.parquetOptions))
     }
     val factory = TxLogDataWriterFactory(dataDir.resolve(name).toString,
-      v2bridge.stagedParquetWriters(spark, dataSchema),
+      v2bridge.stagedParquetWriters(spark, dataSchema,
+        TableFiles.parquetOptions),
       stats = StatsSpec.of(dataSchema, statsCols.map(c => cmap.getOrElse(c, c)),
         bloomCols.map(c => cmap.getOrElse(c, c)),
         spark.sessionState.conf.sessionLocalTimeZone),
@@ -3165,7 +3167,8 @@ final class TxLogTable(spark: SparkSession,
       .filter(r => liveKeys.contains(r.file.takeWhile(_ != '/')) ||
         liveKeys.contains(r.file))
     val name = s"ckpt-${UUID.randomUUID()}.parquet"
-    all.write.parquet(ckptPath(name).toString)
+    all.write.options(TableFiles.parquetOptions)
+      .parquet(ckptPath(name).toString)
     Some(name)
   }
 
@@ -3449,9 +3452,10 @@ final class TxLogTable(spark: SparkSession,
     * of re-diffing snapshots. Appends/insert-ignores contribute their
     * appended rows, merges the upserted keys' rows (staged at commit
     * time — computing the feed costs no snapshot diff), compaction/
-    * checkpoint nothing. The engine's tables never delete rows, so
-    * post-images are the complete feed. Cost: a parquet read of the
-    * change dirs only — independent of table size.
+    * checkpoint nothing. Deleted rows are not in it: `delete`,
+    * `deleteVectored` and `mergeConditional`'s delete arm remove rows,
+    * and only the typed feed [[changes]] has `delete` rows. Cost: a
+    * parquet read of the change dirs only — independent of table size.
     */
   def changeFeed(fromVersion: Long, toVersion: Long): DataFrame = {
     import org.apache.spark.sql.functions.col

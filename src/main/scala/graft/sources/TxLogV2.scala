@@ -420,7 +420,7 @@ final class TxLogBatchWrite(spark: SparkSession, root: String,
     }
     TxLogDataWriterFactory(table.stagedDirPath(dirName),
       v2bridge.stagedParquetWriters(spark,
-        table.physicalWriteSchema(logicalSchema)),
+        table.physicalWriteSchema(logicalSchema), TableFiles.parquetOptions),
       TxLogV2.bindConstraints(spark,
         TxLogV2.asNullable(logicalSchema), validated),
       keyFields, table.statsSpecFor(logicalSchema, effStatsCols, bloomCols))
@@ -495,7 +495,7 @@ final class TxLogStreamingWrite(spark: SparkSession, root: String,
     }
     TxLogStreamingWriterFactory(table.stagedDirPath(base),
       v2bridge.stagedParquetWriters(spark,
-        table.physicalWriteSchema(logicalSchema)),
+        table.physicalWriteSchema(logicalSchema), TableFiles.parquetOptions),
       TxLogV2.bindConstraints(spark,
         TxLogV2.asNullable(logicalSchema), validated),
       keyFields, table.statsSpecFor(logicalSchema, statsCols, bloomCols))
@@ -605,23 +605,45 @@ private final class FileStatsFold(spec: StatsSpec) {
   private val nonNull = new Array[Long](n)
   private var rows = 0L
 
-  // one projection per row: the theta inputs, then the Bloom hashes
-  private val inputs = MutableProjection.create(
-    cols.toSeq.map { case (_, i, dt) =>
-      Cast(BoundReference(i, dt, nullable = true), StringType,
-        Some(spec.timeZone))
-    } ++ spec.blooms.map { case (_, i, dt) =>
+  private val thetas = cols.map { case (_, i, dt) =>
+    graft.plans.ThetaSketchAgg(Cast(BoundReference(i, dt, nullable = true),
+      StringType, Some(spec.timeZone)), lgK = 9)
+  }
+  private val thetaBufs = thetas.map(_.createAggregationBuffer())
+  // A theta sketch ignores a value it already holds, so a value of a
+  // non-string column is cast and hashed only the first time the file
+  // sees it: `seen(k)` holds the exact bits of column k's folded values
+  // (bits, not values: 0.0 and -0.0 cast to different strings), until
+  // it holds FileStatsFold.MemoBound of them and is dropped.
+  private val bits: Array[InternalRow => Long] = cols.map { case (_, i, dt) =>
+    dt match {
+      case BooleanType => (r: InternalRow) => if (r.getBoolean(i)) 1L else 0L
+      case ByteType => (r: InternalRow) => r.getByte(i).toLong
+      case ShortType => (r: InternalRow) => r.getShort(i).toLong
+      case IntegerType | DateType => (r: InternalRow) => r.getInt(i).toLong
+      case LongType | TimestampType | TimestampNTZType =>
+        (r: InternalRow) => r.getLong(i)
+      case FloatType => (r: InternalRow) =>
+        java.lang.Float.floatToRawIntBits(r.getFloat(i)).toLong
+      case DoubleType => (r: InternalRow) =>
+        java.lang.Double.doubleToRawLongBits(r.getDouble(i))
+      case _ => null
+    }
+  }
+  private val seen = bits.map(b =>
+    if (b == null) null else scala.collection.mutable.LongMap.empty[Unit])
+
+  // the Bloom hashes of a row, in one projection
+  private val hashes = MutableProjection.create(spec.blooms.map {
+    case (_, i, dt) =>
       val ref = BoundReference(i, dt, nullable = true)
       XxHash64(Seq(dt match {
         case _: StringType => ref
         case _ => Cast(ref, LongType)
       }), 42L)
-    })
-  private val thetas = Array.tabulate(n)(k => graft.plans.ThetaSketchAgg(
-    BoundReference(k, StringType, nullable = true), lgK = 9))
-  private val thetaBufs = thetas.map(_.createAggregationBuffer())
+  })
   private val blooms = spec.blooms.indices.map(j => new BloomFilterAggregate(
-    BoundReference(n + j, LongType, nullable = false),
+    BoundReference(j, LongType, nullable = false),
     Literal(StatsSpec.BloomItems),
     Literal(org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(
       StatsSpec.BloomItems, StatsSpec.BloomFpp)))).toArray
@@ -645,14 +667,24 @@ private final class FileStatsFold(spec: StatsSpec) {
         // the min/max aggregates
         if (mins(k) == null || order(k).lt(v, mins(k))) mins(k) = copied(v)
         if (maxs(k) == null || order(k).gt(v, maxs(k))) maxs(k) = copied(v)
+        val memo = seen(k)
+        if (memo == null) thetas(k).update(thetaBufs(k), r)
+        else {
+          val b = bits(k)(r)
+          if (!memo.contains(b)) {
+            thetas(k).update(thetaBufs(k), r)
+            if (memo.size < FileStatsFold.MemoBound) memo.update(b, ())
+            else seen(k) = null
+          }
+        }
       }
       k += 1
     }
-    val p = inputs(r)
-    k = 0
-    while (k < n) { thetas(k).update(thetaBufs(k), p); k += 1 }
-    k = 0
-    while (k < blooms.length) { blooms(k).update(bloomBufs(k), p); k += 1 }
+    if (blooms.nonEmpty) {
+      val p = hashes(r)
+      k = 0
+      while (k < blooms.length) { blooms(k).update(bloomBufs(k), p); k += 1 }
+    }
   }
 
   private def encoded(v: Any, dt: DataType): Option[String] =
@@ -675,6 +707,11 @@ private final class FileStatsFold(spec: StatsSpec) {
     }.toMap,
     cols.indices.map(k =>
       cols(k)._1 -> b64(thetas(k).eval(thetaBufs(k)))).toMap)
+}
+
+private object FileStatsFold {
+  /** Distinct values a column's memo holds at most. */
+  val MemoBound = 4096
 }
 
 /** How a staging task splits a change-tagged frame. The input row is

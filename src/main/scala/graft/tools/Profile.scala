@@ -17,7 +17,8 @@ import graft.core.Sessions
 
 /** Per-query profile records: one JSON line per selected query on
   * stdout with its row count, the wall time of two measured passes,
-  * and the Spark jobs, stages and tasks of the faster pass. Runs on
+  * and the Spark jobs, stages and tasks and the bytes written to the
+  * local file system (`bytes_written`) of the faster pass. Runs on
   * [[Sessions.local]], the configuration that ships. Like `Bench`, it
   * warms every query once on the `sf0.001` sibling of `sfDir` (on
   * `sfDir` itself when there is none), then makes two passes.
@@ -55,14 +56,16 @@ object Profile {
       spark.catalog.clearCache()
     }
     val passes = Seq.fill(2)(selected.map { case (_, q) =>
-      val run = counted(spark)(q(spark, sfDir).count())
+      val b0 = localBytesWritten
+      val (rows, wall, counts) = counted(spark)(q(spark, sfDir).count())
+      val bytes = localBytesWritten - b0
       spark.catalog.clearCache()
-      run
+      (rows, wall, counts, bytes)
     })
 
     val mapper = new ObjectMapper()
     selected.map(_._1).zip(passes.transpose).foreach { case (name, runs) =>
-      val (rows, minS, best) = runs.minBy(_._2)
+      val (rows, minS, best, bytes) = runs.minBy(_._2)
       val rec = mapper.createObjectNode()
         .put("query", name).put("sf_dir", sfDir)
         .put("cores", spark.sparkContext.defaultParallelism)
@@ -71,9 +74,19 @@ object Profile {
       runs.foreach(r => walls.add(r._2))
       rec.put("min_s", minS).put("jobs", best.jobs)
         .put("stages", best.stages).put("tasks", best.tasks)
+        .put("bytes_written", bytes)
       println(mapper.writeValueAsString(rec))
     }
   }
+
+  /** Bytes written so far in this JVM through Hadoop's `file` file
+    * system, from its global storage statistics.
+    */
+  private def localBytesWritten: Long =
+    org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.get("file") match {
+      case null => 0L
+      case st => Option(st.getLong("bytesWritten")).map(_.longValue).getOrElse(0L)
+    }
 
   /** Runs `body` under a fresh job group; returns its result, its wall
     * seconds and the jobs, stages and tasks it started. A sentinel job

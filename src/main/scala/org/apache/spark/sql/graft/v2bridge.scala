@@ -91,8 +91,8 @@ object v2bridge {
 
   /** Serializable provider of executor-side parquet writers — the
     * execution half of the txlog NATIVE V2 write: Spark's own
-    * `ParquetFileFormat.prepareWrite` output factory (compression,
-    * writer version, all session parquet confs honored) opened
+    * `ParquetFileFormat.prepareWrite` output factory (the writer
+    * options given, then the session's parquet confs) opened
     * directly at staged-file paths. The commit protocol above it is
     * the txlog manifest commit, not a Hadoop committer — staged files
     * are invisible (dot-prefixed) until the task commit renames them,
@@ -136,12 +136,12 @@ object v2bridge {
     }
   }
 
-  def stagedParquetWriters(spark: SparkSession,
-      schema: StructType): StagedParquetWriters = {
+  def stagedParquetWriters(spark: SparkSession, schema: StructType,
+      options: Map[String, String]): StagedParquetWriters = {
     val job = org.apache.hadoop.mapreduce.Job.getInstance(
       spark.sessionState.newHadoopConf())
     val factory = new org.apache.spark.sql.execution.datasources.parquet
-      .ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+      .ParquetFileFormat().prepareWrite(spark, job, options, schema)
     new StagedParquetWriters(factory,
       new org.apache.spark.util.SerializableConfiguration(
         job.getConfiguration), schema)

@@ -18,9 +18,10 @@ import graft.SparkSpec
   * while they write. Pinned here: on seeded random batches they are
   * bit-equal to the census scan of the staged files
   * ([[TxLogOracles.censusStats]]) — nulls, NaN and signed zeros,
-  * Bloom and theta columns, multi-file dirs, column-mapped physical
-  * names, commits on a table with deletion vectors, and the native V2
-  * write of a catalog table.
+  * Bloom and theta columns, low-cardinality columns and one with more
+  * distinct values than the fold's per-file memo holds, multi-file
+  * dirs, column-mapped physical names, commits on a table with
+  * deletion vectors, and the native V2 write of a catalog table.
   */
 class TxLogInTaskStatsSpec extends SparkSpec {
   private implicit val fmts: Formats = DefaultFormats
@@ -110,6 +111,34 @@ class TxLogInTaskStatsSpec extends SparkSpec {
       val st = manifest(t.root, v).stats.get.values
       assert(st.forall(fs => fs.blooms.keySet == bloomCols.toSet &&
         fs.thetas.keySet == statsCols.toSet))
+    }
+  }
+
+  test("low-cardinality columns, and a column past the per-file value " +
+      "memo's bound: stats equal the census (seeded)") {
+    for (seed <- 5L to 6L) {
+      val r = new Random(seed)
+      val ds = Seq(Double.NaN, -0.0, 0.0, 1.5, -2.25, Double.PositiveInfinity)
+      val fs = Seq(Float.NaN, -0.0f, 0.0f, 0.5f)
+      val days = (0 until 7).map(k => java.sql.Date.valueOf(
+        java.time.LocalDate.of(2020, 1, 1).plusDays(k.toLong * 40)))
+      val times = (0 until 9).map(k =>
+        new java.sql.Timestamp(1600000000000L + k * 3600123L))
+      // more distinct ids in one file than the memo holds
+      val n = FileStatsFold.MemoBound + 1500
+      val rows = (0 until n).map { k =>
+        def maybe[A](a: => A): Any = if (r.nextInt(7) == 0) null else a
+        Row(k.toLong, maybe(r.nextInt(3)), maybe(ds(r.nextInt(ds.size))),
+          maybe(fs(r.nextInt(fs.size))), maybe(Seq("x", "y")(r.nextInt(2))),
+          maybe(days(r.nextInt(days.size))),
+          maybe(times(r.nextInt(times.size))),
+          maybe(java.math.BigDecimal.valueOf(r.nextInt(4).toLong, 2)),
+          maybe(r.nextBoolean()))
+      }
+      val t = fresh(s"lowcard$seed")
+      val v = t.append(spark.createDataFrame(rows.asJava, schema)
+        .coalesce(1), statsCols = statsCols, bloomCols = bloomCols)
+      assertExact(t, v, manifest(t.root, v).add.head, statsCols, bloomCols)
     }
   }
 

@@ -8,8 +8,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.{SparkEntry, SparkSpec}
 
-/** [[Profile.main]] end to end at sf0.001: its stdout records, and its
-  * failure on a prefix that selects nothing.
+/** [[Profile.main]] end to end at sf0.001: its stdout records, their
+  * bytes written, and its failure on a prefix that selects nothing.
   */
 class ProfileMainSpec extends SparkSpec {
 
@@ -33,7 +33,8 @@ class ProfileMainSpec extends SparkSpec {
       Seq("q01_pricing_summary", "q34_dedup_closure"))
     recs.foreach { r =>
       Seq("query", "sf_dir", "cores", "loadavg_start", "rows", "wall_s",
-        "min_s", "jobs", "stages", "tasks").foreach(f => assert(r.has(f), f))
+        "min_s", "jobs", "stages", "tasks", "bytes_written")
+        .foreach(f => assert(r.has(f), f))
       val name = r.get("query").asText
       assert(r.get("sf_dir").asText == sf0001)
       assert(r.get("cores").asInt == spark.sparkContext.defaultParallelism)
@@ -46,6 +47,16 @@ class ProfileMainSpec extends SparkSpec {
       assert(r.get("rows").asLong ==
         SparkEntry.queries(name)(spark, sf0001).count(), name)
     }
+  }
+
+  test("bytes_written is the faster pass's local writes: none for a read-only query") {
+    val (result, out) = profile(sf0001, "q01", "q117")
+    result.get
+    val recs = out.linesIterator.filter(_.nonEmpty).map(new ObjectMapper().readTree(_))
+      .map(r => r.get("query").asText -> r.get("bytes_written").asLong).toMap
+    assert(recs.keySet == Set("q01_pricing_summary", "q117_txlog_skipping_read"), out)
+    assert(recs("q01_pricing_summary") == 0L, out)
+    assert(recs("q117_txlog_skipping_read") > 0L, out)
   }
 
   test("a prefix that matches no query fails with a message and prints no record") {
