@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.SparkSpec
 
@@ -65,6 +65,81 @@ class TxLogCommitJobsSpec extends SparkSpec {
         Seq(TxLogTable.MatchedUpdate(None)), statsCols = Seq("k"))
       ()
     } === 5)
+  }
+
+  /** Two stats-covered appends of 100 keys each: files {0..99} and
+    * {100..199}, so a predicate on `k` decides each file.
+    */
+  private def twoFiles(name: String): TxLogTable = {
+    val t = fresh(name)
+    t.append(batch(0L, 100), statsCols = Seq("k"))
+    t.append(batch(100L, 100), statsCols = Seq("k"))
+    t
+  }
+
+  test("copy-on-write writers commit in their staging job") {
+    val o = twoFiles("overwrite")
+    assert(jobsStartedBy {
+      o.overwrite(batch(0L, 50), statsCols = Seq("k")); ()
+    } === 1)
+    // the staging job, then the check that every staged row lies in
+    // the replaced region
+    val r = twoFiles("replace")
+    assert(jobsStartedBy {
+      r.replaceWhere(batch(100L, 50), col("k") >= 100L,
+        statsCols = Seq("k")); ()
+    } === 2)
+    // stats prove which file may match, and a predicate that no file
+    // admits commits without a job
+    val d = twoFiles("delete")
+    assert(jobsStartedBy {
+      d.delete(col("k") === 5L, statsCols = Seq("k")); ()
+    } === 1)
+    assert(jobsStartedBy { d.delete(col("k") === 999L); () } === 0)
+    val u = twoFiles("update")
+    assert(jobsStartedBy {
+      u.update(col("k") === 5L, Map("v" -> lit("x")),
+        statsCols = Seq("k")); ()
+    } === 1)
+    assert(jobsStartedBy {
+      u.update(col("k") === 999L, Map("v" -> lit("x"))); ()
+    } === 0)
+  }
+
+  test("deletion-vector writers, and restore across them") {
+    val t = twoFiles("dv")
+    val v0 = t.currentVersion
+    // the rebalanced sidecar: its map stage and the write
+    assert(jobsStartedBy { t.deleteVectored(col("k") === 5L); () } === 2)
+    // plus the anti-join against the live vectors
+    assert(jobsStartedBy { t.deleteVectored(col("k") === 6L); () } === 3)
+    assert(jobsStartedBy { t.deleteVectored(col("k") === 999L); () } === 0)
+    // the sidecar and the post-images: two staging writes
+    assert(jobsStartedBy {
+      t.updateVectored(col("k") === 7L, Map("v" -> lit("x")),
+        statsCols = Seq("k")); ()
+    } === 6)
+    assert(jobsStartedBy {
+      t.updateVectored(col("k") === 999L, Map("v" -> lit("x"))); ()
+    } === 0)
+    // the change rows of the shared files' vector delta
+    assert(jobsStartedBy { t.restore(v0); () } === 7)
+  }
+
+  test("compactions") {
+    // the row count's two stages, then the write
+    val c = twoFiles("compact")
+    assert(jobsStartedBy { c.compact(1000L); () } === 3)
+    val i = twoFiles("incremental")
+    i.append(batch(200L, 10), statsCols = Seq("k"))
+    i.deleteVectored(col("k") === 5L)
+    assert(jobsStartedBy {
+      i.compactIncremental(1000L, minFileBytes = 1L << 20,
+        statsCols = Seq("k")); ()
+    } === 5)
+    // the range sample, then the write
+    val z = twoFiles("clustered")
+    assert(jobsStartedBy { z.compactClustered(Seq("k"), 2); () } === 3)
   }
 
   test("a failed staging write leaves no file behind, however many of " +
