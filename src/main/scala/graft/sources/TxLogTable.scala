@@ -468,11 +468,6 @@ final class TxLogTable(spark: SparkSession,
     (chain, schema)
   }
 
-  private def liveSetAt(v: Long): (Seq[String], StructType) = {
-    val (chain, schema) = manifestChainAt(v)
-    (chain.flatMap(_.add), schema)
-  }
-
   // ── column mapping (rename / widen without rewrites) ──────────────
 
   /** Mapping in effect for a chain: the newest manifest carries the
@@ -707,12 +702,13 @@ final class TxLogTable(spark: SparkSession,
     if (cmap.isEmpty) df else df.toDF(schema.fieldNames: _*)
   }
 
-  /** Rewrite LOGICAL column references in a pushdown/skipping
-    * expression to their physical names (stats and checkpoint rows
-    * are keyed by what the files store).
+  /** A pushdown/skipping predicate as an expression over PHYSICAL
+    * names (stats and checkpoint rows are keyed by what the files
+    * store).
     */
-  private def toPhysicalExpr(e: org.apache.spark.sql.catalyst.expressions.Expression,
-      cmap: Map[String, String]): org.apache.spark.sql.catalyst.expressions.Expression =
+  private def toPhysicalExpr(c: Column, cmap: Map[String, String])
+      : org.apache.spark.sql.catalyst.expressions.Expression = {
+    val e = org.apache.spark.sql.graft.bridge.catalystExpression(c)
     if (cmap.isEmpty) e
     else e.transform {
       case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -723,6 +719,7 @@ final class TxLogTable(spark: SparkSession,
           if cmap.contains(a.name) =>
         a.withName(cmap(a.name))
     }
+  }
 
   /** Rename a column WITHOUT rewriting data (metadata-only commit):
     * the column keeps its stable physical name in every file; only
@@ -927,6 +924,35 @@ final class TxLogTable(spark: SparkSession,
       .drop("__row_file", "__row_pos")
   }
 
+  /** The rows of `paths` not deleted by the vectors `dvDirs`, under
+    * LOGICAL names, each tagged with its vector key: `_dv_file`
+    * ("dir/part-file") and `_dv_pos` (its row position). The keys are
+    * taken on the PHYSICAL scan, since metadata columns do not survive
+    * a Project; a projection of the result prunes the scan.
+    */
+  private def dvTaggedScan(paths: Seq[String], schema: StructType,
+      cmap: Map[String, String], dvDirs: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val taggedPhys = spark.read.schema(physSchema(schema, cmap))
+      .parquet(paths: _*)
+      .withColumn("_dv_file", TxLogTable.dvFileKey)
+      .withColumn("_dv_pos", col("_metadata.row_index"))
+    val tagged =
+      if (cmap.isEmpty) taggedPhys
+      else taggedPhys.select(
+        (schema.fieldNames.map(n =>
+          col(cmap.getOrElse(n, n)).as(n)).toIndexedSeq :+
+          col("_dv_file") :+ col("_dv_pos")): _*)
+    if (dvDirs.isEmpty) tagged
+    else {
+      val dv = spark.read.schema(dvReadSchema)
+        .parquet(dvDirs.map(d => dataDir.resolve(d).toString): _*)
+        .select(col("_dv_file").as("__pf"), col("_dv_pos").as("__pp"))
+      tagged.join(dv, tagged("_dv_file") === dv("__pf") &&
+        tagged("_dv_pos") === dv("__pp"), "left_anti")
+    }
+  }
+
   /** Time-travel read: the table exactly as committed at `version`.
     * Immutable data dirs make this a plain parquet read of that
     * snapshot's file list — later commits cannot disturb it — with
@@ -983,8 +1009,7 @@ final class TxLogTable(spark: SparkSession,
     val stats: Map[String, FileStats] =
       chain.flatMap(_.stats.getOrElse(Map.empty)).toMap
     val live = chain.flatMap(_.add)
-    val filterExpr = toPhysicalExpr(
-      org.apache.spark.sql.graft.bridge.catalystExpression(filter), cmap)
+    val filterExpr = toPhysicalExpr(filter, cmap)
     // dirs whose stats live in a parquet checkpoint prune DISTRIBUTED
     // (one small Spark job over the stat rows); the driver sees only
     // the covered-dir census and the surviving file names. Lazy: a
@@ -1102,12 +1127,8 @@ final class TxLogTable(spark: SparkSession,
     val inline: Map[String, FileStats] =
       chain.flatMap(_.stats.getOrElse(Map.empty)).toMap
     val liveFiles: Seq[String] = live.flatMap { d =>
-      if (d.contains("/")) Seq(d) // file-granular entry IS the file
-      else {
-        val dir = dataDir.resolve(d)
-        if (!store.isDir(dir)) return None
-        store.list(dir).filter(_.endsWith(".parquet")).map(f => s"$d/$f")
-      }
+      if (!d.contains("/") && !store.isDir(dataDir.resolve(d))) return None
+      entryFiles(d)
     }
     val all: Map[String, FileStats] =
       if (liveFiles.forall(inline.contains)) inline
@@ -1126,35 +1147,98 @@ final class TxLogTable(spark: SparkSession,
     Some((covered, all, uncovered))
   }
 
+  /** The part-file keys ("dir/part-file") of one live entry, listed
+    * from the store: a file-granular entry IS its file.
+    */
+  private def entryFiles(e: String): Seq[String] =
+    if (e.contains("/")) Seq(e)
+    else store.list(dataDir.resolve(e)).filter(_.endsWith(".parquet"))
+      .map(f => s"$e/$f")
+
   /** Store path of a live part-file key ("dir/part-file"). */
   private[sources] def dataFilePath(key: String): String =
     dataDir.resolve(key).toString
 
   // ── touched-file DML classification (file-granular copy-on-write) ──
 
-  /** Split of a snapshot's live set under a may-touch predicate: the
-    * entries a DML commit carries forward VERBATIM (protocol-v5
-    * file-granular where a dir splits, dir-granular where it survives
-    * whole) versus the store paths whose rows the rewrite must
-    * actually read. `keptStats` re-inlines ONLY previously-inline
-    * stats (checkpoint-served stats keep riding `keptCkpt`), so a
-    * million-file table never folds its checkpoint into manifest
-    * JSON on a DML commit.
+  /** Split of a snapshot's live set for a file-granular rewrite: the
+    * entries the commit carries forward VERBATIM (dir-granular where a
+    * whole dir survives, protocol-v5 file entries where it splits),
+    * their stats, and the `dropped` part-file keys. `keptStats`
+    * re-inlines ONLY previously-inline stats (checkpoint-served stats
+    * keep riding `keptCkpt`), so a million-file table never folds its
+    * checkpoint into manifest JSON on a rewrite.
     */
-  private[sources] final case class TouchedSplit(kept: Seq[String],
+  private[sources] final case class LiveSplit(kept: Seq[String],
       keptStats: Map[String, FileStats], keptCkpt: Option[String],
-      touchedPaths: Seq[String], touchedFiles: Long) {
-    def touchedCount: Int = touchedPaths.size
+      dropped: Seq[String])
+
+  /** The one live-set walk of every file-granular rewrite (DML,
+    * replaceWhere, incremental compaction): `keep(entry, files)` gives
+    * the verdict on each part-file key of one live entry (a
+    * file-granular entry is its own only file), so a rule may also
+    * judge a dir whole. An entry none of whose files is dropped is
+    * kept as it is.
+    */
+  private def splitLive(chain: List[Manifest])(
+      keep: (String, Seq[String]) => String => Boolean): LiveSplit = {
+    val inline: Map[String, FileStats] =
+      chain.flatMap(_.stats.getOrElse(Map.empty)).toMap
+    val kept = Seq.newBuilder[String]
+    val keptFiles = Seq.newBuilder[String]
+    val dropped = Seq.newBuilder[String]
+    chain.flatMap(_.add).foreach { e =>
+      val files = entryFiles(e)
+      val (k, d) = files.partition(keep(e, files))
+      if (d.isEmpty) kept += e else { kept ++= k; dropped ++= d }
+      keptFiles ++= k
+    }
+    LiveSplit(kept.result(),
+      keptFiles.result().flatMap(f => inline.get(f).map(f -> _)).toMap,
+      chain.flatMap(_.statsFile).lastOption, dropped.result())
   }
 
-  /** Classify every live file of the chain under `mayTouch` (a
+  /** The overwrite manifest publishing `split`'s kept entries plus
+    * `staged`: kept and staged stats, the kept checkpoint, and the
+    * deletion vectors the kept entries still reference.
+    */
+  private def rewriteManifest(t0: Long, chain: List[Manifest],
+      split: LiveSplit, staged: TxLogTable.Staged, schema: StructType,
+      markers: Option[Map[String, String]], cdc: Option[Seq[String]],
+      deleted: Option[Long] = None): Manifest =
+    Manifest(0L, "overwrite", split.kept :+ staged.name, schema.json,
+      System.currentTimeMillis(), markers,
+      wrap(split.keptStats ++ staged.stats.getOrElse(Map.empty)), cdc,
+      split.keptCkpt, carriedDvFor(chain, split.kept),
+      metrics = metricsOf(t0, Seq(staged), split.dropped.size.toLong,
+        deleted = deleted))
+
+  /** Stats coverage of the live set from its stat rows `ds`: stat rows
+    * per dir, and the file-granular live entries that have their own
+    * row. The scale arms verify these against the store listing.
+    */
+  private def statsCoverage(
+      ds: org.apache.spark.sql.Dataset[TxLogTable.CkptStatRow],
+      live: Seq[String]): (Map[String, Long], Set[String]) = {
+    import spark.implicits._
+    val perDir = ds.map(_.file.takeWhile(_ != '/'))
+      .groupByKey(identity).count().collect().toMap
+    val fileEntries = live.filter(_.contains("/")).toSet
+    val coveredFiles =
+      if (fileEntries.isEmpty) Set.empty[String]
+      else ds.filter(r => fileEntries.contains(r.file))
+        .map(_.file).collect().toSet
+    (perDir, coveredFiles)
+  }
+
+  /** Classify every live file of snapshot `v` under `mayTouch` (a
     * PHYSICAL-name predicate): a file rides as kept iff its skipping
     * stats PROVE no row can satisfy the predicate and it is not in
     * `forced`; files without stats are conservatively touched (their
     * rewrite is exactly today's behavior — classification can only
-    * SHRINK the rewrite, never change its result). Granularity: a dir
-    * whose every file is kept rides as one dir entry; a split dir
-    * contributes file-granular entries (protocol v5).
+    * SHRINK the rewrite, never change its result). Returns the split
+    * and the store paths the rewrite reads, and records their count
+    * in [[TxLogTable.lastDmlRewritten]].
     *
     * Scale shape: below [[planThreshold]] verdicts fold on the driver
     * from the inline+checkpoint stats; above it, ONE Spark job over
@@ -1168,16 +1252,14 @@ final class TxLogTable(spark: SparkSession,
     */
   private def classifyTouched(v: Long, mayTouch:
       org.apache.spark.sql.catalyst.expressions.Expression,
-      forced: Set[String] = Set.empty): TouchedSplit = {
+      forced: Set[String] = Set.empty): (LiveSplit, Seq[String]) = {
     import spark.implicits._
     val (chain, schema0) = manifestChainAt(v)
-    val cmap = colMapOf(chain)
-    val phys = physSchema(schema0, cmap)
+    val phys = physSchema(schema0, colMapOf(chain))
     val live = chain.flatMap(_.add)
     val inline: Map[String, FileStats] =
       chain.flatMap(_.stats.getOrElse(Map.empty)).toMap
     val priorCkpt = chain.flatMap(_.statsFile).lastOption
-    val fileEntries = live.filter(_.contains("/")).toSet
     // verdict provider: (touched keys among stats-covered files,
     // per-dir covered-row counts, covered file-granular entries)
     val (touchedCovered: Set[String], coveredPerDir: Map[String, Long],
@@ -1192,17 +1274,14 @@ final class TxLogTable(spark: SparkSession,
           fforced.contains(f) ||
             DataSkipping.mayMatch(fexpr, fschema, fs)
         }.map(_.file).collect().toSet
-        val perDir = ds.map(_.file.takeWhile(_ != '/'))
-          .groupByKey(identity).count().collect().toMap
-        val coveredF =
-          if (fileEntries.isEmpty) Set.empty[String]
-          else ds.filter(r => fileEntries.contains(r.file))
-            .map(_.file).collect().toSet
+        val (perDir, coveredF) = statsCoverage(ds, live)
         TxLogTable.lastPlanMaterialized = touched.size + perDir.size
         (touched, perDir, coveredF)
       } else {
         val all: Map[String, FileStats] = priorCkpt match {
-          case Some(name) if !liveFileKeysCoveredInline(chain, inline) =>
+          // unless every live file's stats are inline
+          case Some(name)
+              if !live.forall(entryFiles(_).forall(inline.contains)) =>
             val template = Seq.empty[TxLogTable.CkptStatRow].toDS()
             spark.read.schema(template.schema)
               .parquet(ckptPath(name).toString)
@@ -1219,57 +1298,26 @@ final class TxLogTable(spark: SparkSession,
           all.keysIterator.map(_.takeWhile(_ != '/'))
             .toSeq.groupBy(identity).map { case (d, fs) =>
               d -> fs.size.toLong },
-          fileEntries.filter(all.contains))
+          live.filter(_.contains("/")).toSet.filter(all.contains))
       }
-    val kept = Seq.newBuilder[String]
-    val keptStats = Map.newBuilder[String, FileStats]
-    val touchedPaths = Seq.newBuilder[String]
-    var touchedFiles = 0L
-    def keepStats(f: String): Unit =
-      inline.get(f).foreach(fs => keptStats += f -> fs)
-    live.foreach { e =>
-      if (e.contains("/")) {
-        // file-granular live entry: kept iff a stat row exists for it
-        // AND the verdict proves no touch; absent stats ⇒ touched
-        if (coveredFileEntries.contains(e) && !touchedCovered.contains(e)) {
-          kept += e; keepStats(e)
-        } else { touchedPaths += dataFilePath(e); touchedFiles += 1 }
-      } else {
-        val files = store.list(dataDir.resolve(e))
-          .filter(_.endsWith(".parquet")).map(f => s"$e/$f")
-        val coveredCount = coveredPerDir.getOrElse(e, 0L)
-        if (coveredCount < files.size) {
-          // some file carries no stat row: the whole dir rewrites —
-          // keeping an unprovable file would be a lost update
-          touchedPaths += dataDir.resolve(e).toString
-          touchedFiles += files.size
-        } else {
-          val (touchedF, keptF) = files.partition(touchedCovered.contains)
-          if (touchedF.isEmpty) {
-            kept += e // whole dir survives: keep dir granularity
-            files.foreach(keepStats)
-          } else {
-            keptF.foreach { f => kept += f; keepStats(f) }
-            touchedF.foreach(f => touchedPaths += dataFilePath(f))
-            touchedFiles += touchedF.size
-          }
-        }
-      }
+    // a dir holding a file without a stat row rewrites whole — keeping
+    // an unprovable file would be a lost update; a file-granular entry
+    // without its own row is touched
+    val wholeDirs = Set.newBuilder[String]
+    val split = splitLive(chain) { (e, files) =>
+      if (e.contains("/")) f => coveredFileEntries(f) && !touchedCovered(f)
+      else if (coveredPerDir.getOrElse(e, 0L) < files.size) {
+        wholeDirs += e; _ => false
+      } else f => !touchedCovered(f)
     }
-    TouchedSplit(kept.result(), keptStats.result(), priorCkpt,
-      touchedPaths.result(), touchedFiles)
+    val whole = wholeDirs.result()
+    val touchedPaths = split.dropped.map { f =>
+      val d = f.takeWhile(_ != '/')
+      if (whole(d)) dataDir.resolve(d).toString else dataFilePath(f)
+    }.distinct
+    TxLogTable.lastDmlRewritten = touchedPaths.size
+    (split, touchedPaths)
   }
-
-  /** Whether every live file key has an INLINE stat row (then the
-    * checkpoint need not be consulted for verdicts).
-    */
-  private def liveFileKeysCoveredInline(chain: List[Manifest],
-      inline: Map[String, FileStats]): Boolean =
-    chain.flatMap(_.add).forall { e =>
-      if (e.contains("/")) inline.contains(e)
-      else store.list(dataDir.resolve(e)).filter(_.endsWith(".parquet"))
-        .forall(f => inline.contains(s"$e/$f"))
-    }
 
   /** The deletion-vector dirs a file-granular DML commit must carry:
     * the previous state when any of its (file, pos) keys still
@@ -1279,20 +1327,27 @@ final class TxLogTable(spark: SparkSession,
     */
   private def carriedDvFor(chain: List[Manifest],
       kept: Seq[String]): Option[Seq[String]] = {
-    import org.apache.spark.sql.functions.{col, lit, substring_index}
     val prev = dvDirsOf(chain)
     if (prev.isEmpty || kept.isEmpty) return None
-    val (keptFiles, keptDirs) = kept.partition(_.contains("/"))
-    val byDir =
-      if (keptDirs.isEmpty) lit(false)
-      else substring_index(col("_dv_file"), "/", 1).isin(keptDirs: _*)
-    val byFile =
-      if (keptFiles.isEmpty) lit(false)
-      else col("_dv_file").isin(keptFiles: _*)
     val anyRef = !spark.read.schema(dvReadSchema)
       .parquet(prev.map(d => dataDir.resolve(d).toString): _*)
-      .filter(byDir || byFile).isEmpty
+      .filter(dvKeyIn(kept)).isEmpty
     if (anyRef) Some(prev) else None
+  }
+
+  /** Whether a deletion-vector row's key ("dir/part-file") belongs to
+    * one of the live `entries`: its dir is a dir entry, or the key
+    * itself is a file-granular entry.
+    */
+  private def dvKeyIn(entries: Seq[String]): Column = {
+    import org.apache.spark.sql.functions.{col, lit, substring_index}
+    val (files, dirs) = entries.partition(_.contains("/"))
+    val byDir =
+      if (dirs.isEmpty) lit(false)
+      else substring_index(col("_dv_file"), "/", 1).isin(dirs: _*)
+    val byFile =
+      if (files.isEmpty) lit(false) else col("_dv_file").isin(files: _*)
+    byDir || byFile
   }
 
   /** Skipping predicate (PHYSICAL names) a file must pass to possibly
@@ -1381,24 +1436,10 @@ final class TxLogTable(spark: SparkSession,
     val (chain, schema) = manifestChainAt(v)
     val live = chain.flatMap(_.add)
     if (live.isEmpty) return Set.empty
-    val cmap = colMapOf(chain)
-    val keyPhys = key.map(k => cmap.getOrElse(k, k))
-    val paths = live.map(d => dataDir.resolve(d).toString)
-    val tagged = spark.read.schema(physSchema(schema, cmap))
-      .parquet(paths: _*)
-      .select((keyPhys.map(col) :+ TxLogTable.dvFileKey.as("__f") :+
-        col("_metadata.row_index").as("__p")): _*)
-    val dvs = dvDirsOf(chain)
-    val alive =
-      if (dvs.isEmpty) tagged
-      else {
-        val dv = spark.read.schema(dvReadSchema)
-          .parquet(dvs.map(d => dataDir.resolve(d).toString): _*)
-          .select(col("_dv_file").as("__f"), col("_dv_pos").as("__p"))
-        tagged.join(dv, Seq("__f", "__p"), "left_anti")
-      }
-    alive.groupBy(keyPhys.map(col): _*)
-      .agg(count(lit(1)).as("__n"), collect_set(col("__f")).as("__fs"))
+    dvTaggedScan(live.map(d => dataDir.resolve(d).toString), schema,
+      colMapOf(chain), dvDirsOf(chain))
+      .groupBy(key.map(col): _*)
+      .agg(count(lit(1)).as("__n"), collect_set(col("_dv_file")).as("__fs"))
       .filter(col("__n") > 1)
       .select(explode(col("__fs")).as("f"))
       .distinct().collect().map(_.getString(0)).toSet
@@ -1586,17 +1627,10 @@ final class TxLogTable(spark: SparkSession,
     // own row — a live file without a stat row (external writer,
     // older-format commit) refuses here exactly as the driver arm
     // does, instead of silently undercounting
-    val perDir = ds.map(_.file.takeWhile(_ != '/'))
-      .groupByKey(identity).count().collect().toMap
-    val fileEntries = live.filter(_.contains("/")).toSet
-    val coveredFiles: Set[String] =
-      if (fileEntries.isEmpty) Set.empty
-      else ds.filter(row => fileEntries.contains(row.file))
-        .map(_.file).collect().toSet
+    val (perDir, coveredFiles) = statsCoverage(ds, live)
     val covered = live.forall { e =>
       if (e.contains("/")) coveredFiles.contains(e)
-      else perDir.getOrElse(e, 0L) ==
-        store.list(dataDir.resolve(e)).count(_.endsWith(".parquet"))
+      else perDir.getOrElse(e, 0L) == entryFiles(e).size
     }
     if (!covered) return None
     val rows = r.getLong(r.fieldIndex("_rows"))
@@ -1763,21 +1797,14 @@ final class TxLogTable(spark: SparkSession,
     // PARTIALLY covered dir contributes its uncensused files as
     // stragglers, and a file-granular entry without its own row
     // straggles too. Nothing is silently undercounted.
-    val perDir = ds.map(_.file.takeWhile(_ != '/'))
-      .groupByKey(identity).count().collect().toMap
-    val fileEntries = live.filter(_.contains("/")).toSet
-    val coveredFiles: Set[String] =
-      if (fileEntries.isEmpty) Set.empty
-      else ds.filter(row => fileEntries.contains(row.file))
-        .map(_.file).collect().toSet
+    val (perDir, coveredFiles) = statsCoverage(ds, live)
     val uncoveredDirs = Seq.newBuilder[String]
     val uncoveredFiles = Seq.newBuilder[String]
     live.foreach { e =>
       if (e.contains("/")) {
         if (!coveredFiles.contains(e)) uncoveredFiles += e
       } else {
-        val listed = store.list(dataDir.resolve(e))
-          .filter(_.endsWith(".parquet")).map(f => s"$e/$f")
+        val listed = entryFiles(e)
         val rows = perDir.getOrElse(e, 0L)
         if (rows == 0L && listed.nonEmpty) uncoveredDirs += e
         else if (rows != listed.size) {
@@ -1957,36 +1984,48 @@ final class TxLogTable(spark: SparkSession,
       spark.sessionState.conf.sessionLocalTimeZone)
   }
 
-  /** Commit a dir the V2 writers already staged (the driver half of
-    * [[TxLogBatchWrite]]): same optimistic loop and commit shape as
-    * [[append]]/[[overwrite]]. CHECK constraints were enforced
-    * IN-TASK by the writers (fail-fast per row, single pass — the
-    * point the V1 staging job enforces at); the commit re-validates
-    * with one batch-sized read only when the live set MOVED since the
-    * writers bound theirs (a concurrent addConstraint — the same race
-    * guard [[append]] has). The stats came back with the writers'
-    * commit messages, as on the V1 path.
+  /** Commit a staged dir: the driver half of every blind write, V1
+    * ([[append]], [[overwrite]]) and V2 ([[TxLogBatchWrite]]). CHECK
+    * constraints were enforced while staging (fail-fast per row,
+    * single pass); the commit re-validates with one batch-sized read
+    * only when the set live at `v` differs from
+    * `validatedConstraints`, the set the staging enforced (a
+    * concurrent addConstraint). An append evolves the schema against
+    * the snapshot it commits on. The stats came back with the writers'
+    * commit messages.
     */
-  private[sources] def commitStagedV2(staged: TxLogTable.Staged,
+  private[sources] def commitStaged(staged: TxLogTable.Staged,
       batchSchema: StructType, overwrite: Boolean, t0: Long,
       validatedConstraints: Map[String, String] = Map.empty,
       maxRetries: Int = 20,
       markers: Map[String, String] = Map.empty): Long =
     commitLoop(maxRetries) { v =>
-      val cs = constraintsAt(v)
-      if (cs.nonEmpty && cs != validatedConstraints)
-        enforce(readPhysical(Seq(stagedDirPath(staged.name)), batchSchema,
-          colMapAt(v)), cs).foreach(_ => ())
-      val schema =
-        if (v < 0 || overwrite) batchSchema
-        else evolveSchema(manifestChainAt(v)._2, batchSchema, colMapAt(v),
-          droppedColsAt(v).toSeq)
+      val schema = stagedSchemaAt(v, staged, batchSchema, overwrite,
+        validatedConstraints)
       Some(Manifest(0L, if (overwrite) "overwrite" else "append",
         Seq(staged.name), schema.json, System.currentTimeMillis(),
         wrap(markers), staged.stats,
         metrics = metricsOf(t0, Seq(staged),
           if (overwrite) liveFileCount(v) else 0L)))
     }
+
+  /** The schema a staged batch commits under at snapshot `v`: the
+    * batch's own when it replaces the schema (an overwrite, or the
+    * first commit), else the snapshot's evolved by it. Before that,
+    * the staged rows are re-validated when the CHECK set live at `v`
+    * is not `validated`, the one the staging enforced.
+    */
+  private def stagedSchemaAt(v: Long, staged: TxLogTable.Staged,
+      batchSchema: StructType, replacesSchema: Boolean,
+      validated: Map[String, String]): StructType = {
+    val cs = constraintsAt(v)
+    if (cs.nonEmpty && cs != validated)
+      enforce(readPhysical(Seq(stagedDirPath(staged.name)), batchSchema,
+        colMapAt(v)), cs).foreach(_ => ())
+    if (v < 0 || replacesSchema) batchSchema
+    else evolveSchema(manifestChainAt(v)._2, batchSchema, colMapAt(v),
+      droppedColsAt(v).toSeq)
+  }
 
   /** Reader protocol the snapshot's manifest actually requires —
     * the DESCRIBE DETAIL surface (derived from feature presence at
@@ -2019,7 +2058,7 @@ final class TxLogTable(spark: SparkSession,
       .map { case (f, ps) => f -> ps.map(_._2).distinct.sorted.toArray }
   }
 
-  private def wrap(m: Map[String, String]): Option[Map[String, String]] =
+  private def wrap[V](m: Map[String, V]): Option[Map[String, V]] =
     if (m.isEmpty) None else Some(m)
 
   /** Latest value of commit marker `name`, searching newest-first —
@@ -2156,10 +2195,8 @@ final class TxLogTable(spark: SparkSession,
     */
   private def liveFileCount(v: Long): Long =
     if (v < 0) 0L
-    else manifestChainAt(v)._1.flatMap(_.add).map { e =>
-      if (e.contains("/")) 1L
-      else store.list(dataDir.resolve(e)).count(_.endsWith(".parquet")).toLong
-    }.sum
+    else manifestChainAt(v)._1.flatMap(_.add)
+      .map(entryFiles(_).size.toLong).sum
 
   /** The atomic publish, delegated to the [[CommitOwner]] seam: the
     * whole concurrency story reduces to put-if-absent with exactly one
@@ -2292,22 +2329,8 @@ final class TxLogTable(spark: SparkSession,
     val cs0 = constraintsAt(currentVersion)
     val staged = stageData(df, sortCols, checkConstraints = true,
       statsCols = statsCols, bloomCols = bloomCols)
-    commitLoop(maxRetries) { v =>
-      // staging enforced the constraints live at STAGING time; a
-      // concurrent addConstraint would otherwise slip violating rows
-      // under a live CHECK — when the set moved, re-validate the
-      // already-staged data against the set this commit will assert
-      if (v >= 0 && constraintsAt(v) != cs0)
-        enforce(readPhysical(Seq(dataDir.resolve(staged.name).toString),
-          df.schema, colMapAt(v)), constraintsAt(v)).foreach(_ => ())
-      val schema =
-        if (v < 0) df.schema
-        else evolveSchema(manifestChainAt(v)._2, df.schema, colMapAt(v),
-          droppedColsAt(v).toSeq)
-      Some(Manifest(0L, "append", Seq(staged.name), schema.json,
-        System.currentTimeMillis(), wrap(markers), staged.stats,
-        metrics = metricsOf(t0, Seq(staged))))
-    }
+    commitStaged(staged, df.schema, overwrite = false, t0, cs0, maxRetries,
+      markers)
   }
 
   /** Full overwrite: last-writer-wins by design (no read dependency),
@@ -2322,15 +2345,8 @@ final class TxLogTable(spark: SparkSession,
     val cs0 = constraintsAt(currentVersion)
     val staged = stageData(df, sortCols, checkConstraints = true,
       statsCols = statsCols, bloomCols = bloomCols)
-    val schemaJson = df.schema.json
-    commitLoop(maxRetries) { v =>
-      if (v >= 0 && constraintsAt(v) != cs0)
-        enforce(readPhysical(Seq(dataDir.resolve(staged.name).toString),
-          df.schema, colMapAt(v)), constraintsAt(v)).foreach(_ => ())
-      Some(Manifest(0L, "overwrite", Seq(staged.name), schemaJson,
-        System.currentTimeMillis(), wrap(markers), staged.stats,
-        metrics = metricsOf(t0, Seq(staged), liveFileCount(v))))
-    }
+    commitStaged(staged, df.schema, overwrite = true, t0, cs0, maxRetries,
+      markers)
   }
 
   /** Predicate-scoped overwrite — the Delta `replaceWhere` idiom:
@@ -2359,22 +2375,14 @@ final class TxLogTable(spark: SparkSession,
     val cs0 = constraintsAt(currentVersion)
     val staged = stageData(data, sortCols, checkConstraints = true,
       statsCols = statsCols, bloomCols = bloomCols)
-    requireStagedInRegion(staged.name, data.schema, condition)
-    commitLoop(maxRetries) { v =>
-      if (v >= 0 && constraintsAt(v) != cs0)
-        enforce(readPhysical(Seq(dataDir.resolve(staged.name).toString),
-          data.schema, colMapAt(v)), constraintsAt(v)).foreach(_ => ())
-      val schema =
-        if (v < 0) data.schema
-        else evolveSchema(manifestChainAt(v)._2, data.schema, colMapAt(v),
-          droppedColsAt(v).toSeq)
-      Some(replaceWhereManifest(v, staged, schema, condition, t0))
-    }
+    commitStagedReplaceWhere(staged, data.schema, condition, t0, cs0,
+      maxRetries)
   }
 
-  /** The native-V2 half of replaceWhere ([[TxLogBatchWrite]] with an
-    * overwrite predicate): the writers already staged `dirName`; the
-    * commit classifies the snapshot's files and publishes the swap.
+  /** The driver half of replaceWhere, V1 ([[replaceWhere]]) and V2
+    * ([[TxLogBatchWrite]] with an overwrite predicate): the batch is
+    * staged; the commit classifies the snapshot's files and publishes
+    * the swap.
     */
   private[sources] def commitStagedReplaceWhere(staged: TxLogTable.Staged,
       batchSchema: StructType, condition: Column, t0: Long,
@@ -2382,14 +2390,8 @@ final class TxLogTable(spark: SparkSession,
       maxRetries: Int = 20): Long = {
     requireStagedInRegion(staged.name, batchSchema, condition)
     commitLoop(maxRetries) { v =>
-      val cs = constraintsAt(v)
-      if (cs.nonEmpty && cs != validatedConstraints)
-        enforce(readPhysical(Seq(stagedDirPath(staged.name)), batchSchema,
-          colMapAt(v)), cs).foreach(_ => ())
-      val schema =
-        if (v < 0) batchSchema
-        else evolveSchema(manifestChainAt(v)._2, batchSchema, colMapAt(v),
-          droppedColsAt(v).toSeq)
+      val schema = stagedSchemaAt(v, staged, batchSchema,
+        replacesSchema = false, validatedConstraints)
       Some(replaceWhereManifest(v, staged, schema, condition, t0))
     }
   }
@@ -2420,8 +2422,7 @@ final class TxLogTable(spark: SparkSession,
     val (chain, schema0) = manifestChainAt(v)
     val cmap = colMapOf(chain)
     val phys = physSchema(schema0, cmap)
-    val predExpr = toPhysicalExpr(
-      org.apache.spark.sql.graft.bridge.catalystExpression(condition), cmap)
+    val predExpr = toPhysicalExpr(condition, cmap)
     val all: Map[String, FileStats] = fileStatsSplitAt(v) match {
       case Some((_, m, uncovered)) =>
         require(uncovered.isEmpty,
@@ -2433,43 +2434,19 @@ final class TxLogTable(spark: SparkSession,
       case None => throw new IllegalStateException(
         s"live data dirs missing under $root")
     }
-    // kept-file stats that already live in a parquet checkpoint keep
-    // being served by it (the statsFile reference rides the new
-    // manifest) — only previously-INLINE stats re-inline, so a
-    // million-file replaceWhere never folds the checkpoint into JSON
-    val priorInline: Map[String, FileStats] =
-      chain.flatMap(_.stats.getOrElse(Map.empty)).toMap
-    val priorCkpt: Option[String] = chain.flatMap(_.statsFile).lastOption
-    val kept = Seq.newBuilder[String]
-    val dropped = Seq.newBuilder[String]
-    val keptStats = Map.newBuilder[String, FileStats]
-    chain.flatMap(_.add).foreach { e =>
-      val files: Seq[String] =
-        if (e.contains("/")) Seq(e)
-        else store.list(dataDir.resolve(e)).filter(_.endsWith(".parquet"))
-          .map(f => s"$e/$f")
-      val verdicts: Seq[(String, Boolean)] = files.map { f =>
-        val fs = all(f)
-        if (DataSkipping.mustMatch(predExpr, phys, fs)) (f, false)
-        else if (!DataSkipping.mayMatch(predExpr, phys, fs)) (f, true)
-        else throw new IllegalArgumentException(
-          s"replaceWhere predicate is not file-decidable for $f: its " +
-            "value range straddles the predicate. Cluster the table on " +
-            "the predicate columns (PARTITIONED BY / OPTIMIZE ZORDER) " +
-            "for file-granular replacement, or use MERGE/DELETE for " +
-            "row-level semantics")
-      }
-      def keepStats(f: String): Unit =
-        priorInline.get(f).foreach(fs => keptStats += f -> fs)
-      if (verdicts.nonEmpty && verdicts.forall(_._2) && !e.contains("/")) {
-        kept += e // the whole dir survives: keep dir granularity
-        verdicts.foreach { case (f, _) => keepStats(f) }
-      } else verdicts.foreach { case (f, keep) =>
-        if (keep) { kept += f; keepStats(f) }
-        else dropped += f
-      }
+    // drop a file every row of which must match, keep one no row of
+    // which can, and refuse one that straddles the predicate
+    val split = splitLive(chain) { (_, _) => f =>
+      val fs = all(f)
+      if (DataSkipping.mustMatch(predExpr, phys, fs)) false
+      else if (!DataSkipping.mayMatch(predExpr, phys, fs)) true
+      else throw new IllegalArgumentException(
+        s"replaceWhere predicate is not file-decidable for $f: its " +
+          "value range straddles the predicate. Cluster the table on " +
+          "the predicate columns (PARTITIONED BY / OPTIMIZE ZORDER) " +
+          "for file-granular replacement, or use MERGE/DELETE for " +
+          "row-level semantics")
     }
-    val mergedStats = keptStats.result() ++ staged.stats.getOrElse(Map.empty)
     // CDC contract: `removed` names the dropped files so [[changes]]
     // emits a PRECISE delete+insert feed for this commit (the Delta
     // replaceWhere CDF shape). `cdc` stays None on purpose — a reader
@@ -2482,16 +2459,11 @@ final class TxLogTable(spark: SparkSession,
     // state forward when any kept file is referenced (the CDC feed
     // reads the removed census DV-applied, so already-deleted rows
     // never resurface as deletes)
-    Manifest(0L, "overwrite", kept.result() :+ staged.name, schema.json,
-      System.currentTimeMillis(),
-      markers = Some(Map("replace_where" -> condition.toString)),
-      stats = if (mergedStats.isEmpty) None else Some(mergedStats),
-      statsFile = priorCkpt,
-      dv = carriedDvFor(chain, kept.result()),
-      removed = if (dropped.result().isEmpty) None
-        else Some(dropped.result()),
-      metrics = metricsOf(t0, Seq(staged), dropped.result().size.toLong,
-        deleted = Some(dropped.result().map(all(_).rows).sum)))
+    rewriteManifest(t0, chain, split, staged, schema,
+      Some(Map("replace_where" -> condition.toString)), None,
+      deleted = Some(split.dropped.map(all(_).rows).sum))
+      .copy(removed = if (split.dropped.isEmpty) None
+        else Some(split.dropped))
   }
 
   /** Transactional MERGE (S10/J2 semantics — latest-wins by
@@ -2514,56 +2486,51 @@ final class TxLogTable(spark: SparkSession,
     * files plus one key-column scan — not the table. When NO file may
     * match (all-new keys), the merge commits as a plain APPEND of the
     * deduped batch.
-    *
-    * `assumeKeyUnique = true` skips the duplicate-key census — the
-    * caller asserts the snapshot holds at most one row per key (true
-    * by construction for a table whose history is merges /
-    * insert-ignores / compactions), making the merge cost purely
-    * delta-proportional at 100 TB. With the assertion false and
-    * duplicates present in KEPT files, those groups would survive
-    * uncollapsed — that is the contract being opted out of.
     */
   def merge(updates0: DataFrame, key: Seq[String], precedence: Seq[Column],
       sortCols: Seq[String] = Nil, maxRetries: Int = 20,
       markers: Map[String, String] = Map.empty,
-      statsCols: Seq[String] = Nil,
-      assumeKeyUnique: Boolean = false): Long = {
-    // the batch feeds three consumers (key-predicate distinct, the
-    // latest-wins join, the CDC touched-key set) — materialize it once
-    // (MEMORY_AND_DISK) instead of re-executing an arbitrarily
-    // expensive upstream pipeline per consumer; also pins one
-    // consistent snapshot of a non-deterministic source across
-    // commit retries. Delta-sized by the merge contract; released on
-    // return — unless the CALLER already cached it (persist returns
-    // the same Dataset), in which case unpersisting here would
-    // silently drop their cache (ADVICE r17).
+      statsCols: Seq[String] = Nil): Long = {
     val t0 = System.currentTimeMillis()
-    val callerCached = updates0.storageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE
-    val updates = if (callerCached) updates0 else updates0.persist()
-    try commitLoop(maxRetries) { v =>
-      val (chain, schema) = manifestChainAt(v)
-      val cmap = colMapOf(chain)
-      val keyPred = sourceKeyPredicate(updates, key, schema, cmap,
-        nullKeysMatch = true)
-      val dupFiles =
-        if (assumeKeyUnique) Set.empty[String]
-        else dupKeyFileCensus(v, key)
-      val split = classifyTouched(v, keyPred, forced = dupFiles)
-      TxLogTable.lastDmlRewritten = split.touchedCount
-      val target =
-        if (split.touchedPaths.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        else readPathsAt(v, split.touchedPaths)
-      // CDC: the same tasks that write the merged rows write the
-      // change rows (pre/post images, typed), so the change set is BY
-      // CONSTRUCTION consistent with the commit
-      val (merged, spec) = latestWinsTagged(target, updates, key, precedence)
-      val staged = stageData(merged, sortCols, checkConstraints = true,
-        statsCols = statsCols, changes = Some(spec))
-      commitDml(t0, chain, split, staged, schemaOf(merged, spec), markers)
+    // the batch feeds three consumers (key-predicate distinct, the
+    // latest-wins join, the CDC touched-key set)
+    persistedOnce(updates0) { updates =>
+      commitLoop(maxRetries) { v =>
+        val (chain, schema) = manifestChainAt(v)
+        val keyPred = sourceKeyPredicate(updates, key, schema,
+          colMapOf(chain), nullKeysMatch = true)
+        val (split, touched) =
+          classifyTouched(v, keyPred, forced = dupKeyFileCensus(v, key))
+        val target =
+          if (touched.isEmpty)
+            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+          else readPathsAt(v, touched)
+        // CDC: the same tasks that write the merged rows write the
+        // change rows (pre/post images, typed), so the change set is BY
+        // CONSTRUCTION consistent with the commit
+        val (merged, spec) =
+          latestWinsTagged(target, updates, key, precedence)
+        val staged = stageData(merged, sortCols, checkConstraints = true,
+          statsCols = statsCols, changes = Some(spec))
+        commitDml(t0, chain, split, staged, schemaOf(merged, spec), markers)
+      }
     }
-    finally { if (!callerCached) updates.unpersist(); () }
+  }
+
+  /** Run `body` on `df` materialized once (MEMORY_AND_DISK), for a
+    * batch with several consumers: an arbitrarily expensive upstream
+    * pipeline runs once instead of once per consumer, and a
+    * non-deterministic source keeps one snapshot across commit
+    * retries. Released on return — unless the CALLER already cached
+    * it (persist returns the same Dataset), in which case unpersisting
+    * here would silently drop their cache.
+    */
+  private def persistedOnce[T](df: DataFrame)(body: DataFrame => T): T = {
+    val callerCached =
+      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val cached = if (callerCached) df else df.persist()
+    try body(cached)
+    finally { if (!callerCached) cached.unpersist(); () }
   }
 
   /** The data columns of a change-tagged frame. */
@@ -2576,22 +2543,25 @@ final class TxLogTable(spark: SparkSession,
     * an append, which extends the live set without re-asserting it.
     */
   private def commitDml(t0: Long, chain: List[Manifest],
-      split: TouchedSplit, staged: TxLogTable.Staged, schema: StructType,
+      split: LiveSplit, staged: TxLogTable.Staged, schema: StructType,
       markers: Map[String, String]): Option[Manifest] = {
     val cdc = Some(staged.changeDir.toSeq)
-    if (split.touchedPaths.isEmpty && chain.flatMap(_.add).nonEmpty)
+    if (split.dropped.isEmpty && chain.flatMap(_.add).nonEmpty)
       Some(Manifest(0L, "append", Seq(staged.name), schema.json,
         System.currentTimeMillis(), wrap(markers), staged.stats, cdc,
         metrics = metricsOf(t0, Seq(staged))))
-    else {
-      val mergedStats = split.keptStats ++ staged.stats.getOrElse(Map.empty)
-      Some(Manifest(0L, "overwrite", split.kept :+ staged.name,
-        schema.json, System.currentTimeMillis(), wrap(markers),
-        if (mergedStats.isEmpty) None else Some(mergedStats),
-        cdc, split.keptCkpt, carriedDvFor(chain, split.kept),
-        metrics = metricsOf(t0, Seq(staged), split.touchedFiles)))
-    }
+    else Some(rewriteManifest(t0, chain, split, staged, schema,
+      wrap(markers), cdc))
   }
+
+  /** A commit that changes no row (stats prove nothing matches): the
+    * live set, its stats and deletion vectors stay, and the markers
+    * land, so a replay finds them as it would after a match.
+    */
+  private def noChange(schema: StructType, markers: Map[String, String],
+      dv: Option[Seq[String]] = None): Option[Manifest] =
+    Some(Manifest(0L, "append", Nil, schema.json, System.currentTimeMillis(),
+      wrap(markers), None, Some(Nil), None, dv))
 
   /** [[Upsert.mergeByKey]] as a change-tagged frame ([[ChangeSpec]]):
     * per key, the row that sorts first by `precedence` over target ∪
@@ -2661,37 +2631,23 @@ final class TxLogTable(spark: SparkSession,
     commitLoop(maxRetries) { v =>
       val (chain, schema) = manifestChainAt(v)
       val cond = coalesce(condition, lit(false))
-      val cmap = colMapOf(chain)
       // classify on the RAW condition (the coalesce null-guard is row
       // semantics — a null-evaluating row is a non-match either way —
       // but it would hide the predicate from the stats evaluator)
-      val predExpr = toPhysicalExpr(
-        org.apache.spark.sql.graft.bridge.catalystExpression(condition),
-        cmap)
-      val split = classifyTouched(v, predExpr)
-      TxLogTable.lastDmlRewritten = split.touchedCount
-      if (split.touchedPaths.isEmpty)
-        // stats prove no row matches: metadata-only commit (marker
-        // parity), live set and deletion vectors unchanged
-        Some(Manifest(0L, "append", Nil, schema.json,
-          System.currentTimeMillis(), wrap(markers), None, Some(Nil)))
+      val (split, touched) =
+        classifyTouched(v, toPhysicalExpr(condition, colMapOf(chain)))
+      if (touched.isEmpty) noChange(schema, markers)
       else {
         // one pass writes the kept rows and the deleted rows' `delete`
         // change rows
-        val target = readPathsAt(v, split.touchedPaths)
+        val target = readPathsAt(v, touched)
         val width = target.columns.length
         val staged = stageData(
           target.withColumn(ChangeSpec.Column,
             when(cond, ChangeSpec.Delete).otherwise(ChangeSpec.Data)),
           sortCols, statsCols = statsCols, bloomCols = bloomCols,
           changes = Some(ChangeSpec(width, 0, width)))
-        val merged = split.keptStats ++ staged.stats.getOrElse(Map.empty)
-        Some(Manifest(0L, "overwrite", split.kept :+ staged.name,
-          schema.json, System.currentTimeMillis(), wrap(markers),
-          if (merged.isEmpty) None else Some(merged),
-          Some(staged.changeDir.toSeq), split.keptCkpt,
-          carriedDvFor(chain, split.kept),
-          metrics = metricsOf(t0, Seq(staged), split.touchedFiles)))
+        commitDml(t0, chain, split, staged, schema, markers)
       }
     }
   }
@@ -2719,15 +2675,11 @@ final class TxLogTable(spark: SparkSession,
     val t0 = System.currentTimeMillis()
     commitLoop(maxRetries) { v =>
       val (chain, schema) = manifestChainAt(v)
-      val live = chain.flatMap(_.add)
-      if (live.isEmpty)
-        // nothing to delete from; still commit (marker/idempotency
-        // parity with delete()); dv = None inherits the (empty) state
-        Some(Manifest(0L, "append", Nil, schema.json,
-          System.currentTimeMillis(), wrap(markers), None, Some(Nil)))
+      // nothing to delete from: still commit (marker/idempotency
+      // parity with delete()); dv = None inherits the (empty) state
+      if (chain.flatMap(_.add).isEmpty) noChange(schema, markers)
       else {
         val prevDv = dvDirsOf(chain)
-        val cmap = colMapOf(chain)
         val cond = coalesce(condition, lit(false))
         // scan only the files the manifest stats cannot rule out for
         // `condition` — a point delete on a stats-covered 100 TB table
@@ -2736,46 +2688,23 @@ final class TxLogTable(spark: SparkSession,
         // The RAW condition feeds the skipping evaluator (the coalesce
         // null-guard would hide it); the row filter keeps the guard.
         val mayMatch = scanPathsAt(v, condition)
-        if (mayMatch.isEmpty)
-          // stats prove no row matches: a no-op delete commit (marker
-          // parity), inheriting the existing vectors unchanged
-          Some(Manifest(0L, "append", Nil, schema.json,
-            System.currentTimeMillis(), wrap(markers), None, Some(Nil),
-            None, Some(prevDv)))
+        // stats prove no row matches: a no-op delete commit (marker
+        // parity), inheriting the existing vectors unchanged
+        if (mayMatch.isEmpty) noChange(schema, markers, Some(prevDv))
         else {
-        // tag positions on the PHYSICAL scan (metadata columns don't
-        // survive a Project), then surface logical names for `cond`
-        val taggedPhys = spark.read.schema(physSchema(schema, cmap))
-          .parquet(mayMatch: _*)
-          .withColumn("_dv_file", TxLogTable.dvFileKey)
-          .withColumn("_dv_pos", col("_metadata.row_index"))
-        val tagged =
-          if (cmap.isEmpty) taggedPhys
-          else taggedPhys.select(
-            (schema.fieldNames.map(n =>
-              col(cmap.getOrElse(n, n)).as(n)).toIndexedSeq :+
-              col("_dv_file") :+ col("_dv_pos")): _*)
-        val alive =
-          if (prevDv.isEmpty) tagged
-          else {
-            val dv = spark.read.schema(dvReadSchema)
-              .parquet(prevDv.map(d => dataDir.resolve(d).toString): _*)
-              .select(col("_dv_file").as("__pf"), col("_dv_pos").as("__pp"))
-            tagged.join(dv, tagged("_dv_file") === dv("__pf") &&
-              tagged("_dv_pos") === dv("__pp"), "left_anti")
-          }
-        // rebalance the sidecar: the shuffle carries DELETED ROWS ONLY
-        // (scan parallelism untouched), and AQE coalesces it — a point
-        // delete stages one small file instead of one near-empty file
-        // per surviving scan task; a bulk delete still writes parallel
-        val staged = stageData(
-          alive.filter(cond).withColumn("_change_type", lit("delete"))
-            .hint("rebalance"))
-        Some(Manifest(0L, "append", Nil, schema.json,
-          System.currentTimeMillis(), wrap(markers), None,
-          Some(Seq(staged.name)), None, Some(prevDv :+ staged.name),
-          metrics = metricsOf(t0, Nil,
-            deleted = Some(staged.files.map(_.rows).sum))))
+          val alive = dvTaggedScan(mayMatch, schema, colMapOf(chain), prevDv)
+          // rebalance the sidecar: the shuffle carries DELETED ROWS ONLY
+          // (scan parallelism untouched), and AQE coalesces it — a point
+          // delete stages one small file instead of one near-empty file
+          // per surviving scan task; a bulk delete still writes parallel
+          val staged = stageData(
+            alive.filter(cond).withColumn("_change_type", lit("delete"))
+              .hint("rebalance"))
+          Some(Manifest(0L, "append", Nil, schema.json,
+            System.currentTimeMillis(), wrap(markers), None,
+            Some(Seq(staged.name)), None, Some(prevDv :+ staged.name),
+            metrics = metricsOf(t0, Nil,
+              deleted = Some(staged.files.map(_.rows).sum))))
         }
       }
     }
@@ -2816,34 +2745,12 @@ final class TxLogTable(spark: SparkSession,
       val cond = coalesce(condition, lit(false))
       val mayMatch =
         if (live.isEmpty) Nil else scanPathsAt(v, condition)
-      if (mayMatch.isEmpty)
-        // provably no matching row: metadata-only commit (marker
-        // parity), vectors inherited unchanged
-        Some(Manifest(0L, "append", Nil, schema.json,
-          System.currentTimeMillis(), wrap(markers), None, Some(Nil)))
+      // provably no matching row: metadata-only commit (marker
+      // parity), vectors inherited unchanged
+      if (mayMatch.isEmpty) noChange(schema, markers)
       else {
         val prevDv = dvDirsOf(chain)
-        val cmap = colMapOf(chain)
-        val taggedPhys = spark.read.schema(physSchema(schema, cmap))
-          .parquet(mayMatch: _*)
-          .withColumn("_dv_file", TxLogTable.dvFileKey)
-          .withColumn("_dv_pos", col("_metadata.row_index"))
-        val tagged =
-          if (cmap.isEmpty) taggedPhys
-          else taggedPhys.select(
-            (schema.fieldNames.map(n =>
-              col(cmap.getOrElse(n, n)).as(n)).toIndexedSeq :+
-              col("_dv_file") :+ col("_dv_pos")): _*)
-        val alive =
-          if (prevDv.isEmpty) tagged
-          else {
-            val dv = spark.read.schema(dvReadSchema)
-              .parquet(prevDv.map(d => dataDir.resolve(d).toString): _*)
-              .select(col("_dv_file").as("__pf"),
-                col("_dv_pos").as("__pp"))
-            tagged.join(dv, tagged("_dv_file") === dv("__pf") &&
-              tagged("_dv_pos") === dv("__pp"), "left_anti")
-          }
+        val alive = dvTaggedScan(mayMatch, schema, colMapOf(chain), prevDv)
         val hit = alive.filter(cond)
         // sidecar = DV entries + full pre-images (the CDC pre leg)
         val sidecar = stageData(
@@ -2896,20 +2803,14 @@ final class TxLogTable(spark: SparkSession,
       // files whose stats admit a matching row are read and rewritten.
       // Classified on the RAW condition — the coalesce null-guard is
       // row semantics, invisible to the stats evaluator.
-      val cmap = colMapOf(chain)
-      val predExpr = toPhysicalExpr(
-        org.apache.spark.sql.graft.bridge.catalystExpression(condition),
-        cmap)
-      val split = classifyTouched(v, predExpr)
-      TxLogTable.lastDmlRewritten = split.touchedCount
-      if (split.touchedPaths.isEmpty)
-        Some(Manifest(0L, "append", Nil, schema.json,
-          System.currentTimeMillis(), wrap(markers), None, Some(Nil)))
+      val (split, touched) =
+        classifyTouched(v, toPhysicalExpr(condition, colMapOf(chain)))
+      if (touched.isEmpty) noChange(schema, markers)
       else {
         // one pass writes the updated snapshot and, for matching rows,
         // the pre/post change rows: data columns are the assigned row,
         // followed by the old row as the pre-image
-        val target = readPathsAt(v, split.touchedPaths)
+        val target = readPathsAt(v, touched)
         val fields = target.schema.fields.toSeq
         val staged = stageData(
           target.select(fields.map { f =>
@@ -2926,13 +2827,7 @@ final class TxLogTable(spark: SparkSession,
           bloomCols = bloomCols,
           changes = Some(ChangeSpec(fields.size, fields.size,
             2 * fields.size)))
-        val merged = split.keptStats ++ staged.stats.getOrElse(Map.empty)
-        Some(Manifest(0L, "overwrite", split.kept :+ staged.name,
-          schema.json, System.currentTimeMillis(), wrap(markers),
-          if (merged.isEmpty) None else Some(merged),
-          Some(staged.changeDir.toSeq), split.keptCkpt,
-          carriedDvFor(chain, split.kept),
-          metrics = metricsOf(t0, Seq(staged), split.touchedFiles)))
+        commitDml(t0, chain, split, staged, schema, markers)
       }
     }
   }
@@ -2989,15 +2884,8 @@ final class TxLogTable(spark: SparkSession,
       PreOrDelete}
     val t0 = System.currentTimeMillis()
     // three consumers of the batch (the key census that is also the
-    // ambiguity gate, the full-outer join, the change rows) — one
-    // materialization instead of three executions of the upstream
-    // pipeline, plus one consistent snapshot across commit retries
-    // (the [[merge]] rationale); delta-sized, released on return —
-    // unless the caller already cached it (see [[merge]])
-    val callerCached = source0.storageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE
-    val source = if (callerCached) source0 else source0.persist()
-    try {
+    // ambiguity gate, the full-outer join, the change rows)
+    persistedOnce(source0) { source =>
     commitLoop(maxRetries) { v =>
       val (chain, schema) = manifestChainAt(v)
       val cmap = colMapOf(chain)
@@ -3008,8 +2896,7 @@ final class TxLogTable(spark: SparkSession,
       // exactly the clause semantics
       val keyPred = sourceKeyPredicate(source, key, schema, cmap,
         nullKeysMatch = false, rejectDuplicates = true)
-      val split = classifyTouched(v, keyPred)
-      TxLogTable.lastDmlRewritten = split.touchedCount
+      val (split, touched) = classifyTouched(v, keyPred)
       // schema evolution: source-only columns widen the schema
       // additively (the evolved-append rules); the target side pads
       // them with typed nulls so both join sides speak evolved names
@@ -3018,9 +2905,9 @@ final class TxLogTable(spark: SparkSession,
         else evolveSchema(schema, source.schema, cmap,
           droppedColsAt(v).toSeq)
       val target0 =
-        if (split.touchedPaths.isEmpty)
+        if (touched.isEmpty)
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        else readPathsAt(v, split.touchedPaths)
+        else readPathsAt(v, touched)
       val target = evolved.fields.foldLeft(target0) { (df, f) =>
         if (df.columns.exists(_.equalsIgnoreCase(f.name))) df
         else df.withColumn(f.name, lit(null).cast(f.dataType))
@@ -3107,7 +2994,7 @@ final class TxLogTable(spark: SparkSession,
         statsCols = statsCols, changes = Some(spec))
       commitDml(t0, chain, split, staged, schemaOf(merged, spec), markers)
     }
-    } finally { if (!callerCached) source.unpersist(); () }
+    }
   }
 
   /** Transactional insert-ignore (S9/J1): same optimistic loop, rows of
@@ -3282,16 +3169,27 @@ final class TxLogTable(spark: SparkSession,
   def compact(targetRowsPerFile: Long, sortCols: Seq[String] = Nil,
       maxRetries: Int = 20): Long = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
+    rewriteSnapshot(maxRetries, sortCols)(snap =>
+      snap.coalesce(fileCount(snap.count(), targetRowsPerFile)))
+  }
+
+  /** ⌈rows / targetRowsPerFile⌉ files, at least one. */
+  private def fileCount(rows: Long, targetRowsPerFile: Long): Int =
+    math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
+
+  /** The whole-snapshot rewrite of every full compaction: stage
+    * `arrange` of the snapshot, with stats on `statsCols`, and commit
+    * it as an overwrite with no logical change (`cdc = Some(Nil)`).
+    */
+  private def rewriteSnapshot(maxRetries: Int, sortCols: Seq[String] = Nil,
+      statsCols: Seq[String] = Nil)(arrange: DataFrame => DataFrame): Long = {
     val t0 = System.currentTimeMillis()
     commitLoop(maxRetries) { v =>
       val snap = readAt(v)
-      val n = snap.count()
-      val files =
-        math.max(1L, (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      val staged = stageData(snap.coalesce(files), sortCols)
-      Some(Manifest(0L, "overwrite", Seq(staged.name),
-        snap.schema.json, System.currentTimeMillis(), None, None,
-        Some(Nil), metrics = metricsOf(t0, Seq(staged), liveFileCount(v))))
+      val staged = stageData(arrange(snap), sortCols, statsCols = statsCols)
+      Some(Manifest(0L, "overwrite", Seq(staged.name), snap.schema.json,
+        System.currentTimeMillis(), None, staged.stats, Some(Nil),
+        metrics = metricsOf(t0, Seq(staged), liveFileCount(v))))
     }
   }
 
@@ -3326,60 +3224,31 @@ final class TxLogTable(spark: SparkSession,
       else {
         val cmap = colMapOf(chain)
         val phys = physSchema(schema, cmap)
-        val whereExpr = where.map(w => toPhysicalExpr(
-          org.apache.spark.sql.graft.bridge.catalystExpression(w), cmap))
+        val whereExpr = where.map(toPhysicalExpr(_, cmap))
         val (all, uncovered: Set[String]) = fileStatsSplitAt(v) match {
           case Some((_, m, unc)) => (m, unc.toSet)
           case None => throw new IllegalStateException(
             s"live data dirs missing under $root")
         }
-        val kept = Seq.newBuilder[String]
-        val keptStats = Map.newBuilder[String, FileStats]
-        val candidates = Seq.newBuilder[String]
-        val inline: Map[String, FileStats] =
-          chain.flatMap(_.stats.getOrElse(Map.empty)).toMap
-        def keepStats(f: String): Unit =
-          inline.get(f).foreach(fs => keptStats += f -> fs)
-        live.foreach { e =>
-          val files: Seq[String] =
-            if (e.contains("/")) Seq(e)
-            else store.list(dataDir.resolve(e))
-              .filter(_.endsWith(".parquet")).map(f => s"$e/$f")
-          val verdicts = files.map { f =>
-            val inScope = whereExpr.forall(we =>
-              !uncovered.contains(f) &&
-                DataSkipping.mustMatch(we, phys, all(f)))
-            val small = minFileBytes == Long.MaxValue ||
-              store.parquetBytes(dataDir.resolve(f)) < minFileBytes
-            (f, inScope && small)
-          }
-          if (!verdicts.exists(_._2) && !e.contains("/")) {
-            kept += e
-            files.foreach(keepStats)
-          } else verdicts.foreach { case (f, isCand) =>
-            if (isCand) candidates += f
-            else { kept += f; keepStats(f) }
-          }
+        // candidates: small files provably inside the scope
+        val split = splitLive(chain) { (_, _) => f =>
+          val inScope = whereExpr.forall(we =>
+            !uncovered.contains(f) &&
+              DataSkipping.mustMatch(we, phys, all(f)))
+          val small = minFileBytes == Long.MaxValue ||
+            store.parquetBytes(dataDir.resolve(f)) < minFileBytes
+          !(inScope && small)
         }
-        val cand = candidates.result()
+        val cand = split.dropped
         TxLogTable.lastDmlRewritten = cand.size
         if (cand.size < 2) None // nothing to bin — no-op, no commit
         else {
-          val candPaths = cand.map(dataFilePath)
-          val snap = readPathsAt(v, candPaths)
-          val n = snap.count()
-          val nFiles = math.max(1L,
-            (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-          val staged = stageData(snap.coalesce(nFiles), sortCols,
-            statsCols = statsCols)
-          val merged = keptStats.result() ++ staged.stats.getOrElse(Map.empty)
-          val keptEntries = kept.result()
-          Some(Manifest(0L, "overwrite", keptEntries :+ staged.name,
-            schema.json, System.currentTimeMillis(), None,
-            if (merged.isEmpty) None else Some(merged),
-            Some(Nil), chain.flatMap(_.statsFile).lastOption,
-            carriedDvFor(chain, keptEntries),
-            metrics = metricsOf(t0, Seq(staged), cand.size.toLong)))
+          val snap = readPathsAt(v, cand.map(dataFilePath))
+          val staged = stageData(
+            snap.coalesce(fileCount(snap.count(), targetRowsPerFile)),
+            sortCols, statsCols = statsCols)
+          Some(rewriteManifest(t0, chain, split, staged, schema, None,
+            Some(Nil)))
         }
       }
     }
@@ -3400,17 +3269,10 @@ final class TxLogTable(spark: SparkSession,
       statsCols: Seq[String] = Nil, maxRetries: Int = 20): Long = {
     require(clusterCols.nonEmpty, "clusterCols must be non-empty")
     require(numFiles > 0, "numFiles must be positive")
-    val t0 = System.currentTimeMillis()
-    commitLoop(maxRetries) { v =>
-      val snap = readAt(v)
-      val arranged = snap
-        .repartitionByRange(numFiles, clusterCols.map(snap.col): _*)
+    rewriteSnapshot(maxRetries,
+      statsCols = (clusterCols ++ statsCols).distinct) { snap =>
+      snap.repartitionByRange(numFiles, clusterCols.map(snap.col): _*)
         .sortWithinPartitions(clusterCols.map(snap.col): _*)
-      val staged = stageData(arranged,
-        statsCols = (clusterCols ++ statsCols).distinct)
-      Some(Manifest(0L, "overwrite", Seq(staged.name), snap.schema.json,
-        System.currentTimeMillis(), None, staged.stats, Some(Nil),
-        metrics = metricsOf(t0, Seq(staged), liveFileCount(v))))
     }
   }
 
@@ -3430,16 +3292,9 @@ final class TxLogTable(spark: SparkSession,
       maxRetries: Int = 20): Long = {
     require(clusterCols.nonEmpty, "clusterCols must be non-empty")
     require(numFiles > 0, "numFiles must be positive")
-    val t0 = System.currentTimeMillis()
-    commitLoop(maxRetries) { v =>
-      val snap = readAt(v)
-      val arranged = ZOrder.layoutBy(snap, clusterCols, bits, numFiles)
-        .drop("zval")
-      val staged = stageData(arranged,
-        statsCols = (clusterCols ++ statsCols).distinct)
-      Some(Manifest(0L, "overwrite", Seq(staged.name), snap.schema.json,
-        System.currentTimeMillis(), None, staged.stats, Some(Nil),
-        metrics = metricsOf(t0, Seq(staged), liveFileCount(v))))
+    rewriteSnapshot(maxRetries,
+      statsCols = (clusterCols ++ statsCols).distinct) { snap =>
+      ZOrder.layoutBy(snap, clusterCols, bits, numFiles).drop("zval")
     }
   }
 
@@ -3622,8 +3477,6 @@ final class TxLogTable(spark: SparkSession,
         .toMap
     val targetDv = dvDirsOf(chain)
     commitLoop(maxRetries) { v =>
-      import org.apache.spark.sql.functions.{col, regexp_extract,
-        substring_index}
       val (preChain, preSchema) = manifestChainAt(v)
       val preDirs = preChain.flatMap(_.add)
       val preDv = dvDirsOf(preChain)
@@ -3662,26 +3515,12 @@ final class TxLogTable(spark: SparkSession,
               dvReadSchema)
           else spark.read.schema(dvReadSchema)
             .parquet(ds.map(d => dataDir.resolve(d).toString): _*)
-        // shared entries may be dir- or FILE-granular: a dv key
-        // ("dir/part-file") belongs when its dir is a shared dir entry
-        // or the key itself is a shared file entry
-        val (sharedFiles, sharedDirs) = shared.partition(_.contains("/"))
-        val byDir =
-          if (sharedDirs.isEmpty) lit(false)
-          else substring_index(col("_dv_file"), "/", 1)
-            .isin(sharedDirs: _*)
-        val byFile =
-          if (sharedFiles.isEmpty) lit(false)
-          else col("_dv_file").isin(sharedFiles: _*)
-        all.filter(byDir || byFile)
+        all.filter(dvKeyIn(shared))
       }
       def fetch(keys: DataFrame, tag: String): DataFrame =
-        toTargetLogical(spark.read.schema(physSchema(schema, cmapT))
-          .parquet(shared.map(d => dataDir.resolve(d).toString): _*)
-          .withColumn("_dv_file", regexp_extract(
-            col("_metadata.file_path"), "([^/]+/[^/]+)$", 1))
-          .withColumn("_dv_pos", col("_metadata.row_index"))
-          .join(keys, Seq("_dv_file", "_dv_pos"), "left_semi"))
+        dvTaggedScan(shared.map(d => dataDir.resolve(d).toString), schema,
+          cmapT, Nil)
+          .join(keys, Seq("_dv_file", "_dv_pos"), "left_semi")
           .withColumn("_change_type", lit(tag))
       val dvDelta = shared.nonEmpty && preDv.toSet != targetDv.toSet
       val deltaSides =
@@ -3703,7 +3542,7 @@ final class TxLogTable(spark: SparkSession,
           cmapOverride = Some(cmapT)).name))
       Some(Manifest(0L, "overwrite", dirs, schema.json,
         System.currentTimeMillis(),
-        wrap(markers + ("restoredFrom" -> version.toString)), wrap2(stats),
+        wrap(markers + ("restoredFrom" -> version.toString)), wrap(stats),
         cdc, chain.flatMap(_.statsFile).lastOption,
         if (targetDv.isEmpty) None else Some(targetDv),
         // schema rolls back, so the mapping and constraint set roll
@@ -3714,9 +3553,6 @@ final class TxLogTable(spark: SparkSession,
         droppedCols = Some(droppedOf(chain))))
     }
   }
-
-  private def wrap2(m: Map[String, FileStats]): Option[Map[String, FileStats]] =
-    if (m.isEmpty) None else Some(m)
 
   /** Remove data dirs referenced by NO manifest (orphans from lost
     * commit races or crashes mid-stage) plus, when `retainHistory` is

@@ -371,7 +371,7 @@ final class TxLogNativeWriteBuilder(spark: SparkSession, root: String,
   * them visible only in their task COMMIT, so a speculative or
   * crashed attempt can never smuggle duplicate rows into the staged
   * dir. The driver commit is one optimistic manifest bid
-  * ([[TxLogTable.commitStagedV2]]) — CHECK constraints enforced,
+  * ([[TxLogTable.commitStaged]]) — CHECK constraints enforced,
   * schema evolved, the stats the writers folded recorded, the same
   * shape every other commit has.
   */
@@ -435,7 +435,7 @@ final class TxLogBatchWrite(spark: SparkSession, root: String,
         table.commitStagedReplaceWhere(staged,
           TxLogV2.asNullable(logicalSchema), cond, t0, validated)
       case None =>
-        table.commitStagedV2(staged, TxLogV2.asNullable(logicalSchema),
+        table.commitStaged(staged, TxLogV2.asNullable(logicalSchema),
           overwriteAll, t0, validated)
     }
     ()
@@ -512,7 +512,7 @@ final class TxLogStreamingWrite(spark: SparkSession, root: String,
     }
     table.ensureExists(logicalSchema)
     table.mkStagedDir(dir) // an empty batch never opened a file
-    table.commitStagedV2(TxLogV2.staged(dir, messages),
+    table.commitStaged(TxLogV2.staged(dir, messages),
       TxLogV2.asNullable(logicalSchema), overwrite = false,
       System.currentTimeMillis(), validated,
       markers = Map(scopedMarker -> epochId.toString,

@@ -73,8 +73,8 @@ class TableFilesSiteSpec extends AnyFunSuite {
   test("every Parquet write in graft.sources takes TableFiles.parquetOptions") {
     val writes = parquetWrites(Paths.get("src/main/scala/graft/sources"))
     assert(writes.map(_._1).distinct.sorted == Seq("BucketedTable.scala",
-      "FormatConvert.scala", "ParquetTable.scala", "PartitionedTable.scala",
-      "TxLogTable.scala", "TxLogV2.scala"), writes.mkString("\n"))
+      "FormatConvert.scala", "ParquetTable.scala", "TxLogTable.scala",
+      "TxLogV2.scala"), writes.mkString("\n"))
     val missing = writes.filterNot(_._3)
     assert(missing.isEmpty, missing.map(w => s"${w._1}: ${w._2}").mkString("\n"))
   }

@@ -135,20 +135,6 @@ class TxLogFileGranularDmlSpec extends SparkSpec {
     assert(after.subsetOf(t.liveDataPaths(t.currentVersion).toSet))
   }
 
-  test("assumeKeyUnique skips the dup census: same result on a " +
-      "key-unique table, purely delta-proportional") {
-    val t = clustered()
-    val before = t.liveDataPaths(t.currentVersion).toSet
-    t.merge(df((10L, "upd", 1L)), Seq("k"), Seq(col("v").asc),
-      statsCols = Seq("k", "v"), assumeKeyUnique = true)
-    assert(TxLogTable.lastDmlRewritten === 1)
-    assert((before intersect t.liveDataPaths(t.currentVersion).toSet)
-      .size === 3)
-    assert(t.read().count() === 100L)
-    assert(t.read().filter(col("k") === 10L).select("tag")
-      .collect().head.getString(0) === "upd")
-  }
-
   test("latest-wins collapse of UNNAMED duplicate keys survives the " +
       "file-granular optimization") {
     val root = Files.createTempDirectory("txfgdup").toString

@@ -56,10 +56,9 @@ class TxLogReplaceWhereSpec extends SparkSpec {
     assert(t.requiredReaderAt(t.currentVersion) === 1)
     // kept groups' files are the IDENTICAL paths (no rewrite)
     val afterPaths = t.liveDataPaths(t.currentVersion).toSet
-    val keptExpected = beforePaths.filter { p =>
-      val mn = spark.read.parquet(p).agg(min("grp")).collect().head.getLong(0)
-      mn != 1L
-    }.toSet
+    def notGroup1(p: String): Boolean =
+      spark.read.parquet(p).agg(min("grp")).collect().head.getLong(0) != 1L
+    val keptExpected = beforePaths.filter(notGroup1).toSet
     assert(keptExpected.subsetOf(afterPaths),
       s"kept files must survive verbatim:\n$keptExpected\nvs\n$afterPaths")
     // time travel: the pre-replace snapshot is intact
@@ -71,6 +70,14 @@ class TxLogReplaceWhereSpec extends SparkSpec {
     assert(census.queryExecution.executedPlan.toString
       .contains("LocalTableScan"), "kept stats must keep the census alive")
     assert(census.collect().map(_.getLong(1)).sum === 42L)
+    // idempotent replay: the same batch again changes no row, and the
+    // kept groups' files stay the identical paths
+    val rowsOnce = t.read().collect().toSet
+    t.replaceWhere(repl, col("grp") === 1L,
+      statsCols = Seq("grp", "k", "v"))
+    assert(t.read().collect().toSet === rowsOnce)
+    assert(t.liveDataPaths(t.currentVersion).filter(notGroup1).toSet ===
+      keptExpected)
   }
 
   test("file-granular keeps: partial dirs swap under protocol v5") {
