@@ -360,4 +360,81 @@ class TxLogSourceSpec extends SparkSpec {
         s"denominator walk must be test-gated, got $live")
     } finally TxLogV2.captureScans = prev
   }
+
+  /** A parquet-backed key dim behind a selective filter: dynamic
+    * pruning reaches a scan only from a filtered, non-local side.
+    */
+  private def keyDim(ks: Long*): DataFrame = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("txsrc_dim").resolve("d").toString
+    ks.map(k => (k, s"d$k")).toDF("dk", "tag").write.parquet(dir)
+    spark.read.parquet(dir).filter(col("dk") >= 0L)
+  }
+
+  test("read plans: Spark jobs and planned files of every txlog scan shape") {
+    /** (jobs, lastScan) of one read, the hook reset first. */
+    def pin(read: => Any): (Int, (Int, Int)) = {
+      TxLogV2.lastScan = (0, 0)
+      (jobsStartedBy { read; () }, TxLogV2.lastScan)
+    }
+    val (root, _) = seeded() // 4 files x 50 rows, stats on k
+    def load(r: String) = spark.read.format("txlog").load(r)
+    val plain = pin(assert(load(root).collect().length === 200))
+    val filtered = pin(assert(load(root)
+      .filter(col("k") >= 100L && col("k") < 150L).collect().length === 50))
+    val limited = pin(assert(load(root).limit(10).collect().length === 10))
+    val ungrouped = pin(assert(load(root)
+      .agg(count(lit(1)), min(col("k")), max(col("k"))).collect().head ===
+      Row(200L, 0L, 349L)))
+    val emptyRoot = Files.createTempDirectory("txsrc_empty").toString
+    new TxLogTable(spark, emptyRoot).ensureExists(schema)
+    val emptyCount = pin(assert(
+      load(emptyRoot).agg(count(lit(1))).collect().head === Row(0L)))
+
+    // v is constant in each file: the grouped census folds it
+    val groupedRoot = Files.createTempDirectory("txsrc_grp").toString
+    val g = new TxLogTable(spark, groupedRoot)
+    g.ensureExists(schema)
+    (0L until 3L).foreach { b =>
+      g.append(df((0L until 20L).map(i => (b * 100L + i, "g", b)): _*)
+        .coalesce(1), statsCols = Seq("k", "v"))
+    }
+    val grouped = pin(assert(load(groupedRoot).groupBy(col("v"))
+      .agg(count(lit(1)), max(col("k"))).collect().length === 3))
+
+    // a stats-less append is the one straggler of the hybrid census
+    val (hybridRoot, h) = seeded()
+    h.append(df((999L, "g0", 1L)).coalesce(1))
+    val hybrid = pin(assert(load(hybridRoot)
+      .agg(count(lit(1)), min(col("k")), max(col("k"))).collect().head ===
+      Row(201L, 0L, 999L)))
+
+    val (dvRoot, d) = seeded()
+    d.deleteVectored(col("k") % 100L === 5L) // one row in each file
+    val smallDv = pin(assert(load(dvRoot).collect().length === 196))
+    TxLogV2.lastRuntimeFiltered = false
+    val fact = load(dvRoot)
+    val joined = pin(assert(fact.join(keyDim(7L, 307L), fact("k") === col("dk"))
+      .select(col("k")).collect().map(_.getLong(0)).sorted.toSeq ===
+      Seq(7L, 307L)))
+    assert(TxLogV2.lastRuntimeFiltered)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.graft.txlog.dvInlineBytes", "0")
+    val bulkDv = try {
+      TxLogRelation.lastScan = (0, 0)
+      val jobs = jobsStartedBy {
+        assert(load(dvRoot).filter(col("k") >= 100L).count() === 147L)
+      }
+      (jobs, TxLogRelation.lastScan)
+    } finally {
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.unset("spark.graft.txlog.dvInlineBytes")
+    }
+
+    // (0, 0): the read planned no file scan (a LocalTableScan)
+    assert(Seq(plain, filtered, limited, ungrouped, emptyCount, grouped,
+      hybrid, smallDv, joined, bulkDv) === Seq(
+      (1, (4, 4)), (1, (1, 4)), (1, (1, 4)), (1, (0, 0)), (1, (0, 0)),
+      (1, (0, 0)), (2, (1, 5)), (2, (4, 4)), (5, (2, 4)), (4, (3, 4))))
+  }
 }
