@@ -258,12 +258,6 @@ object TxLogRelation {
     case o => o
   }
 
-  /** Test hook: (files scanned, live files in the snapshot) of the most
-    * recent `buildScan` — lets specs pin pruning EFFECTIVENESS (fewer
-    * files opened), not just result correctness.
-    */
-  @volatile private[graft] var lastScan: (Int, Int) = (0, 0)
-
   /** Source `Filter` → `Column`, for the subset with exact Column
     * semantics. `None` marks the filter unhandled: Spark keeps its own
     * copy above the scan, so correctness never depends on coverage
@@ -301,8 +295,8 @@ object TxLogRelation {
   * only the surfaces Spark still routes through V1: `CREATE TEMPORARY
   * VIEW ... USING txlog`, the `spark.sql.sources.useV1SourceList`
   * escape hatch, and the [[TxLogDvScan]] V1-bridge execution of
-  * DV-bearing snapshots. Dynamic file pruning now happens Spark-native
-  * through [[TxLogBatchScan]]'s runtime filtering.
+  * snapshots with bulk deletion vectors. Dynamic file pruning happens
+  * Spark-native through [[TxLogBatchScan]]'s runtime filtering.
   */
 final class TxLogRelation(val sqlContext: SQLContext,
     private[graft] val table: TxLogTable,
@@ -354,17 +348,10 @@ final class TxLogRelation(val sqlContext: SQLContext,
   private[graft] lazy val catalogTableWithStats
       : Option[org.apache.spark.sql.catalyst.catalog.CatalogTable] = {
     import org.apache.spark.sql.catalyst.catalog._
-    import org.apache.spark.sql.types._
     table.statsSummaryAt(version).map { case (rows, ranges, ndvs) =>
-      def minMaxOk(dt: DataType): Boolean = dt match {
-        case ByteType | ShortType | IntegerType | LongType | FloatType |
-             DoubleType | DateType | TimestampType | TimestampNTZType => true
-        case _: DecimalType => true
-        case _ => false
-      }
       val colStats = schema.fields.iterator.flatMap { f =>
         ranges.get(f.name).map { r =>
-          val mm = minMaxOk(f.dataType)
+          val mm = TxLogV2.minMaxOk(f.dataType)
           f.name -> CatalogColumnStat(
             // the theta-union estimate; the selectivity estimator
             // requires an NDV to engage at all, so ranges without one
@@ -394,11 +381,14 @@ final class TxLogRelation(val sqlContext: SQLContext,
   override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
     filters.filter(f => TxLogRelation.toColumn(f).isEmpty)
 
+  /** Records [[TxLogV2.lastScan]]: the planned paths, and the live
+    * ones only under [[TxLogV2.captureScans]].
+    */
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
     val spark = sqlContext.sparkSession
     val pushed = filters.toIndexedSeq.flatMap(TxLogRelation.toColumn)
-    val allPaths = table.scanPathsAt(version, lit(true))
+    def live: Int = TxLogV2.denominator(table.liveDataPaths(version).size)
     def readOf(paths: Seq[String]): DataFrame =
       if (paths.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
@@ -408,12 +398,12 @@ final class TxLogRelation(val sqlContext: SQLContext,
       // surfaces this version's logical names)
       else table.readPathsAt(version, paths)
     val base: DataFrame = if (pushed.isEmpty) {
-      TxLogRelation.lastScan = (allPaths.size, allPaths.size)
+      TxLogV2.lastScan = (live, live)
       table.readAt(version)
     } else {
       val pred = pushed.reduce(_ && _)
       val paths = table.scanPathsAt(version, pred)
-      TxLogRelation.lastScan = (paths.size, allPaths.size)
+      TxLogV2.lastScan = (paths.size, live)
       // Re-apply the exact predicate: manifest pruning is file-level
       // (may-match), and these filters were reported HANDLED.
       readOf(paths).filter(pred)

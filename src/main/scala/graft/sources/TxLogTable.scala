@@ -537,7 +537,7 @@ final class TxLogTable(spark: SparkSession,
         val df = spark.read.format(format).options(options)
           .schema(schema).load(fresh: _*)
         val staged = stageData(df, checkConstraints = true)
-        Some(Manifest(0L, "append", Seq(staged.name), schema.json,
+        Some(Manifest(0L, "append", published(staged), schema.json,
           System.currentTimeMillis(),
           markers = Some(Map("copy_into" -> fresh.size.toString)),
           copyFiles = Some(fresh), metrics = metricsOf(t0, Seq(staged))))
@@ -1206,7 +1206,7 @@ final class TxLogTable(spark: SparkSession,
       split: LiveSplit, staged: TxLogTable.Staged, schema: StructType,
       markers: Option[Map[String, String]], cdc: Option[Seq[String]],
       deleted: Option[Long] = None): Manifest =
-    Manifest(0L, "overwrite", split.kept :+ staged.name, schema.json,
+    Manifest(0L, "overwrite", split.kept ++ published(staged), schema.json,
       System.currentTimeMillis(), markers,
       wrap(split.keptStats ++ staged.stats.getOrElse(Map.empty)), cdc,
       split.keptCkpt, carriedDvFor(chain, split.kept),
@@ -1466,31 +1466,13 @@ final class TxLogTable(spark: SparkSession,
       out.result()
     }
 
-  /** Per-file skipping stats of the snapshot under LOGICAL column
-    * names: `(file, rows, ranges)` for every live part-file, or None
-    * unless EVERY live file is covered (the [[statsSummaryAt]]
-    * exactness contract). The grouped manifest census reads these to
+  /** Per-file skipping stats of the snapshot for the hybrid-census
+    * split: `(file, rows, ranges)` of every stats-bearing live
+    * part-file, ranges under LOGICAL column names, plus the uncovered
+    * files as plain store paths. The grouped census reads these to
     * recognize FILE-CONSTANT columns (per-file min == max, zero
     * nulls) — the clustered-layout pattern that stands in for hive
-    * partition values.
-    */
-  private[graft] def perFileStatsAt(version: Long)
-      : Option[Seq[(String, Long, Map[String, ColRange])]] = {
-    val (chain, _) = manifestChainAt(version)
-    val revMap = colMapOf(chain).map(_.swap)
-    liveFileStatsAt(version).map { case (files, all) =>
-      files.map { f =>
-        val fs = all(f)
-        (f, fs.rows,
-          fs.cols.map { case (c, r) => revMap.getOrElse(c, c) -> r })
-      }
-    }
-  }
-
-  /** [[perFileStatsAt]] without the all-covered refusal: stats-bearing
-    * files (ranges under LOGICAL names) plus the uncovered files as
-    * plain store paths — the hybrid-census split. None only when a
-    * live dir is missing on disk.
+    * partition values. None only when a live dir is missing on disk.
     */
   private[graft] def perFileStatsSplitAt(version: Long)
       : Option[(Seq[(String, Long, Map[String, ColRange])], Seq[String])] = {
@@ -1971,6 +1953,14 @@ final class TxLogTable(spark: SparkSession,
   private[sources] def dropStagedDir(name: String): Unit =
     store.deleteRecursive(dataDir.resolve(name))
 
+  /** The live entries a staging write adds: its data dir, or none when
+    * no task wrote a row — that dir is dropped, so no snapshot carries
+    * (and no full scan plans) a dir without a part file.
+    */
+  private def published(staged: TxLogTable.Staged): Seq[String] =
+    if (staged.files.nonEmpty) Seq(staged.name)
+    else { dropStagedDir(staged.name); Nil }
+
   /** The stats the staging tasks of a write under `schema` (logical
     * names) fold for `statsCols`/`bloomCols`, keyed by the physical
     * names the files store.
@@ -2003,7 +1993,7 @@ final class TxLogTable(spark: SparkSession,
       val schema = stagedSchemaAt(v, staged, batchSchema, overwrite,
         validatedConstraints)
       Some(Manifest(0L, if (overwrite) "overwrite" else "append",
-        Seq(staged.name), schema.json, System.currentTimeMillis(),
+        published(staged), schema.json, System.currentTimeMillis(),
         wrap(markers), staged.stats,
         metrics = metricsOf(t0, Seq(staged),
           if (overwrite) liveFileCount(v) else 0L)))
@@ -2013,13 +2003,14 @@ final class TxLogTable(spark: SparkSession,
     * batch's own when it replaces the schema (an overwrite, or the
     * first commit), else the snapshot's evolved by it. Before that,
     * the staged rows are re-validated when the CHECK set live at `v`
-    * is not `validated`, the one the staging enforced.
+    * is not `validated`, the one the staging enforced (a batch with no
+    * row has nothing to check, and its dir is gone after a lost race).
     */
   private def stagedSchemaAt(v: Long, staged: TxLogTable.Staged,
       batchSchema: StructType, replacesSchema: Boolean,
       validated: Map[String, String]): StructType = {
     val cs = constraintsAt(v)
-    if (cs.nonEmpty && cs != validated)
+    if (cs.nonEmpty && cs != validated && staged.files.nonEmpty)
       enforce(readPhysical(Seq(stagedDirPath(staged.name)), batchSchema,
         colMapAt(v)), cs).foreach(_ => ())
     if (v < 0 || replacesSchema) batchSchema
@@ -2547,7 +2538,7 @@ final class TxLogTable(spark: SparkSession,
       markers: Map[String, String]): Option[Manifest] = {
     val cdc = Some(staged.changeDir.toSeq)
     if (split.dropped.isEmpty && chain.flatMap(_.add).nonEmpty)
-      Some(Manifest(0L, "append", Seq(staged.name), schema.json,
+      Some(Manifest(0L, "append", published(staged), schema.json,
         System.currentTimeMillis(), wrap(markers), staged.stats, cdc,
         metrics = metricsOf(t0, Seq(staged))))
     else Some(rewriteManifest(t0, chain, split, staged, schema,
@@ -3016,7 +3007,7 @@ final class TxLogTable(spark: SparkSession,
       // the version advancing even when every row was a duplicate
       val staged = stageData(newRows, checkConstraints = true,
         statsCols = statsCols)
-      Some(Manifest(0L, "append", Seq(staged.name),
+      Some(Manifest(0L, "append", published(staged),
         snap.schema.json, System.currentTimeMillis(), wrap(markers),
         staged.stats, metrics = metricsOf(t0, Seq(staged))))
     }
@@ -3187,7 +3178,7 @@ final class TxLogTable(spark: SparkSession,
     commitLoop(maxRetries) { v =>
       val snap = readAt(v)
       val staged = stageData(arrange(snap), sortCols, statsCols = statsCols)
-      Some(Manifest(0L, "overwrite", Seq(staged.name), snap.schema.json,
+      Some(Manifest(0L, "overwrite", published(staged), snap.schema.json,
         System.currentTimeMillis(), None, staged.stats, Some(Nil),
         metrics = metricsOf(t0, Seq(staged), liveFileCount(v))))
     }

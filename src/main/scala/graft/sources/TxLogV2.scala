@@ -22,9 +22,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource-V2 surface of the transactional table — the Spark-4-
   * native half of the `txlog` format. Reads resolve through
-  * [[TxLogV2Table]] (one snapshot pinned per analysis), push columns
-  * and predicates through the V2 ScanBuilder, and execute as a real
-  * `Batch` whose file list is the manifest-pruned snapshot
+  * [[TxLogV2Table]] (one snapshot pinned per analysis), push columns,
+  * predicates, LIMIT and count/min/max aggregates through
+  * [[TxLogScanBuilder]], and execute as ONE batch scan,
+  * [[TxLogBatchScan]]: its file list is the manifest-pruned snapshot
   * (min/max + Bloom data skipping) INTERSECTED with Spark's own
   * runtime filters ([[SupportsRuntimeFiltering]] — dynamic file
   * pruning happens where Spark 4 wants it, inside `BatchScanExec`,
@@ -43,15 +44,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - STREAMING keeps the V1 source/sink (no MICRO_BATCH_READ /
   *     STREAMING_WRITE capability → Spark falls back to the
   *     StreamSourceProvider/StreamSinkProvider seams unchanged);
-  *   - snapshots with live DELETION VECTORS split by vector size:
-  *     SMALL vectors (the point-delete case) keep the NATIVE batch
-  *     ([[TxLogDvAwareBatchScan]]) — clean files vectorized, touched
-  *     files read whole with inline per-file skip sets, runtime file
-  *     pruning preserved; BULK vectors scan through a [[V1Scan]]
-  *     bridge ([[TxLogDvScan]]) so the anti-join stays a DISTRIBUTED
-  *     join (deleted-rows-sized side, AQE-broadcast). DV-free
-  *     snapshots (the steady state: OPTIMIZE/checkpoint fold DVs
-  *     away) are the plain native Batch.
+  *   - an aggregate the manifest stats answer is a driver-local row
+  *     ([[TxLogAggScan]]) or census rows merged with a scan of only
+  *     the files the stats cannot fold ([[TxLogHybridCensusScan]]);
+  *   - live DELETION VECTORS ride the batch scan inline (touched files
+  *     read whole with per-file skip sets) while their on-disk bytes
+  *     are within `spark.sql.autoBroadcastJoinThreshold`, Spark's own
+  *     "small enough to ship" setting; larger vectors scan through a
+  *     [[V1Scan]] bridge ([[TxLogDvScan]]) so the anti-join stays a
+  *     DISTRIBUTED join.
   *
   * Escape hatch: `spark.sql.sources.useV1SourceList=txlog` restores
   * the pure-V1 behavior end to end (Spark-native kill switch).
@@ -70,6 +71,12 @@ object TxLogV2 {
   /** Enables the [[lastScan]] denominator walk (specs only). */
   @volatile var captureScans: Boolean = false
 
+  /** The [[lastScan]] denominator of a pruned scan: `live` under
+    * [[captureScans]], else -1 without walking the manifest.
+    */
+  private[sources] def denominator(live: => Int): Int =
+    if (captureScans) live else -1
+
   /** Test hook: true iff the most recent replan was triggered by a
     * RUNTIME filter (Spark's dynamic file pruning reaching the scan).
     */
@@ -77,6 +84,28 @@ object TxLogV2 {
 
   private[sources] def asNullable(s: StructType): StructType =
     TxLogRelation.asNullable(s).asInstanceOf[StructType]
+
+  /** `s` under the physical names of column mapping `cmap`: files
+    * store physical names at the logical positions and types, and
+    * `InternalRow`s are positional, so the rename is schema-only.
+    */
+  private[sources] def physical(cmap: Map[String, String],
+      s: StructType): StructType =
+    if (cmap.isEmpty) s
+    else StructType(s.fields.map(f =>
+      f.copy(name = cmap.getOrElse(f.name, f.name))))
+
+  /** Types whose manifest min/max decode exactly into Catalyst values
+    * (the [[DataSkipping]] encoding matches
+    * `CatalogColumnStat.fromExternalString`): integrals, floating
+    * point, decimal, date and timestamp.
+    */
+  private[sources] def minMaxOk(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | FloatType |
+         DoubleType | DateType | TimestampType | TimestampNTZType => true
+    case _: DecimalType => true
+    case _ => false
+  }
 
   /** The staging result of a V2 write into `dirName`, from its task
     * commit messages.
@@ -1034,13 +1063,12 @@ final class TxLogScanBuilder(spark: SparkSession,
     required = requiredSchema
 
   // ── aggregate pushdown: answer count(*)/count(col)/min/max from the
-  // MANIFEST stats alone — a metadata walk and a driver-local row, no
-  // file opened, no Spark job. Accepted only when the snapshot is
-  // DV-free, ungrouped, unfiltered (Spark offers aggregation only when
-  // no residual filter sits above the scan — every predicate here is
-  // residual by design), every live file carries stats, and min/max
-  // types are in the exactly-decodable set. The manifest numbers are
-  // EXACT by the statsSummaryAt contract, so the pushdown is complete.
+  // MANIFEST stats — a metadata walk and census rows, no file opened
+  // that the stats can fold. Offered by Spark only for an unfiltered
+  // scan (every predicate here is residual by design); accepted only
+  // on a DV-free snapshot, with group keys and min/max columns of the
+  // exactly-decodable types. The census numbers are EXACT by the
+  // skipping-stats contract.
 
   private var pushedAgg: Option[(StructType, Seq[InternalRow])] = None
   private var pushedHybrid: Option[TxLogScanBuilder.HybridCensus] = None
@@ -1059,17 +1087,6 @@ final class TxLogScanBuilder(spark: SparkSession,
       extends Served
   private case object Declined extends Served
 
-  private def minMaxOk(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType | FloatType |
-         DoubleType | DateType | TimestampType | TimestampNTZType => true
-    case _: DecimalType => true
-    case _ => false
-  }
-
-  // one manifest-stats walk per builder, shared by
-  // supportCompletePushDown and pushAggregation (Spark calls both)
-  private lazy val statsSummary = table.statsSummaryAt(version)
-
   private def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
       : Option[StructField] = e match {
     case n: org.apache.spark.sql.connector.expressions.NamedReference
@@ -1078,68 +1095,13 @@ final class TxLogScanBuilder(spark: SparkSession,
     case _ => None
   }
 
-  private def serveAggregation(agg: Aggregation): Served = {
-    if (table.dvDirsAt(version).nonEmpty) return Declined
-    if (agg.groupByExpressions.nonEmpty) {
-      censusFor(agg) match {
-        case Some(c) if c.stragglers.isEmpty => Complete(c.schema, c.rows)
-        case Some(c) => Hybrid(c)
-        case None => Declined
-      }
-    } else serveUngrouped(agg) match {
-      case Some((schema, rows)) => Complete(schema, rows)
-      case None => censusFor(agg) match {
-        // ungrouped census must have at least one censusable file: an
-        // all-straggler hybrid is just a worse plain scan, and an
-        // empty table needs the scan-side aggregate to emit its one
-        // global row (a pushed result may not be row-less ungrouped)
-        case Some(c) if c.rows.nonEmpty =>
-          if (c.stragglers.isEmpty) Complete(c.schema, c.rows) else Hybrid(c)
-        case _ => Declined
-      }
+  private def serveAggregation(agg: Aggregation): Served =
+    if (table.dvDirsAt(version).nonEmpty) Declined
+    else censusFor(agg) match {
+      case Some(c) if c.stragglers.isEmpty => Complete(c.schema, c.rows)
+      case Some(c) => Hybrid(c)
+      case None => Declined
     }
-  }
-
-  /** Ungrouped complete pushdown from the table-level summary
-    * ([[TxLogTable.statsSummaryAt]] — exact only when EVERY live file
-    * carries stats for the referenced columns).
-    */
-  private def serveUngrouped(agg: Aggregation)
-      : Option[(StructType, Seq[InternalRow])] = {
-    val schema = v2bridge.pushedAggSchema(agg, fullSchema) match {
-      case Some(sc) => sc
-      case None => return None
-    }
-    val (rows, ranges) = statsSummary match {
-      case Some((r, rg, _)) => (r, rg)
-      case None => return None
-    }
-    val values = agg.aggregateExpressions().toSeq.map {
-      case _: CountStar => java.lang.Long.valueOf(rows)
-      case c: Count if !c.isDistinct =>
-        val f = colOf(c.column()).getOrElse(return None)
-        val r = ranges.getOrElse(f.name, return None)
-        java.lang.Long.valueOf(rows - r.nulls)
-      case m: Min =>
-        val f = colOf(m.column()).getOrElse(return None)
-        if (!minMaxOk(f.dataType)) return None
-        val r = ranges.getOrElse(f.name, return None)
-        val v = r.min.getOrElse(return None)
-        v2bridge.statFromExternalString(v, f.name, f.dataType)
-          .asInstanceOf[AnyRef]
-      case m: Max =>
-        val f = colOf(m.column()).getOrElse(return None)
-        if (!minMaxOk(f.dataType)) return None
-        val r = ranges.getOrElse(f.name, return None)
-        val v = r.max.getOrElse(return None)
-        v2bridge.statFromExternalString(v, f.name, f.dataType)
-          .asInstanceOf[AnyRef]
-      case _ => return None
-    }
-    Some((schema, Seq(
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        values.toArray[Any]))))
-  }
 
   /** The manifest CENSUS of an aggregation, split per file: `GROUP
     * BY` columns must be FILE-CONSTANT (per-file min == max, zero
@@ -1149,16 +1111,19 @@ final class TxLogScanBuilder(spark: SparkSession,
     * OTHER live file — a late unclustered append, a stats-less commit
     * — becomes a STRAGGLER the hybrid scan actually reads. One driver
     * metadata walk; the fold is exact by the skipping-stats contract.
-    * None when the aggregation shape itself is unservable (expression
-    * group key, non-decodable type, sum/distinct) or nothing at all
-    * is censusable.
+    * An ungrouped aggregate over no live part-file is its one global
+    * row (counts 0, min and max NULL). None when the aggregation shape
+    * itself is unservable (expression group key, non-decodable type,
+    * sum/distinct) or no file is censusable while some must be read
+    * (an all-straggler hybrid is just a worse plain scan).
     */
   private def censusFor(agg: Aggregation)
       : Option[TxLogScanBuilder.HybridCensus] = {
     import TxLogScanBuilder.{AggSpec, CensusOp, ColCount, ColMax, ColMin, HybridCensus, StarCount}
     val groupFields: Seq[StructField] =
       agg.groupByExpressions.toSeq.map(e =>
-        colOf(e).filter(f => minMaxOk(f.dataType)).getOrElse(return None))
+        colOf(e).filter(f => TxLogV2.minMaxOk(f.dataType))
+          .getOrElse(return None))
     val schema = v2bridge.pushedAggSchema(agg, fullSchema,
       groupFields.map(_.name).toSet) match {
       case Some(sc) => sc
@@ -1170,11 +1135,11 @@ final class TxLogScanBuilder(spark: SparkSession,
         ColCount(colOf(c.column()).getOrElse(return None))
       case m: Min =>
         val f = colOf(m.column()).getOrElse(return None)
-        if (!minMaxOk(f.dataType)) return None
+        if (!TxLogV2.minMaxOk(f.dataType)) return None
         ColMin(f)
       case m: Max =>
         val f = colOf(m.column()).getOrElse(return None)
-        if (!minMaxOk(f.dataType)) return None
+        if (!TxLogV2.minMaxOk(f.dataType)) return None
         ColMax(f)
       case _ => return None
     }
@@ -1190,7 +1155,12 @@ final class TxLogScanBuilder(spark: SparkSession,
       case None => return None
     }
     if (groups.isEmpty && stragglers.nonEmpty) return None
-    val rows: Seq[InternalRow] = groups
+    val folded =
+      if (groups.isEmpty && groupFields.isEmpty)
+        Seq(table.CensusGroupRow(Nil, 0L, countCols.map(_ -> 0L).toMap,
+          Map.empty, Map.empty))
+      else groups
+    val rows: Seq[InternalRow] = folded
       .sortBy(_.key.mkString("\u0000"))
       .map { g =>
         val gvals: Seq[Any] = groupFields.zip(g.key).map { case (f, v) =>
@@ -1233,31 +1203,10 @@ final class TxLogScanBuilder(spark: SparkSession,
       StructType(srcFields), ops))
   }
 
-  /** Exact min/max fold over one group's file ranges: null is a
-    * legitimate SQL NULL result (every file's values all null); an
-    * all-null FILE contributes nothing to the fold. Stats presence
-    * was already established by the censusable split.
-    */
-  private def foldRange(
-      ranges: Seq[Map[String, DataSkipping.ColRange]],
-      f: StructField,
-      pick: DataSkipping.ColRange => Option[String],
-      keepMax: Boolean): Any = {
-    val best = ranges.flatMap(cols => pick(cols(f.name)))
-      .reduceOption { (a, b) =>
-        DataSkipping.cmpExternal(f.dataType, a, b) match {
-          case Some(c) => if ((c >= 0) == keepMax) a else b
-          case None => a
-        }
-      }
-    best.map(v => v2bridge.statFromExternalString(v, f.name, f.dataType))
-      .orNull
-  }
-
   // Spark calls supportCompletePushDown then pushAggregation with the
-  // same Aggregation instance; the census walk (and the grouped arm's
-  // perFileStatsAt read) must run ONCE per query, not twice — memoize
-  // on instance identity (a miss just recomputes).
+  // same Aggregation instance; the census walk (and its checkpoint
+  // read) must run ONCE per query, not twice — memoize on instance
+  // identity (a miss just recomputes).
   private var aggMemo: Option[(Aggregation, Served)] = None
 
   private def servedAggregation(agg: Aggregation): Served = aggMemo match {
@@ -1286,36 +1235,21 @@ final class TxLogScanBuilder(spark: SparkSession,
       new TxLogHybridCensusScan(spark, table, version, fullSchema,
         pushedHybrid.get)
     case None =>
-      if (table.dvDirsAt(version).isEmpty)
+      // deletion vectors ride the batch scan inline while their on-disk
+      // bytes are within Spark's broadcast threshold (-1 ships none);
+      // larger ones take the bulk bridge's distributed anti-join,
+      // the right plan for deleted-rows-sized state that large
+      val cap = spark.sessionState.conf.autoBroadcastJoinThreshold
+      if (table.dvDirsAt(version).nonEmpty &&
+          (cap < 0 || table.onDiskBytes(table.dvDirPaths(version)) > cap))
+        new TxLogDvScan(table, version, required, pushedV1)
+      else
         new TxLogBatchScan(spark, table, version, fullSchema, required,
           pushedCols, pushedV1, limit)
-      else {
-        // DV-bearing snapshot: when the vectors are small (the point-
-        // delete case the mechanism exists for), serve the NATIVE
-        // batch with per-file inline skip sets — runtime file pruning
-        // and vectorized clean-file reads are preserved. A bulk
-        // delete (vectors past the inline cap) falls back to the V1
-        // bridge's distributed anti-join, which is the right plan for
-        // deleted-rows-sized state that large. Gated on the DV dirs'
-        // on-disk BYTES — a driver metadata walk, no job.
-        val cap = spark.conf.getOption("spark.graft.txlog.dvInlineBytes")
-          .map(_.toLong).getOrElse(TxLogScanBuilder.DefaultDvInlineBytes)
-        if (table.onDiskBytes(table.dvDirPaths(version)) <= cap)
-          new TxLogDvAwareBatchScan(spark, table, version, fullSchema,
-            required, pushedCols, pushedV1)
-        else
-          new TxLogDvScan(table, version, required, pushedV1)
-      }
   }
 }
 
 object TxLogScanBuilder {
-  /** Inline-DV cap: vectors at most this many on-disk bytes ride the
-    * native batch as per-file skip sets (similar order to Spark's
-    * broadcast threshold — the same "small enough to ship" judgment).
-    */
-  private[sources] val DefaultDvInlineBytes: Long = 16L * 1024 * 1024
-
   /** One aggregate of a (hybrid) census, resolved to its source
     * column.
     */
@@ -1343,20 +1277,30 @@ object TxLogScanBuilder {
       srcSchema: StructType, ops: Seq[CensusOp])
 }
 
-/** The native Batch scan of a DV-free snapshot: the manifest decides
-  * WHICH files (static pushdown ∩ runtime filters), Spark's own
-  * parquet V2 machinery decides HOW to read them (vectorized columnar
-  * batches, maxPartitionBytes splits, row-group pushdown) — see
+/** The native Batch scan of a snapshot: the manifest decides WHICH
+  * files (static pushdown ∩ runtime filters), Spark's own parquet V2
+  * machinery decides HOW to read them (vectorized columnar batches,
+  * maxPartitionBytes splits, row-group pushdown) — see
   * [[v2bridge.parquetScan]]. Runtime `filter(...)` invalidates the
   * planned file list; `BatchScanExec` then replans partitions against
   * the intersected predicate, which is Spark-native dynamic FILE
   * pruning over the manifest stats.
   *
+  * Deletion vectors (the small ones [[TxLogScanBuilder]] lets ride
+  * inline) split the planned files in two legs: clean files — the
+  * overwhelming majority after a point delete — take the plain parquet
+  * scan, and files the vectors touch are planned as WHOLE-FILE
+  * partitions whose reader skips the deleted positions inline (each
+  * partition carries only ITS file's sorted positions — tasks never
+  * load the full vector set). Row-position correctness: the DV leg
+  * passes NO pushed filters (no row group or page is ever skipped) and
+  * reads each file as one unsplit partition, so the reader's running
+  * row count IS `_metadata.row_index` — the key the sidecars store.
+  * Such a snapshot reports size-only statistics (the manifest's rows
+  * would count deleted ones) and pushes no LIMIT.
+  *
   * Column mapping: the scan's public `readSchema` speaks LOGICAL
-  * names; files store PHYSICAL names (rename-without-rewrite). The
-  * inner parquet scan reads under physical names at identical
-  * positions/types — `InternalRow`s are positional, so the rename is
-  * schema-only and free.
+  * names; the inner parquet scan reads [[TxLogV2.physical]] ones.
   */
 final class TxLogBatchScan(spark: SparkSession, table: TxLogTable,
     version: Long, logicalFull: StructType, logicalRead: StructType,
@@ -1366,61 +1310,111 @@ final class TxLogBatchScan(spark: SparkSession, table: TxLogTable,
     with SupportsReportStatistics {
 
   private val cmap: Map[String, String] = table.colMapAt(version)
-  private def physName(n: String): String = cmap.getOrElse(n, n)
-  private def phys(s: StructType): StructType =
-    if (cmap.isEmpty) s
-    else StructType(s.fields.map(f => f.copy(name = physName(f.name))))
+  private def phys(s: StructType): StructType = TxLogV2.physical(cmap, s)
+  private val pushedPhys: Array[Filter] =
+    if (cmap.isEmpty) staticV1
+    else staticV1.flatMap(TxLogV2.renameV1(_, n => cmap.getOrElse(n, n)))
 
+  private val dvFree = table.dvDirsAt(version).isEmpty
+  // one driver-side load per scan, reused across runtime-filter
+  // replans (positions don't change within a pinned snapshot)
+  private lazy val dvMap: Map[String, Array[Long]] = table.loadDvMap(version)
 
   @volatile private var runtimeCols: Seq[Column] = Nil
-  @volatile private var inner: Option[Scan] = None
+  @volatile private var planned
+      : Option[(Array[InputPartition], PartitionReaderFactory)] = None
 
   override def readSchema(): StructType = logicalRead
   override def toBatch: Batch = this
   override def description(): String =
-    s"txlog v$version ${table.root} " +
+    s"txlog v$version ${table.root} " + (if (dvFree) "" else "DV-inline ") +
       s"PushedFilters: ${staticV1.mkString("[", ", ", "]")}"
 
-  private def innerScan(): Scan = synchronized {
-    inner match {
-      case Some(s) => s
+  /** The files a read under `pred` plans: the manifest's scan paths,
+    * expanded to single files when vectors must be matched to them.
+    */
+  private def files(pred: Column): Seq[String] = {
+    val paths = table.scanPathsAt(version, pred)
+    if (dvFree) paths else table.expandToFiles(paths)
+  }
+
+  private def fileKey(path: String): String = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    s"${hp.getParent.getName}/${hp.getName}"
+  }
+
+  /** BatchScanExec requires EVERY partition row-based or EVERY
+    * partition columnar, decided once at physical planning — so the
+    * scan is columnar iff no DV-touched file survives STATIC pruning
+    * (runtime filters only shrink that set, never grow it, keeping
+    * the decision consistent across replans). With DV files in play
+    * the whole scan reads row-based, and OPTIMIZE folds the vectors
+    * away back to the fully-vectorized plan.
+    */
+  private lazy val columnarOk: Boolean =
+    !files(staticCols.reduceOption(_ && _).getOrElse(lit(true)))
+      .exists(f => dvMap.contains(fileKey(f)))
+
+  private def ensurePlanned()
+      : (Array[InputPartition], PartitionReaderFactory) = synchronized {
+    planned match {
+      case Some(x) => x
       case None =>
-        val pred = (staticCols ++ runtimeCols)
-          .reduceOption(_ && _).getOrElse(lit(true))
+        val pruned = staticCols.nonEmpty || runtimeCols.nonEmpty
         // an unfiltered LIMIT plans just enough stats-covered files to
         // hold n rows; with predicates (static or runtime) the normal
         // pruned path applies and Spark's limit stays above
         val limited: Option[Seq[String]] =
-          if (staticCols.isEmpty && runtimeCols.isEmpty)
-            limit.flatMap(n => table.limitPaths(version, n.toLong))
-          else None
-        val paths = limited.getOrElse(table.scanPathsAt(version, pred))
-        // the unpruned-live-file denominator is diagnostic-only: one
-        // manifest walk per filtered (re)plan that production scans
-        // must not pay — computed only under the captureScans test flag
-        // (free when the scan was unfiltered: paths IS the live set)
-        val live =
-          if (staticCols.isEmpty && runtimeCols.isEmpty && limited.isEmpty)
-            paths.size
-          else if (TxLogV2.captureScans)
-            table.scanPathsAt(version, lit(true)).size
-          else -1
-        TxLogV2.lastScan = (paths.size, live)
-        val s = v2bridge.parquetScan(spark, paths, phys(logicalFull),
-          phys(logicalRead),
-          (if (cmap.isEmpty) staticV1.toSeq
-           else staticV1.toSeq.flatMap(TxLogV2.renameV1(_, physName)))
-            .toArray)
-        inner = Some(s)
-        s
+          if (pruned || !dvFree) None
+          else limit.flatMap(n => table.limitPaths(version, n.toLong))
+        val paths = limited.getOrElse(
+          files((staticCols ++ runtimeCols).reduceOption(_ && _)
+            .getOrElse(lit(true))))
+        // an unpruned scan's paths ARE the live set
+        TxLogV2.lastScan = (paths.size,
+          if (pruned || limited.isDefined)
+            TxLogV2.denominator(files(lit(true)).size)
+          else paths.size)
+        val (dvFiles, cleanFiles) =
+          if (dvFree) (Nil, paths)
+          else paths.partition(f => dvMap.contains(fileKey(f)))
+        val clean = v2bridge.parquetScan(spark, cleanFiles,
+          phys(logicalFull), phys(logicalRead), pushedPhys).toBatch
+        val out =
+          if (dvFree) (clean.planInputPartitions(), clean.createReaderFactory())
+          else withVectors(clean, dvFiles)
+        planned = Some(out)
+        out
     }
   }
 
+  /** A DV-bearing plan: the `clean` leg's partitions, then `dvFiles` as
+    * whole-file partitions that skip their deleted positions.
+    */
+  private def withVectors(clean: Batch, dvFiles: Seq[String])
+      : (Array[InputPartition], PartitionReaderFactory) = {
+    val dvLeg: Option[(Array[InputPartition], PartitionReaderFactory)] =
+      if (dvFiles.isEmpty) None
+      else {
+        val sc = v2bridge.parquetScan(spark, dvFiles,
+          phys(logicalFull), phys(logicalRead), Array.empty)
+        val parts = v2bridge.wholeFilePartitions(sc).map {
+          case (path, part) =>
+            TxLogDvInput(part, dvMap(fileKey(path))): InputPartition
+        }.toArray
+        Some((parts, sc.toBatch.createReaderFactory()))
+      }
+    (clean.planInputPartitions() ++
+      dvLeg.map(_._1).getOrElse(Array.empty[InputPartition]),
+      new TxLogDvSplitFactory(clean.createReaderFactory(),
+        dvLeg.map(_._2).orNull, columnarOk))
+  }
+
   override def planInputPartitions(): Array[InputPartition] =
-    innerScan().toBatch.planInputPartitions()
+    ensurePlanned()._1
 
   override def createReaderFactory(): PartitionReaderFactory =
-    innerScan().toBatch.createReaderFactory()
+    ensurePlanned()._2
 
   // ── runtime filtering (Spark-native dynamic file pruning) ─────────
 
@@ -1434,7 +1428,7 @@ final class TxLogBatchScan(spark: SparkSession, table: TxLogTable,
     if (converted.nonEmpty) {
       runtimeCols = converted
       TxLogV2.lastRuntimeFiltered = true
-      inner = None
+      planned = None
     }
   }
 
@@ -1443,10 +1437,11 @@ final class TxLogBatchScan(spark: SparkSession, table: TxLogTable,
   /** Exact row count + per-column min/max/nullCount/NDV from the
     * manifest skipping stats ([[TxLogTable.statsSummaryAt]] — present
     * only when every live file carries stats, exactness over
-    * coverage). Pushed filters are reported as post-scan Filter nodes,
-    * so Catalyst's FilterEstimation applies selectivity ON TOP of
-    * these unfiltered-snapshot numbers — the same shape the V1
-    * CBO-stats rule produced, now through the V2-native
+    * coverage); size only on a DV-bearing snapshot. Pushed filters are
+    * reported as post-scan Filter nodes, so Catalyst's
+    * FilterEstimation applies selectivity ON TOP of these
+    * unfiltered-snapshot numbers — the same shape the V1 CBO-stats
+    * rule produced, now through the V2-native
     * [[SupportsReportStatistics]] seam.
     */
   override def estimateStatistics(): Statistics = memoStats
@@ -1456,20 +1451,14 @@ final class TxLogBatchScan(spark: SparkSession, table: TxLogTable,
   private lazy val memoStats: Statistics = {
     val sizeBytes = math.max(1L, table.onDiskBytes(
       table.scanPathsAt(version, lit(true))))
-    val summary = table.statsSummaryAt(version)
-    def minMaxOk(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType | DateType | TimestampType | TimestampNTZType => true
-      case _: DecimalType => true
-      case _ => false
-    }
+    val summary = if (dvFree) table.statsSummaryAt(version) else None
     val colStats: java.util.Map[NamedReference, ColumnStatistics] =
       summary match {
         case None => java.util.Collections.emptyMap()
         case Some((_, ranges, ndvs)) =>
           logicalFull.fields.iterator.flatMap { f =>
             ranges.get(f.name).map { r =>
-              val mm = minMaxOk(f.dataType)
+              val mm = TxLogV2.minMaxOk(f.dataType)
               def cat(v: Option[String]): Optional[Object] =
                 if (!mm) Optional.empty()
                 else v.map(s => v2bridge
@@ -1496,151 +1485,6 @@ final class TxLogBatchScan(spark: SparkSession, table: TxLogTable,
       override def numRows(): OptionalLong = rowCount
       override def columnStats()
           : java.util.Map[NamedReference, ColumnStatistics] = colStats
-    }
-  }
-}
-
-/** The native Batch scan of a DV-bearing snapshot with SMALL vectors
-  * (under the [[TxLogScanBuilder.DefaultDvInlineBytes]] cap): clean
-  * files — the overwhelming majority of a 100 TB snapshot after a
-  * point delete — ride exactly the [[TxLogBatchScan]] machinery
-  * (vectorized parquet, split-aware, row-group pushdown), and files
-  * the vectors actually touch are planned as WHOLE-FILE partitions
-  * whose reader skips the deleted positions inline (each partition
-  * carries only ITS file's sorted positions — tasks never load the
-  * full vector set). Because this is a real `Batch`,
-  * [[SupportsRuntimeFiltering]] works: Spark's dynamic file pruning
-  * replans the file list mid-execution exactly as on a DV-free
-  * snapshot — the capability the V1-bridge join path cannot offer.
-  *
-  * Row-position correctness: the DV leg passes NO pushed filters (no
-  * row group or page is ever skipped) and reads each file as one
-  * unsplit partition, so the reader's running row count IS
-  * `_metadata.row_index` — the key the sidecars store. Exact
-  * predicates still apply above the scan (every pushed predicate is
-  * reported residual by design).
-  */
-final class TxLogDvAwareBatchScan(spark: SparkSession, table: TxLogTable,
-    version: Long, logicalFull: StructType, logicalRead: StructType,
-    staticCols: Seq[Column], staticV1: Array[Filter])
-    extends Scan with Batch with SupportsRuntimeFiltering
-    with SupportsReportStatistics {
-
-  private val cmap: Map[String, String] = table.colMapAt(version)
-  private def physName(n: String): String = cmap.getOrElse(n, n)
-  private def phys(sc: StructType): StructType =
-    if (cmap.isEmpty) sc
-    else StructType(sc.fields.map(f => f.copy(name = physName(f.name))))
-
-  @volatile private var runtimeCols: Seq[Column] = Nil
-  @volatile private var planned
-      : Option[(Array[InputPartition], PartitionReaderFactory)] = None
-
-  // one driver-side load per scan, reused across runtime-filter
-  // replans (positions don't change within a pinned snapshot)
-  private lazy val dvMap: Map[String, Array[Long]] =
-    table.loadDvMap(version)
-
-  /** BatchScanExec requires EVERY partition row-based or EVERY
-    * partition columnar, decided once at physical planning — so the
-    * scan is columnar iff no DV-touched file survives STATIC pruning
-    * (runtime filters only shrink that set, never grow it, keeping
-    * the decision consistent across replans). With DV files in play
-    * the whole scan reads row-based: still strictly better than the
-    * V1 bridge this path replaces (no Row conversion, no join, and
-    * runtime pruning works), and OPTIMIZE folds the vectors away back
-    * to the fully-vectorized plan.
-    */
-  private lazy val columnarOk: Boolean = {
-    val staticPred = staticCols.reduceOption(_ && _).getOrElse(lit(true))
-    !table.expandToFiles(table.scanPathsAt(version, staticPred))
-      .exists(f => dvMap.contains(fileKey(f)))
-  }
-
-  private def fileKey(path: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    s"${hp.getParent.getName}/${hp.getName}"
-  }
-
-  override def readSchema(): StructType = logicalRead
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"txlog v$version ${table.root} DV-inline " +
-      s"PushedFilters: ${staticV1.mkString("[", ", ", "]")}"
-
-  private def ensurePlanned()
-      : (Array[InputPartition], PartitionReaderFactory) = synchronized {
-    planned match {
-      case Some(x) => x
-      case None =>
-        val pred = (staticCols ++ runtimeCols)
-          .reduceOption(_ && _).getOrElse(lit(true))
-        val files = table.expandToFiles(table.scanPathsAt(version, pred))
-        val live =
-          if (staticCols.isEmpty && runtimeCols.isEmpty) files.size
-          else if (TxLogV2.captureScans)
-            table.expandToFiles(table.scanPathsAt(version, lit(true))).size
-          else -1
-        TxLogV2.lastScan = (files.size, live)
-        val (dvFiles, cleanFiles) =
-          files.partition(f => dvMap.contains(fileKey(f)))
-        val cleanScan = v2bridge.parquetScan(spark, cleanFiles,
-          phys(logicalFull), phys(logicalRead),
-          (if (cmap.isEmpty) staticV1.toSeq
-           else staticV1.toSeq.flatMap(TxLogV2.renameV1(_, physName)))
-            .toArray)
-        val cleanBatch = cleanScan.toBatch
-        val dvLeg: Option[(Array[InputPartition], PartitionReaderFactory)] =
-          if (dvFiles.isEmpty) None
-          else {
-            val sc = v2bridge.parquetScan(spark, dvFiles,
-              phys(logicalFull), phys(logicalRead), Array.empty)
-            val parts = v2bridge.wholeFilePartitions(sc).map {
-              case (path, part) =>
-                TxLogDvInput(part, dvMap(fileKey(path))): InputPartition
-            }.toArray
-            Some((parts, sc.toBatch.createReaderFactory()))
-          }
-        val parts = cleanBatch.planInputPartitions() ++
-          dvLeg.map(_._1).getOrElse(Array.empty[InputPartition])
-        val factory: PartitionReaderFactory = new TxLogDvSplitFactory(
-          cleanBatch.createReaderFactory(), dvLeg.map(_._2).orNull,
-          columnarOk)
-        val out = (parts, factory)
-        planned = Some(out)
-        out
-    }
-  }
-
-  override def planInputPartitions(): Array[InputPartition] =
-    ensurePlanned()._1
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    ensurePlanned()._2
-
-  override def filterAttributes(): Array[NamedReference] =
-    logicalRead.fieldNames.map(Expressions.column)
-
-  override def filter(filters: Array[Filter]): Unit = synchronized {
-    val converted = filters.toIndexedSeq.flatMap(TxLogRelation.toColumn)
-    if (converted.nonEmpty) {
-      runtimeCols = converted
-      TxLogV2.lastRuntimeFiltered = true
-      planned = None
-    }
-  }
-
-  /** Size only (rows would overcount the deleted positions; exactness
-    * over coverage) — enough for the broadcast-threshold decision the
-    * V1 bridge used to fly blind on.
-    */
-  override def estimateStatistics(): Statistics = memoStats
-  private lazy val memoStats: Statistics = {
-    val size = math.max(1L,
-      table.onDiskBytes(table.scanPathsAt(version, lit(true))))
-    new Statistics {
-      override def sizeInBytes(): OptionalLong = OptionalLong.of(size)
-      override def numRows(): OptionalLong = OptionalLong.empty()
     }
   }
 }
@@ -1679,7 +1523,7 @@ private[sources] final class TxLogDvSplitFactory(
 
 /** Skips the deleted positions of one whole, filter-free file scan:
   * the running row count equals `_metadata.row_index` by the
-  * [[TxLogDvAwareBatchScan]] planning contract.
+  * [[TxLogBatchScan]] planning contract.
   */
 private final class TxLogDvSkipReader(
     inner: PartitionReader[InternalRow], deleted: Array[Long])
@@ -1699,12 +1543,12 @@ private final class TxLogDvSkipReader(
 }
 
 /** BULK-vector fallback: snapshots whose live deletion vectors exceed
-  * the inline cap scan through the V1 bridge —
+  * Spark's broadcast threshold scan through the V1 bridge —
   * [[TxLogRelation.buildScan]] applies the DV anti-join as a
   * DISTRIBUTED join on (file, row position), the right plan when the
   * deleted-rows-sized side is too big to ship per task. Runtime file
   * filtering is not offered here (the V1 physical node has no replan
-  * seam); small vectors take [[TxLogDvAwareBatchScan]] instead, and
+  * seam); small vectors ride [[TxLogBatchScan]] instead, and
   * OPTIMIZE/checkpoint fold vectors away entirely.
   */
 final class TxLogDvScan(table: TxLogTable, version: Long,
@@ -1749,11 +1593,8 @@ final class TxLogHybridCensusScan(spark: SparkSession, table: TxLogTable,
     version: Long, logicalFull: StructType,
     census: TxLogScanBuilder.HybridCensus) extends Scan with Batch {
 
-  private val cmap: Map[String, String] = table.colMapAt(version)
-  private def physName(n: String): String = cmap.getOrElse(n, n)
   private def phys(sc: StructType): StructType =
-    if (cmap.isEmpty) sc
-    else StructType(sc.fields.map(f => f.copy(name = physName(f.name))))
+    TxLogV2.physical(table.colMapAt(version), sc)
 
   override def readSchema(): StructType = census.schema
   override def toBatch: Batch = this
@@ -1766,10 +1607,8 @@ final class TxLogHybridCensusScan(spark: SparkSession, table: TxLogTable,
       : (Array[InputPartition], PartitionReaderFactory) = {
     val stragBatch = v2bridge.parquetScan(spark, census.stragglers,
       phys(logicalFull), phys(census.srcSchema), Array.empty).toBatch
-    TxLogV2.lastScan = (census.stragglers.size,
-      if (TxLogV2.captureScans)
-        table.expandToFiles(table.scanPathsAt(version, lit(true))).size
-      else -1)
+    TxLogV2.lastScan = (census.stragglers.size, TxLogV2.denominator(
+      table.expandToFiles(table.scanPathsAt(version, lit(true))).size))
     val parts: Array[InputPartition] =
       (if (census.rows.isEmpty) Array.empty[InputPartition]
        else Array[InputPartition](

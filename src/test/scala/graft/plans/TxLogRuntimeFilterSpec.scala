@@ -133,8 +133,8 @@ class TxLogRuntimeFilterSpec extends SparkSpec {
       assert(q.count() == 100L)
       val plan = q.queryExecution.executedPlan.toString
       assert(plan.contains("Scan graft.sources.TxLogRelation"), plan)
-      assert(graft.sources.TxLogRelation.lastScan == (1, 10),
-        s"V1 lastScan=${graft.sources.TxLogRelation.lastScan}")
+      assert(TxLogV2.lastScan == (1, 10),
+        s"V1 lastScan=${TxLogV2.lastScan}")
       assert(q.agg(sum(col("payload"))).collect().head.getLong(0) ==
         (100L until 200L).map(_ * 7).sum)
     } finally spark.conf.unset("spark.sql.sources.useV1SourceList")
@@ -176,8 +176,8 @@ class TxLogRuntimeFilterSpec extends SparkSpec {
   test("bulk-vector DV snapshots fall back to the V1-bridge distributed anti-join") {
     val (root, t) = seedFact("rtf_dv")
     t.deleteVectored(col("k") % 100L === 5L) // 10 rows, one per file
-    // force the bulk path: an inline cap of zero bytes
-    spark.conf.set("spark.graft.txlog.dvInlineBytes", "0")
+    // force the bulk path: a broadcast threshold that ships nothing
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val viaV2 = spark.read.format("txlog").load(root)
       assert(viaV2.count() == 990L)
@@ -188,9 +188,9 @@ class TxLogRuntimeFilterSpec extends SparkSpec {
       assert(plan.contains("Scan graft.sources.TxLogDvScan"), plan)
       // pushed filters still prune the file list inside the bridge
       viaV2.filter(col("k") >= 900L).count()
-      assert(graft.sources.TxLogRelation.lastScan == (1, 10),
-        s"lastScan=${graft.sources.TxLogRelation.lastScan}")
-    } finally spark.conf.unset("spark.graft.txlog.dvInlineBytes")
+      assert(TxLogV2.lastScan == (1, 10),
+        s"lastScan=${TxLogV2.lastScan}")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     // OPTIMIZE folds the DVs away; scans return to the plain native Batch
     t.compactClustered(Seq("k"), numFiles = 4, statsCols = Seq("k"))
     val back = spark.read.format("txlog").load(root)

@@ -130,6 +130,13 @@ class TxLogReplaceWhereSpec extends SparkSpec {
     assert(feed.length === 20 && feed.forall(_ == ((0L, "delete"))))
     // time travel still serves the pre-delete snapshot
     assert(t.readAt(vBefore).count() === 60L)
+    // the empty batch published no data dir without a part file
+    assert(t.liveDataPaths(t.currentVersion).forall { p =>
+      val hp = new org.apache.hadoop.fs.Path(p)
+      val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+      !fs.getFileStatus(hp).isDirectory ||
+        fs.listStatus(hp).exists(_.getPath.getName.endsWith(".parquet"))
+    }, t.liveDataPaths(t.currentVersion))
   }
 
   test("CDC across replaceWhere: precise delete+insert feed") {

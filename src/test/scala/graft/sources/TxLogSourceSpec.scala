@@ -351,13 +351,20 @@ class TxLogSourceSpec extends SparkSpec {
     val prev = TxLogV2.captureScans
     try {
       TxLogV2.captureScans = false
-      val n = spark.read.format("txlog").load(root)
-        .filter(col("k") >= 100L && col("k") < 150L).count()
-      assert(n === 50L)
-      val (scanned, live) = TxLogV2.lastScan
-      assert(scanned === 1, s"pruning itself must still run, got $scanned")
-      assert(live === -1,
-        s"denominator walk must be test-gated, got $live")
+      // the V2 scan, then the V1 relation
+      Seq(None, Some("txlog")).foreach { v1 =>
+        v1.foreach(spark.conf.set("spark.sql.sources.useV1SourceList", _))
+        TxLogV2.lastScan = (0, 0)
+        try {
+          val n = spark.read.format("txlog").load(root)
+            .filter(col("k") >= 100L && col("k") < 150L).count()
+          assert(n === 50L)
+        } finally spark.conf.unset("spark.sql.sources.useV1SourceList")
+        val (scanned, live) = TxLogV2.lastScan
+        assert(scanned === 1, s"pruning itself must still run, got $scanned")
+        assert(live === -1,
+          s"denominator walk must be test-gated, got $live")
+      }
     } finally TxLogV2.captureScans = prev
   }
 
@@ -419,17 +426,9 @@ class TxLogSourceSpec extends SparkSpec {
       Seq(7L, 307L)))
     assert(TxLogV2.lastRuntimeFiltered)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.graft.txlog.dvInlineBytes", "0")
-    val bulkDv = try {
-      TxLogRelation.lastScan = (0, 0)
-      val jobs = jobsStartedBy {
-        assert(load(dvRoot).filter(col("k") >= 100L).count() === 147L)
-      }
-      (jobs, TxLogRelation.lastScan)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.graft.txlog.dvInlineBytes")
-    }
+    val bulkDv = try pin(assert(
+      load(dvRoot).filter(col("k") >= 100L).count() === 147L))
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
     // (0, 0): the read planned no file scan (a LocalTableScan)
     assert(Seq(plain, filtered, limited, ungrouped, emptyCount, grouped,
